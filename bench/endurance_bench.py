@@ -16,7 +16,7 @@ Usage: python bench/endurance_bench.py [n_epochs] [pages_per_epoch] [cpus]
 Writes BENCH/endurance_result.json; BENCH/BASELINE.md is curated by hand.
 
 Pass a 4th arg 'phases' to record per-phase wall (guard / dedup / extract /
-canon / commit / cache_extend) per epoch and the per-phase average — the
+canon / commit) per epoch and the per-phase average — the
 attribution of the per-epoch fixed-cost floor on small micro-batches
 (VERDICT r5 #4). Phase mode forces one extra facts count per epoch to pin
 the extract/canon boundary, so run it separately from the headline ratio.

@@ -4,7 +4,6 @@ Usage:
   python bench_extra.py t07_phases   # phase-level wall attribution for t07
   python bench_extra.py queries q07 q16 ...   # noop-sink min-of-2 per query
   python bench_extra.py plans        # dump .explain(formatted) for headline queries
-  python bench_extra.py kg_phases    # phase attribution for the KG pipeline
 
 Same session shape as bench.py (local[$SPARK_GRAFT_CPUS], 2*cpus shuffle
 partitions, warm worker pool), data dir from $SPARK_GRAFT_SF_DIR.
@@ -168,38 +167,6 @@ def plans(names):
         print(out)
 
 
-def kg_phases():
-    from pyspark.sql import functions as F
-
-    from kgx import canon, extract, pipeline
-
-    spark = get_session()
-    _ensure_pages_fixture = _load_bench_py()._ensure_pages_fixture
-
-    pages_path = _ensure_pages_fixture(int(os.environ.get("KGX_BENCH_PAGES", "4000")))
-    pages = spark.read.parquet(pages_path)
-    for p in range(2):
-        print(f"pass {p}: kg phases")
-        t_all = time.perf_counter()
-        validated = timed(
-            "extract_facts_fused + validate (persist)",
-            lambda: pipeline.extract_stage(spark, pages),
-        )
-        timed("facts materialize (count)", lambda: validated.count())
-        props = validated.filter(F.col("pred") == "project_proponents")
-        mentions = props.select(F.explode("surfaces").alias("surface"))
-        mapping = timed(
-            "canonical_mapping (+localCheckpoint)",
-            lambda: canon.canonical_mapping(mentions).localCheckpoint(),
-        )
-        final = pipeline.canonicalize_proponents(validated, mapping)
-        triples = pipeline._to_triples(final)
-        timed("rewrite + to_triples count", lambda: triples.count())
-        print(f"  {'TOTAL':42s} {time.perf_counter() - t_all:7.3f} s")
-        validated.unpersist()
-        spark.catalog.clearCache()
-
-
 if __name__ == "__main__":
     cmd = sys.argv[1] if len(sys.argv) > 1 else "t07_phases"
     if cmd == "t07_phases":
@@ -208,5 +175,3 @@ if __name__ == "__main__":
         queries(sys.argv[2:])
     elif cmd == "plans":
         plans(sys.argv[2:] or _load_bench_py().HEADLINE)
-    elif cmd == "kg_phases":
-        kg_phases()

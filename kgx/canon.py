@@ -28,6 +28,8 @@ scale path mandated by BASELINE.json:north_rule:
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -42,6 +44,24 @@ JACCARD_THRESHOLD = 0.4
 # of executor task memory).
 BROADCAST_PAYLOAD_MAX_ROWS = 2_000_000
 BROADCAST_PAYLOAD_MAX_BYTES = 256 * 1024 * 1024
+
+
+@dataclass(frozen=True)
+class CanonicalMapping:
+    """canonical_mapping's result: the (surface, rep) frame, plus the same
+    rows as driver-side tuples when the driver path built them (``rows`` is
+    None on the distributed path). Consumers holding ``rows`` skip the
+    localCheckpoint pin, the executor-side size probe and the collect, all
+    pure latency for a dictionary that already lives on the driver. Carried
+    as a value, not as an attribute on the DataFrame, which any
+    ``.select()`` would silently drop."""
+
+    df: DataFrame
+    rows: list[tuple[str, str]] | None = None
+
+    def count(self) -> int:
+        """Mapping row count; free when the rows are driver-side."""
+        return len(self.rows) if self.rows is not None else self.df.count()
 
 
 def banding_recall(j: float, n_bands: int, rows_per_band: int) -> float:
@@ -701,14 +721,9 @@ def _driver_canonical_mapping(spark, surfaces, known, shingle, threshold):
         cands = [m for m in members if m in known_reps] or members
         rep = min(cands, key=lambda v: (kernel.normalize_surface(v), v))
         rows.extend((m, rep) for m in members)
-    df = spark.createDataFrame(rows, "surface string, rep string")
-    # the mapping rows already live on the driver — expose them so consumers
-    # (canonicalize_proponents, run_checkpointed) can skip the localCheckpoint
-    # pin and the distributed size probe, which are pure latency here
-    # (round 7; createDataFrame yields a LogicalRDD, so plan-level isLocal()
-    # cannot express this)
-    df._kgx_driver_rows = rows
-    return df
+    return CanonicalMapping(
+        spark.createDataFrame(rows, "surface string, rep string"), rows
+    )
 
 
 def connected_components(
@@ -969,7 +984,7 @@ def canonical_mapping(
     shingle: str = "char",
     bucket_cap: int | None = None,
     n_bands: int = N_BANDS,
-) -> DataFrame:
+) -> CanonicalMapping:
     """mentions(surface,...) -> (surface, rep): representative per component.
 
     rep = surface of the min (norm, surface) struct in the component — struct
@@ -980,6 +995,8 @@ def canonical_mapping(
     the node set, known groupings are injected as edges, and a component that
     contains previously-assigned reps keeps the smallest of them, so triples
     committed in earlier runs stay consistent with new ones.
+
+    Returns a CanonicalMapping; its ``rows`` are set only on the driver path.
     """
     nodes = mentions.select("surface").distinct()
     if known is not None:
@@ -1039,4 +1056,4 @@ def canonical_mapping(
             reps.join(sticky, "component", "left")
             .select("component", F.coalesce("krep", "rep").alias("rep"))
         )
-    return with_norm.join(reps, "component").select("surface", "rep")
+    return CanonicalMapping(with_norm.join(reps, "component").select("surface", "rep"))

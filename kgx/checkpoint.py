@@ -184,14 +184,19 @@ class TripleStore:
         self,
         triples: DataFrame,
         buckets: list[int],
-        metrics: dict,
         content: DataFrame | None = None,
         epoch: int | None = None,
         stream_id: str | None = None,
     ) -> str:
-        """Atomically materialize one commit unit: data rename, content-sha
-        sidecar, then manifest (the manifest is the commit point; anything
-        before it is invisible garbage on a crash).
+        """Atomically materialize one commit unit: data rename, violation
+        counters, content-sha sidecar, then manifest (the manifest is the
+        commit point; anything before it is invisible garbage on a crash).
+
+        The manifest's ``metrics`` (per-pred rows and structured-output
+        violations, kgx.extract.violation_metrics) are counted from the
+        unit's written files, not from ``triples``: ``triples`` is executed
+        once, by the data write, and the counters cost one scan of a
+        unit-sized parquet. A zero-triple unit records ``{}``.
 
         ``content``: optional DataFrame with a ``content_sha`` column listing
         EVERY content hash processed into this unit — pass it when some inputs
@@ -229,6 +234,11 @@ class TripleStore:
             .parquet(tmp_dir)
         )
         os.rename(tmp_dir, final_dir)  # atomic on one FS; Iceberg commit stand-in
+        from kgx.extract import violation_metrics
+
+        metrics = violation_metrics(
+            self._read_units(triples.sparkSession, [unit_id])
+        )
         self._write_content_sidecar(
             unit_id, content if content is not None else triples
         )

@@ -132,13 +132,15 @@ def extract_facts_fused(pages: DataFrame) -> DataFrame:
     partitions than cores and would run this CPU-bound pass nearly serially —
     exactly what a 4000-page single-row-group bench corpus did (4.9s -> 6.8s
     end-to-end). When the scan yields fewer partitions than the session
-    parallelism (the threshold was cores//2 until round 6, which left e.g. a
-    5-partition batch running the kernel on 5 of 8 cores — measured 1.4x on
-    a 20k-page single-file micro-batch), one round-robin shuffle of the
-    (url, warc_ts, html) projection buys full parallelism for the dominant
-    stage. At 100 TB inputs have ~10^5 splits and the guard never fires;
-    when it does fire the input layout was the bottleneck, not the
-    shuffle."""
+    parallelism, one round-robin shuffle of the (url, warc_ts, html)
+    projection (kgx.util.spread) buys full parallelism for the dominant
+    stage — one task per core, so the pass runs in ONE Python wave: a wave
+    costs about 0.3 s of fixed overhead on a 4-vCPU ``local[4]`` session
+    whatever the data size, and a 2x split doubled it for nothing on the
+    small streaming arrivals this guard fires for (120 pages: 0.76 s at 8
+    tasks, 0.48 s at 4). At 100 TB inputs have
+    ~10^5 splits and the guard never fires; when it does fire the input
+    layout was the bottleneck, not the shuffle."""
     from kgx.util import spread
 
     slim = spread(pages.select("url", "warc_ts", "html"))
@@ -207,34 +209,39 @@ def _validity_column():
     return valid_col
 
 
+def violation_metrics(triples: DataFrame) -> dict[str, dict[str, int]]:
+    """Per-pred ``{"rows", "violations"}`` counters over ``triples`` in one
+    aggregate (result-stage counts: exact by construction, never inflated by
+    map-stage retries). TripleStore.commit runs it over the unit it just
+    wrote, so the counters cost a scan of the unit's files instead of a
+    second execution of the plan that produced them. An empty frame yields
+    ``{}``."""
+    counts = (
+        triples.groupBy("pred")
+        .agg(
+            F.count("*").alias("n"),
+            F.sum(F.when(~_validity_column(), 1).otherwise(0)).alias("violations"),
+        )
+        .collect()
+    )
+    return {r["pred"]: {"rows": r["n"], "violations": r["violations"]} for r in counts}
+
+
 def validate_triples(triples: DataFrame) -> tuple[DataFrame, dict[str, int]]:
     """Structured-output constraint checks (SURVEY.md §1.2 'schema system').
 
     Parses each obj with its per-pred StructType via from_json and counts:
     - parse failures (obj not conforming to the declared schema),
     - required-field nulls (the JSON-Schema `required` mirror).
-    Returns (triples_with_valid_flag, violation_counters). On healthy input the
-    counters are zero; they are emitted with every snapshot commit.
+    Returns (triples_with_valid_flag, violation_counters); on healthy input
+    the counters are zero.
 
-    The metrics aggregation and the caller's later commit write are two
-    actions, so the flagged frame is localCheckpointed — without pinning,
-    the whole upstream chain would execute twice. A one-execution variant
-    that rode the counters on the commit write via the Observation API was
-    tried and REVERTED (round 6): Observation.get raises a JVM assertion on
-    an empty unit's write (AQE empty-relation propagation leaves no metrics
-    row — zero-fact units are supported input), and a CollectMetrics node
-    below the commit's repartition exchange is only at-least-once under
-    map-stage retries on a real cluster, silently inflating manifest
-    counters that compact() then merges forever. The eager groupBy runs in
-    a result stage: exact by construction."""
-    flagged = triples.withColumn("valid", _validity_column()).localCheckpoint()
-    counts = (
-        flagged.groupBy("pred")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.when(~F.col("valid"), 1).otherwise(0)).alias("violations"),
-        )
-        .collect()
-    )
-    metrics = {r["pred"]: {"rows": r["n"], "violations": r["violations"]} for r in counts}
-    return flagged, metrics
+    A standalone check: the counters run ``triples`` once and any action on
+    the flagged frame runs it again. Writers do not call it —
+    TripleStore.commit records the same counters (violation_metrics) from
+    the files of the unit it wrote, before the manifest publishes, so a
+    commit executes its plan once. (Riding the counters on the commit write
+    via the Observation API was tried and reverted in round 6: it raises on
+    an empty unit's write, and a CollectMetrics node below the commit's
+    exchange is only at-least-once under map-stage retries.)"""
+    return triples.withColumn("valid", _validity_column()), violation_metrics(triples)

@@ -159,14 +159,19 @@ def _rewrite_join(props: DataFrame, mapping: DataFrame) -> DataFrame:
     )
 
 
-def canonicalize_proponents(facts: DataFrame, mapping: DataFrame | None = None) -> DataFrame:
+def canonicalize_proponents(
+    facts: DataFrame, mapping: canon.CanonicalMapping | DataFrame | None = None
+) -> DataFrame:
     """Rewrite proponent org names to their canonical representative.
 
     ``mapping`` (surface -> rep) may be precomputed GLOBALLY across commit
     units — required for multi-unit runs, where a per-unit mapping would pick
     unit-local representatives and drift from the corpus-wide canonicalization
     (caught by verification: 2-unit run disagreed with the one-shot run on
-    ~2.6%% of proponent triples until the mapping was hoisted).
+    ~2.6%% of proponent triples until the mapping was hoisted). A plain
+    DataFrame is accepted; a CanonicalMapping carrying driver-side ``rows``
+    (canon.canonical_mapping's driver path, or the streaming epoch's staged
+    read-back) skips the size probe and the collect below.
 
     Two physical regimes, byte-equal output (asserted in tests):
 
@@ -184,30 +189,24 @@ def canonicalize_proponents(facts: DataFrame, mapping: DataFrame | None = None) 
     )
     if mapping is None:
         mentions = props.select(F.explode("surfaces").alias("surface"))
-        # localCheckpoint: the size probe and the chosen rewrite are separate
-        # actions that would otherwise each re-run the whole LSH+CC pipeline.
-        # A driver-built mapping carries its rows on the Python object
-        # (_kgx_driver_rows) — re-"computing" it is free, so the checkpoint
-        # job is pure latency and is skipped (round 7).
-        mapping = canon.canonical_mapping(mentions)
-        if getattr(mapping, "_kgx_driver_rows", None) is None:
-            mapping = mapping.localCheckpoint()
+        mapping = _pinned(canon.canonical_mapping(mentions))
+    elif isinstance(mapping, DataFrame):
+        mapping = canon.CanonicalMapping(mapping)
 
     # regime probe runs EXECUTOR-SIDE before any collect: a dictionary over
     # either budget must route to the join path WITHOUT first being pulled
     # onto the driver (see kgx.util.bounded_stats for the idiom's rationale).
-    # A driver-built mapping's rows are ALREADY driver-resident — collecting
-    # them is a no-op and the distributed probe would only add a job, so the
-    # budget check runs over the attached rows directly (round 7).
-    from kgx.util import bounded_stats
-
-    rows = getattr(mapping, "_kgx_driver_rows", None)
+    # Driver-side rows are measured in place: the distributed probe would
+    # only add a job.
+    rows = mapping.rows
     if rows is not None:
         nbytes = sum(len(s.encode()) + len(r.encode()) for s, r in rows)
         over = len(rows) > BROADCAST_MAPPING_MAX or nbytes > BROADCAST_MAPPING_MAX_BYTES
     else:
+        from kgx.util import bounded_stats
+
         stats = bounded_stats(
-            mapping,
+            mapping.df,
             BROADCAST_MAPPING_MAX,
             F.octet_length("surface") + F.octet_length("rep"),
         )
@@ -216,16 +215,26 @@ def canonicalize_proponents(facts: DataFrame, mapping: DataFrame | None = None) 
             or stats["nbytes"] > BROADCAST_MAPPING_MAX_BYTES
         )
     if over:
-        rewritten = _rewrite_join(props, mapping)
+        rewritten = _rewrite_join(props, mapping.df)
     else:
         if rows is None:
-            rows = [(r["surface"], r["rep"]) for r in mapping.collect()]
+            rows = [(r["surface"], r["rep"]) for r in mapping.df.collect()]
         mapping_dict = {s: rep for s, rep in rows if s != rep}
         bc = facts.sparkSession.sparkContext.broadcast(mapping_dict)
         rewritten = props.select(
             "url", "warc_ts", "content_sha", "pred", "obj"
         ).mapInPandas(_rewrite_gen(bc), schema=_REWRITE_SCHEMA)
     return others.unionByName(rewritten)
+
+
+def _pinned(mapping: canon.CanonicalMapping) -> canon.CanonicalMapping:
+    """localCheckpoint a distributed mapping: its consumers (size probe,
+    rewrite, entity save) are separate actions that would otherwise each
+    re-run the whole LSH+CC pipeline. A driver-built mapping is returned as
+    is — re-"computing" it is free, so the checkpoint job is pure latency."""
+    if mapping.rows is not None:
+        return mapping
+    return canon.CanonicalMapping(mapping.df.localCheckpoint())
 
 
 def extract_stage(
@@ -357,14 +366,11 @@ def run_checkpointed(
         )
         mentions = m if mentions is None else mentions.unionByName(m)
     known = store.known_entities(spark)
-    mapping = canon.canonical_mapping(mentions, known=known)
-    if getattr(mapping, "_kgx_driver_rows", None) is None:
-        # driver-built mappings need no pin (see canonicalize_proponents)
-        mapping = mapping.localCheckpoint()
+    mapping = _pinned(canon.canonical_mapping(mentions, known=known))
     # persist BEFORE commits: a run killed mid-phase-C resumes with the exact
     # same representative assignment (mapping is deterministic given its node
     # set, and the saved dictionary carries the full node set forward)
-    store.save_entities(mapping)
+    store.save_entities(mapping.df)
 
     # phase C: commit each staged unit with the shared mapping
     unit_ids = []
@@ -375,12 +381,12 @@ def run_checkpointed(
             store.consume_staged(s["key"])
             continue
         final = canonicalize_proponents(facts, mapping)
-        flagged, metrics = extract.validate_triples(_to_triples(final))
         # the content sidecar comes from the staged facts parquet — a pruned
-        # scan — rather than commit's triples-derived default (a second read
-        # of the flagged checkpoint)
+        # scan — rather than commit's triples-derived default (a second
+        # execution of the rewrite); commit counts the violation metrics
+        # from the files it wrote
         unit_ids.append(store.commit(
-            flagged.drop("valid"), s["buckets"], metrics,
+            _to_triples(final), s["buckets"],
             content=facts.select("content_sha"),
         ))
         store.consume_staged(s["key"])

@@ -27,8 +27,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kgx import canon, extract, pipeline
+from kgx import canon, pipeline
 from kgx.schema import PAGES
+from kgx.util import bounded_stats, content_sha_col, spread
 
 # entity-dictionary snapshots are folded into one dir past this count, so an
 # un-vacuumed long-running stream holds O(1) dirs, not O(epochs)
@@ -62,30 +63,35 @@ class _EpochCaches:
     sidecars / entity dirs on every epoch (round-4 review: the per-epoch
     probe was metadata-sized but still O(units) forever).
 
-    The content cache is re-based from the sidecars every REBASE_EVERY
-    PROBES (not extensions — a stream whose batches fully dedup commits
-    nothing and would never extend, leaving victim-sidecar references from a
-    pre-run compact() alive for the whole run; probe-count rebasing bounds
-    that window to REBASE_EVERY epochs, review r6), which also bounds the
-    union-chain lineage depth. Fault posture: each
-    extension's leaf is a parquet READ of the unit's just-committed content
-    sidecar (TripleStore._write_content_sidecar publishes it before the
-    manifest, so by commit time it always exists) — exactly the rows the
-    epoch computed, but durable, so a lost executor recomputes the leaf from
-    disk at task level instead of failing the stream query (the round-5
-    design used a non-replicated localCheckpoint leaf here, whose block loss
-    was only restart-recoverable). The persisted union on top is plain
-    persist: evicted/lost blocks rebuild from the sidecar reads.
+    The content cache is built lazily. The seed from the sidecars is
+    persisted but not counted: the epoch's dedup anti join materializes it.
+    A committed unit is only QUEUED (extend_content); the queue is folded
+    in at the next probe, so the last epoch of a run — for a one-file
+    arrival, its only epoch — pays no fold. The cache is re-based from the
+    sidecars every REBASE_EVERY PROBES (not extensions — a stream whose
+    batches fully dedup commits nothing and would never extend, leaving
+    victim-sidecar references from a pre-run compact() alive for the whole
+    run; probe-count rebasing bounds that window to REBASE_EVERY epochs,
+    review r6), which also bounds the union-chain lineage depth. Fault
+    posture: each extension's leaf is a parquet READ of the unit's
+    just-committed content sidecar (TripleStore._write_content_sidecar
+    publishes it before the manifest, so by commit time it always exists) —
+    exactly the rows the epoch computed, but durable, so a lost executor
+    recomputes the leaf from disk at task level instead of failing the
+    stream query. The persisted union on top is plain persist:
+    evicted/lost blocks rebuild from the sidecar reads.
 
     The ENTITY cache's leaf is likewise durable: each mapping-bearing epoch
     stages its mapping to the store's ``mapping_cache/`` scratch
     (TripleStore.stage_mapping — one execution of LSH+CC into parquet) and
-    the cache holds the read-back frame. Re-reading the entities-dir
-    snapshot instead would NOT be safe — save_entities' fold can delete the
-    dir it just wrote, and the folded union of snapshots is not a function
-    (one rep per surface) — hence the dedicated scratch. Net: every frame
-    this cache holds across epochs recomputes from disk on block loss; no
-    cross-epoch state lives only in executor memory."""
+    the cache holds the read-back frame, together with the mapping's
+    driver-side rows when the driver path built it (``entity_rows``).
+    Re-reading the entities-dir snapshot instead would NOT be safe —
+    save_entities' fold can delete the dir it just wrote, and the folded
+    union of snapshots is not a function (one rep per surface) — hence the
+    dedicated scratch. Net: every frame this cache holds across epochs
+    recomputes from disk on block loss; no cross-epoch state lives only in
+    executor memory."""
 
     REBASE_EVERY = 32
 
@@ -93,51 +99,60 @@ class _EpochCaches:
         self._content: DataFrame | None = None
         self._content_loaded = False
         self._content_probes = 0
+        self._pending_units: list[str] = []
         self.entities: DataFrame | None = None
+        self.entity_rows: list[tuple[str, str]] | None = None
         self._entities_loaded = False
         # True only when `entities` is a mapping THIS run computed (one rep
         # per surface); the store-seeded union of snapshots may not be
         self.entities_canonical = False
 
-    def _swap_content(self, df: DataFrame | None) -> None:
+    def _swap_content(self, df: DataFrame | None, materialize: bool = False) -> None:
         from pyspark import StorageLevel
 
         old = self._content
         if df is not None:
             df = df.persist(StorageLevel.MEMORY_AND_DISK)
-            df.count()  # materialize BEFORE dropping the cache it derives from
+            if materialize:
+                df.count()  # build from the cache it derives from BEFORE dropping it
         self._content = df
         if old is not None:
             old.unpersist()
 
     def known_content(self, spark: SparkSession, store) -> DataFrame | None:
         if not self._content_loaded or self._content_probes >= self.REBASE_EVERY:
+            # the store's sidecars already hold every queued unit
             self._swap_content(store.known_content(spark))
+            self._pending_units = []
             self._content_loaded = True
             self._content_probes = 0
-        else:
-            self._content_probes += 1
+            return self._content
+        self._content_probes += 1
+        if self._pending_units:
+            # explicit schema: a unit whose pages all yielded zero distinct
+            # shas writes an empty sidecar, and empty parquet dirs defeat
+            # schema inference
+            slim = spark.read.schema("content_sha string").parquet(*[
+                os.path.join(store.content_dir, f"unit={u}")
+                for u in self._pending_units
+            ])
+            self._pending_units = []
+            if self._content is None:
+                self._swap_content(slim)
+            else:
+                self._swap_content(self._content.unionByName(slim), materialize=True)
         return self._content
 
-    def extend_content(self, spark: SparkSession, store, unit_id: str) -> None:
-        """Fold one committed unit's shas into the cache by reading the
-        unit's durable content sidecar (called only after the commit lands,
-        so the cache never claims uncommitted content). Reading the sidecar
-        rather than re-using the epoch's in-memory sha frame both (a) makes
-        the leaf task-level recoverable — the parquet survives executor
-        loss — and (b) drops the last reference to the epoch's
-        localCheckpointed full-page frame, releasing its html payloads for
-        cleanup when the epoch ends. Explicit schema: a unit whose pages all
-        yielded zero distinct shas writes an empty sidecar, and empty parquet
-        dirs defeat schema inference."""
-        slim = spark.read.schema("content_sha string").parquet(
-            os.path.join(store.content_dir, f"unit={unit_id}")
-        )
-        if self._content is None:
-            self._swap_content(slim)
-        else:
-            self._swap_content(self._content.unionByName(slim))
-        self._content_loaded = True
+    def extend_content(self, unit_id: str) -> None:
+        """Queue one committed unit's shas for the next probe (called only
+        after the commit lands, so the cache never claims uncommitted
+        content). The fold reads the unit's durable content sidecar rather
+        than re-using the epoch's in-memory sha frame: the leaf is then
+        task-level recoverable — the parquet survives executor loss — and
+        the cache holds no reference to the epoch's localCheckpointed
+        full-page frame, whose html payloads are released when the epoch
+        ends."""
+        self._pending_units.append(unit_id)
 
     def known_entities(self, spark: SparkSession, store) -> DataFrame | None:
         if not self._entities_loaded:
@@ -145,7 +160,7 @@ class _EpochCaches:
             self._entities_loaded = True
         return self.entities
 
-    def set_entities(self, mapping: DataFrame) -> None:
+    def set_entities(self, mapping: canon.CanonicalMapping) -> None:
         """The epoch's freshly-computed mapping supersedes the cache whole:
         canonical_mapping(known=...) carries every known surface AND rep into
         its node set, so its output is a superset of the prior dictionary.
@@ -161,7 +176,8 @@ class _EpochCaches:
         from pyspark import StorageLevel
 
         old = self.entities
-        self.entities = mapping.persist(StorageLevel.MEMORY_AND_DISK)
+        self.entities = mapping.df.persist(StorageLevel.MEMORY_AND_DISK)
+        self.entity_rows = mapping.rows
         self._entities_loaded = True
         self.entities_canonical = True
         if old is not None:
@@ -175,9 +191,11 @@ class _EpochCaches:
         self._swap_content(None)
         self._content_loaded = False
         self._content_probes = 0
+        self._pending_units = []
         if self.entities is not None:
             self.entities.unpersist()
         self.entities = None
+        self.entity_rows = None
         self._entities_loaded = False
         self.entities_canonical = False
 
@@ -312,7 +330,7 @@ def _process_epoch(
     test/replay path).
 
     ``timings`` (optional): a dict this call fills with per-phase wall
-    seconds — guard / dedup / extract / canon / commit / cache_extend —
+    seconds — guard / dedup / extract / canon / commit —
     attributing the per-epoch fixed cost (bench/endurance_bench.py --phases).
     Diagnostics-only caveat: the 'extract' phase forces a count() on the
     persisted facts frame to separate kernel cost from canonicalization;
@@ -337,12 +355,7 @@ def _process_epoch(
     if dedup_content:
         from pyspark.sql import Window
 
-        keyed = batch_df.withColumn(
-            "content_sha",
-            # coalesce: null html (failed fetch) hashes as empty content
-            # rather than a null key that anti-joins can never match
-            F.sha2(F.coalesce(F.col("html"), F.lit(b"")), 256),
-        )
+        keyed = batch_df.withColumn("content_sha", content_sha_col())
         # deterministic within-batch keep: ONE row per distinct content,
         # the min-url copy. row_number, not url == min(url): exact
         # duplicate (url, content) rows would all satisfy the equality
@@ -375,15 +388,11 @@ def _process_epoch(
         # the batch; cheaper than the old default (commit re-executed the
         # canonicalize+validate plan just to list the triples' shas) and,
         # unlike it, complete.
-        from kgx.util import spread
-
         # spread first: the sha2 runs in the scan stage at source
         # parallelism, and a one-file micro-batch would hash every html
         # byte near-serially per epoch (same guard the kernels use)
         batch_shas = spread(batch_df.select("html")).select(
-            F.sha2(F.coalesce(F.col("html"), F.lit(b"")), 256).alias(
-                "content_sha"
-            )
+            content_sha_col().alias("content_sha")
         )
     t = _mark("dedup", t)
     facts = pipeline.extract_stage(spark, batch_df)
@@ -404,8 +413,8 @@ def _finish_epoch(
     spark, store, facts, batch_shas, epoch_id, stream_id, caches, timings,
     _mark, t, extend_cache: bool = True,
 ) -> str:
-    """Post-extraction half of one epoch: canonicalize -> validate ->
-    commit -> cache maintenance (split out so _process_epoch can release
+    """Post-extraction half of one epoch: canonicalize -> commit (which
+    validates) -> cache maintenance (split out so _process_epoch can release
     the epoch's facts cache in one finally)."""
     if timings is not None:
         facts.count()  # materialize the persisted facts inside this phase
@@ -448,8 +457,6 @@ def _finish_epoch(
         # deterministically released, so epochs leave no one-use blocks.
         from pyspark import StorageLevel
 
-        from kgx.util import bounded_stats
-
         m = mentions.distinct().persist(StorageLevel.MEMORY_AND_DISK)
         try:
             stats = bounded_stats(
@@ -467,7 +474,7 @@ def _finish_epoch(
         finally:
             m.unpersist()
     if skip:
-        mapping = known
+        mapping = canon.CanonicalMapping(known, caches.entity_rows)
     else:
         # durable leaf (round 6): the mapping is written ONCE to the store's
         # run-scoped scratch (one execution of LSH+CC) and read back as
@@ -475,28 +482,30 @@ def _finish_epoch(
         # task-level recoverable, where the round-5 localCheckpoint died
         # with its executor. The entity snapshot then ADOPTS the staged
         # files by hardlink (no second Spark write of the same dictionary).
-        staged = store.stage_mapping(
-            canon.canonical_mapping(mentions, known=known),
-            stream_id or "run", epoch_id,
+        # A driver-built mapping's rows ride along with the read-back, so
+        # the rewrite needs no size probe and no collect.
+        computed = canon.canonical_mapping(mentions, known=known)
+        staged = store.stage_mapping(computed.df, stream_id or "run", epoch_id)
+        mapping = canon.CanonicalMapping(
+            spark.read.schema("surface string, rep string").parquet(staged),
+            computed.rows,
         )
-        mapping = spark.read.schema("surface string, rep string").parquet(staged)
         store.adopt_entities(spark, staged, fold_max_dirs=ENTITY_FOLD_MAX_DIRS)
         if caches is not None:
             caches.set_entities(mapping)
     t = _mark("canon", t)
-    final = pipeline.canonicalize_proponents(facts, mapping)
-    flagged, metrics = extract.validate_triples(pipeline._to_triples(final))
+    # one execution of the rewrite: the commit's write runs it, and the
+    # commit counts the violation metrics from the files it wrote
     unit = store.commit(
-        flagged.drop("valid"), buckets=[], metrics=metrics,
-        content=batch_shas, epoch=epoch_id, stream_id=stream_id,
+        pipeline._to_triples(pipeline.canonicalize_proponents(facts, mapping)),
+        buckets=[], content=batch_shas, epoch=epoch_id, stream_id=stream_id,
     )
-    t = _mark("commit", t)
+    _mark("commit", t)
     if caches is not None and extend_cache:
         # only a dedup_content run probes the content cache; a non-dedup run
-        # still WRITES complete sidecars (above) but extending an unread
-        # cache would be a wasted sidecar read per epoch
-        caches.extend_content(spark, store, unit)
-    _mark("cache_extend", t)
+        # still WRITES complete sidecars (above) but queueing for an unread
+        # cache would only grow the queue
+        caches.extend_content(unit)
     return unit
 
 
@@ -532,7 +541,9 @@ def first_seen_by_content(
     watermark_delay: str = "10 minutes",
 ) -> DataFrame:
     """Custom stateful streaming operator (applyInPandasWithState): emit each
-    distinct page content once, keyed by sha2(html) — the streaming form of
+    distinct page content once, keyed by its content sha
+    (kgx.util.content_sha_col: null html hashes as empty content, as in
+    ingest dedup and the extraction kernel) — the streaming form of
     the reference's content-hash cache (initial_pipeline/app.py:70-81).
 
     Retention policy (state-size bound at web scale):
@@ -619,7 +630,7 @@ def first_seen_by_content(
         else:
             yield empty
 
-    keyed = stream.withColumn("content_sha", F.sha2(F.col("html"), 256))
+    keyed = stream.withColumn("content_sha", content_sha_col())
     if ttl is not None:
         keyed = keyed.withWatermark("warc_ts", watermark_delay)
     return keyed.groupBy("content_sha").applyInPandasWithState(

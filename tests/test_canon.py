@@ -55,8 +55,11 @@ def test_canonical_mapping_matches_golden(spark):
     pages = fixtures.gen_pages(200)
     gold = {e["surface"]: e["canonical"] for e in fixtures.golden_entities(pages)}
     mentions = spark.createDataFrame([(s,) for s in gold], "surface string")
-    got = {r.surface: r.rep for r in canon.canonical_mapping(mentions).collect()}
+    m = canon.canonical_mapping(mentions)
+    got = {r.surface: r.rep for r in m.df.collect()}
     assert got == gold
+    # the driver path carries the same rows driver-side
+    assert dict(m.rows) == gold and len(m.rows) == m.count()
 
 
 def test_canonical_mapping_distributed_matches_golden(spark, monkeypatch):
@@ -65,7 +68,9 @@ def test_canonical_mapping_distributed_matches_golden(spark, monkeypatch):
     pages = fixtures.gen_pages(200)
     gold = {e["surface"]: e["canonical"] for e in fixtures.golden_entities(pages)}
     mentions = spark.createDataFrame([(s,) for s in gold], "surface string")
-    got = {r.surface: r.rep for r in canon.canonical_mapping(mentions).collect()}
+    m = canon.canonical_mapping(mentions)
+    assert m.rows is None
+    got = {r.surface: r.rep for r in m.df.collect()}
     assert got == gold
 
 

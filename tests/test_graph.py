@@ -507,18 +507,15 @@ def test_incremental_degree_over_store_units(spark, tmp_path):
     store read."""
     import pandas as pd
 
-    from kgx import extract, fixtures, pipeline
+    from kgx import fixtures, pipeline
     from kgx.checkpoint import TripleStore
 
     store = TripleStore(str(tmp_path / "deg_store"), n_buckets=2)
     view = None
     for lo, hi, bucket in ((0, 15, 0), (15, 30, 1)):
         pages = spark.createDataFrame(pd.DataFrame(fixtures.gen_pages(30)[lo:hi]))
-        flagged, metrics = extract.validate_triples(
-            pipeline.build_triples(spark, pages)
-        )
-        unit = flagged.drop("valid").localCheckpoint()
-        store.commit(unit, buckets=[bucket], metrics=metrics)
+        unit = pipeline.build_triples(spark, pages).localCheckpoint()
+        store.commit(unit, buckets=[bucket])
         view = graph.merge_degree_view(view, graph.degree_delta(unit))
     full = graph.merge_degree_view(
         None, graph.degree_delta(store.read(spark).select("subj", "pred", "obj"))

@@ -221,21 +221,72 @@ def test_commit_accepts_zero_triple_unit(spark, tmp_path):
     input (its content hashes still register). Pinned because a round-6
     attempt to ride the violation counters on the commit write via the
     Observation API crashed exactly here (AQE empty-relation propagation
-    leaves no observed-metrics row) and was reverted."""
+    leaves no observed-metrics row) and was reverted; commit now counts
+    them from the unit's (empty) written files."""
     from kgx.checkpoint import TripleStore
     from kgx.schema import TRIPLES
 
     empty = spark.createDataFrame([], TRIPLES)
-    flagged, metrics = extract.validate_triples(empty)
-    assert metrics == {}
+    assert extract.validate_triples(empty)[1] == {}
     store = TripleStore(str(tmp_path / "zt"), n_buckets=2)
     sha = spark.createDataFrame([("a" * 64,)], "content_sha string")
-    unit = store.commit(flagged.drop("valid"), buckets=[0], metrics=metrics,
-                        content=sha)
-    assert unit in {m["unit"] for m in store.manifests()}
+    unit = store.commit(empty, buckets=[0], content=sha)
+    (manifest,) = [m for m in store.manifests() if m["unit"] == unit]
+    assert manifest["metrics"] == {}
     assert store.read(spark).count() == 0
     assert {r.content_sha for r in store.known_content(spark).collect()} \
         == {"a" * 64}
+
+
+def _metrics(rows: dict, bad_pred: str) -> dict:
+    return {p: {"rows": n, "violations": int(p == bad_pred)} for p, n in rows.items()}
+
+
+EXPECTED_PROPONENT_UNIT_METRICS = _metrics(
+    {"crediting_period": 5, "ghg_emission_reductions": 5, "methodology": 5,
+     "project_location": 4, "project_proponents": 5, "sector": 4},
+    "project_proponents",
+)
+EXPECTED_SECTOR_UNIT_METRICS = _metrics(
+    {"crediting_period": 6, "ghg_emission_reductions": 6, "methodology": 6,
+     "project_location": 6, "project_proponents": 6, "sector": 5},
+    "sector",
+)
+
+
+def test_commit_counts_violations_from_written_unit(spark, tmp_path):
+    """commit counts the manifest's violation counters from the files it
+    wrote. One unit carries a project_proponents obj whose second proponent
+    lacks organization_name, the other a sector outside the two-label
+    domain; the expected dicts are what validate_triples reported for the
+    same frames when it still counted them before the commit."""
+    from kgx.checkpoint import TripleStore
+    from kgx.schema import TRIPLES
+
+    pages = fixtures.gen_pages(12)
+
+    def unit_frame(lo, hi, pred, obj):
+        bad = spark.createDataFrame(
+            [("proj:bad", pred, obj, "https://bad.example/proj/bad", None, None)],
+            TRIPLES,
+        )
+        tri = pipeline.build_triples(
+            spark, spark.createDataFrame(pd.DataFrame(pages[lo:hi]))
+        )
+        return tri.unionByName(bad)
+
+    units = [
+        unit_frame(0, 6, "project_proponents",
+                   '[{"organization_name":"Acme"},{"city":"Lima"}]'),
+        unit_frame(6, 12, "sector", '"Mining"'),
+    ]
+    want = [EXPECTED_PROPONENT_UNIT_METRICS, EXPECTED_SECTOR_UNIT_METRICS]
+    store = TripleStore(str(tmp_path / "viol"), n_buckets=2)
+    for bucket, (frame, expected) in enumerate(zip(units, want)):
+        assert extract.validate_triples(frame)[1] == expected
+        unit = store.commit(frame, buckets=[bucket])
+        (manifest,) = [m for m in store.manifests() if m["unit"] == unit]
+        assert manifest["metrics"] == expected
 
 
 def test_subj_col_matches_kernel(spark):
@@ -264,7 +315,8 @@ def test_fixture_row_groups_split_for_scan(tmp_path):
 
 def test_fused_extract_guards_unsplittable_input(spark, tmp_path):
     """An input that arrives as fewer partitions than cores (giant row groups,
-    one fat file) must be repartitioned before the CPU-bound Arrow pass."""
+    one fat file) must be repartitioned before the CPU-bound Arrow pass — to
+    one task per core, so the pass runs in one Python wave."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -282,7 +334,7 @@ def test_fused_extract_guards_unsplittable_input(spark, tmp_path):
     assert pages.rdd.getNumPartitions() == 1
     cores = spark.sparkContext.defaultParallelism
     out = extract.extract_facts_fused(pages)
-    assert out.rdd.getNumPartitions() >= max(2, cores // 2)
+    assert out.rdd.getNumPartitions() == cores
 
 
 def test_join_rewrite_edge_shapes(spark, monkeypatch):

@@ -196,15 +196,12 @@ def test_store_read_prunes_pred_partitions(spark, tmp_path):
     partition-prune."""
     import pandas as pd
 
-    from kgx import extract, fixtures, pipeline
+    from kgx import fixtures, pipeline
     from kgx.checkpoint import TripleStore
 
     pages = spark.createDataFrame(pd.DataFrame(fixtures.gen_pages(20)))
-    flagged, metrics = extract.validate_triples(
-        pipeline.build_triples(spark, pages)
-    )
     store = TripleStore(str(tmp_path / "prune_store"), n_buckets=2)
-    store.commit(flagged.drop("valid"), buckets=[0], metrics=metrics)
+    store.commit(pipeline.build_triples(spark, pages), buckets=[0])
 
     df = store.read(spark).filter(F.col("pred") == "methodology")
     plan = _plan(df)

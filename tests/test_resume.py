@@ -179,7 +179,7 @@ def test_commit_seq_monotonic_not_len(spark, small_pages, tmp_path):
     store.compact(spark)
     # a fresh commit after compaction: seq continues, never collides
     tri = pipeline.build_triples(spark, small_pages.limit(5))
-    store.commit(tri, buckets=[], metrics={})
+    store.commit(tri, buckets=[])
     seqs = [m["seq"] for m in store.manifests()]
     assert len(seqs) == len(set(seqs))
     assert max(seqs) == seq_before + 1
@@ -259,7 +259,7 @@ def test_manifest_cache_memoizes_and_invalidates(spark, small_pages, tmp_path):
 
     store = TripleStore(str(tmp_path / "mc"), n_buckets=4)
     tri = pipeline.build_triples(spark, small_pages.limit(5))
-    store.commit(tri, buckets=[0], metrics={})
+    store.commit(tri, buckets=[0])
     first = store.manifests()
     assert len(first) == 1
 
@@ -274,7 +274,7 @@ def test_manifest_cache_memoizes_and_invalidates(spark, small_pages, tmp_path):
     assert store.manifests() == first
 
     # a new commit changes the name set -> cache busts, new unit visible
-    store.commit(tri, buckets=[1], metrics={})
+    store.commit(tri, buckets=[1])
     after = store.manifests()
     assert len(after) == 2
     # callers get copies: mutating a returned list never poisons the cache
@@ -317,8 +317,8 @@ def test_known_content_mixed_legacy_and_sidecar_units(spark, small_pages, tmp_pa
     store = TripleStore(str(tmp_path / "mix"), n_buckets=4)
     tri = pipeline.build_triples(spark, small_pages)
     half = small_pages.limit(20)
-    store.commit(pipeline.build_triples(spark, half), buckets=[0], metrics={})
-    store.commit(tri, buckets=[1], metrics={})
+    store.commit(pipeline.build_triples(spark, half), buckets=[0])
+    store.commit(tri, buckets=[1])
 
     # doctor the FIRST manifest into a legacy manifest + drop its sidecar
     ms = sorted(store.manifests(), key=lambda m: m["seq"])
@@ -358,7 +358,7 @@ def test_empty_unit_commit_reads_back(spark, tmp_path):
     store = TripleStore(str(tmp_path / "empty"), n_buckets=2)
     empty = spark.createDataFrame([], TRIPLES)
     shas = spark.createDataFrame([("a" * 64,)], "content_sha string")
-    unit = store.commit(empty, buckets=[0], metrics={}, content=shas)
+    unit = store.commit(empty, buckets=[0], content=shas)
     assert store.read(spark).count() == 0
     assert store.read_as_of(spark, unit).count() == 0
     assert set(store.read(spark).columns) == set(TRIPLES.fieldNames())

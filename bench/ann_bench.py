@@ -93,13 +93,13 @@ def sweep() -> None:
     points = []
     for kc in (8, 16, 32):
         t0 = time.perf_counter()
-        cents, cells = S.ivf_build(c, k_cells=kc)
+        index = S.ivf_build(c, k_cells=kc)
         build_sec = round(time.perf_counter() - t0, 2)
         for n_probe in (1, 2, 4, 8):
             if n_probe > kc:
                 continue
             t0 = time.perf_counter()
-            rows = S.ivf_query(q, cents, cells, n_probe=n_probe).collect()
+            rows = S.ivf_query(q, index, n_probe=n_probe).collect()
             qsec = round(time.perf_counter() - t0, 2)
             got: dict[int, set] = {}
             for r in rows:
@@ -153,11 +153,11 @@ def main() -> None:
     # build-once / query-many: train outside the timer, query amortized
     q, c = S._split(spark, sf_dir)
     t0 = time.perf_counter()
-    cents, cells = S.ivf_build(c)
+    index = S.ivf_build(c)
     build_sec = round(time.perf_counter() - t0, 2)
 
     def _query_only(spark_, sf_):
-        return S.ivf_query(q, cents, cells)
+        return S.ivf_query(q, index)
 
     run("s04_ivf_query", _query_only)
     results["s04_ivf_query"]["build_sec"] = build_sec

@@ -653,8 +653,14 @@ def verified_edges(pairs: DataFrame, threshold: float = JACCARD_THRESHOLD) -> Da
     )
 
 
-DRIVER_CC_MAX_EDGES = 2_000_000  # row threshold for the union-find fast path
-DRIVER_CC_MAX_BYTES = 256 * 1024 * 1024  # byte threshold for the same collect
+# row and byte caps of the union-find fast path (driver CC here and the g08
+# sameAs mapping); kgx.util.driver_rows applies them within the engine-wide
+# driver budget (kgx.util.DRIVER_MAX_*). g08's driver mapping measured
+# against its distributed CC (bench/driver_regime_bench.py g08, chains of 10,
+# local[4]): 3.5 s vs 13.9 s at 100k edges, 27 vs 58 at 1M, 28 vs 119 at 2M,
+# the driver process peaking near 1.2 GB at 2M
+DRIVER_CC_MAX_EDGES = 2_000_000
+DRIVER_CC_MAX_BYTES = 256 * 1024 * 1024
 DRIVER_CANON_MAX_SURFACES = 1000  # collect threshold for whole-mapping fast path
 
 
@@ -669,6 +675,31 @@ def _py_shingles(surface: str, shingle: str, k: int = 3) -> frozenset[str]:
     return frozenset(_py_grams_of_norm(norm, "token", k))
 
 
+def min_components(pairs, nodes=()) -> dict[str, str]:
+    """Union-find on the driver: every node (the endpoints of ``pairs`` plus
+    ``nodes``) -> the minimum node of its connected component. Union keeps
+    the smaller root, so a component's root is its minimum member whatever
+    the pair order. The one driver union-find of the engine: the driver
+    canonical mapping, the driver CC path and the sameAs mapping
+    (kgx.ops.graph.resolve_sameas) all call it."""
+    parent: dict[str, str] = {s: s for s in nodes}
+
+    def find(x: str) -> str:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    return {s: find(s) for s in parent}
+
+
 def _driver_canonical_mapping(spark, surfaces, known, shingle, threshold):
     """Pure-driver exact mapping for small dictionaries (same semantics as the
     distributed path: exact-Jaccard >= threshold edges, known-group edges,
@@ -676,28 +707,14 @@ def _driver_canonical_mapping(spark, surfaces, known, shingle, threshold):
     ALREADY-COLLECTED node list (the caller's path probe collects it once —
     round 7 removed the count-then-collect double execution)."""
     from kgx import kernel
+    from kgx.util import local_frame
+
     known_pairs = (
         [(r["surface"], r["rep"]) for r in known.collect()] if known is not None else []
     )
-    parent: dict[str, str] = {s: s for s in surfaces}
-    for s, rep in known_pairs:
-        parent.setdefault(s, s)
-        parent.setdefault(rep, rep)
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    def union(a, b):
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
-
-    names = sorted(parent)
+    names = sorted({*surfaces, *(x for pair in known_pairs for x in pair)})
     shs = {s: _py_shingles(s, shingle) for s in names}
+    edges = list(known_pairs)
     for i, a in enumerate(names):
         sa = shs[a]
         if not sa:
@@ -708,13 +725,11 @@ def _driver_canonical_mapping(spark, surfaces, known, shingle, threshold):
                 continue
             inter = len(sa & sb)
             if inter and inter / len(sa | sb) >= threshold:
-                union(a, b)
-    for s, rep in known_pairs:
-        union(s, rep)
+                edges.append((a, b))
 
     comps: dict[str, list[str]] = {}
-    for s in parent:
-        comps.setdefault(find(s), []).append(s)
+    for s, root in min_components(edges, names).items():
+        comps.setdefault(root, []).append(s)
     known_reps = {rep for _, rep in known_pairs}
     rows = []
     for members in comps.values():
@@ -722,7 +737,24 @@ def _driver_canonical_mapping(spark, surfaces, known, shingle, threshold):
         rep = min(cands, key=lambda v: (kernel.normalize_surface(v), v))
         rows.extend((m, rep) for m in members)
     return CanonicalMapping(
-        spark.createDataFrame(rows, "surface string, rep string"), rows
+        local_frame(spark, rows, "surface string, rep string"), rows
+    )
+
+
+def driver_edge_rows(edges: DataFrame):
+    """``(pinned, rows)``: the (a, b) edge frame pinned once, and its rows on
+    the driver when they fit the driver-CC budget (DRIVER_CC_MAX_*, within
+    the engine's driver budget kgx.util.DRIVER_MAX_*), else None. The gate
+    of the driver CC path here and of the sameAs driver mapping; utf-8
+    bytes are counted executor-side, on the pin's own pass, before anything
+    is collected (kgx.util.driver_rows)."""
+    from kgx.util import driver_rows
+
+    return driver_rows(
+        edges.select("a", "b"),
+        F.octet_length("a") + F.octet_length("b"),
+        DRIVER_CC_MAX_EDGES,
+        DRIVER_CC_MAX_BYTES,
     )
 
 
@@ -756,39 +788,23 @@ def connected_components(
     Component ids differ between the two paths (min-surface vs min-hash) but
     grouping — the only thing consumers use — is identical.
     """
-    # materialize once: the guard probe and the chosen CC strategy are
-    # separate actions that would otherwise each re-run the whole upstream
-    # blocking/verification pipeline
-    edges = edges.localCheckpoint()
-    # guard FIRST, executor-side: count + byte budget over the bounded
-    # limit(cap+1) slice; the collect happens ONLY after both budgets pass —
-    # an edge set under the row cap but over the byte cap (long CJK
-    # surfaces) must route to the distributed path WITHOUT ever being pulled
-    # onto the driver (see kgx.util.bounded_stats for the idiom's rationale)
-    from kgx.util import bounded_stats
-
-    stats = bounded_stats(
-        edges.select("a", "b"),
-        DRIVER_CC_MAX_EDGES,
-        F.octet_length("a") + F.octet_length("b"),
-    )
-    if stats["n"] <= DRIVER_CC_MAX_EDGES and stats["nbytes"] <= DRIVER_CC_MAX_BYTES:
-        # reads the checkpointed edges, not the upstream pipeline. The touched
-        # mapping is broadcast-hinted: it passed the same row+byte budget the
-        # collect did, but it reaches the planner as a stats-less RDD scan
-        # (createDataFrame), which otherwise defaults every downstream
-        # equi-join to a two-sided shuffle of a driver-sized table (round 7:
-        # the t07 members join shuffled 50k rows to attach 2.4k components).
-        comp = F.broadcast(
-            _driver_cc_from_rows(edges.sparkSession, edges.select("a", "b").collect())
-        )
+    # materialize once: the guard and the chosen CC strategy both read the
+    # pin instead of each re-running the whole upstream blocking/verification
+    # pipeline. Guard FIRST, executor-side: the collect happens ONLY after
+    # the row and byte budgets both pass — an edge set under the row cap but
+    # over the byte cap (long CJK surfaces) must route to the distributed
+    # path WITHOUT ever being pulled onto the driver
+    edges, rows = driver_edge_rows(edges)
+    if rows is not None:
+        # the touched mapping is a local frame the planner sizes exactly,
+        # but a mapping within the row+byte budget can still exceed
+        # autoBroadcastJoinThreshold (10 MB); the hint keeps the broadcast
+        # decision with the budget the collect already passed, so downstream
+        # equi-joins never shuffle a driver-sized table (round 7: the t07
+        # members join shuffled 50k rows to attach 2.4k components).
+        comp = F.broadcast(_driver_cc_from_rows(edges.sparkSession, rows))
     else:
-        touched = (
-            edges.select(F.col("a").alias("surface"))
-            .unionByName(edges.select(F.col("b").alias("surface")))
-            .distinct()
-        )
-        comp = _distributed_cc(touched, edges, max_iter)
+        comp = distributed_components(edges, max_iter)
     if nodes is None:
         return comp
     # 's:' namespace (see _driver_cc): never collides with 'h:'+hash labels,
@@ -817,31 +833,28 @@ def _driver_cc_from_rows(spark, edge_rows, extra_surfaces=()) -> DataFrame:
     the checkpointed edges once the executor-side row+byte guard passes).
     Touched nodes are the edge endpoints; callers add ``extra_surfaces`` for
     nodes that must appear as singletons."""
-    parent: dict[str, str] = {}
+    from kgx.util import local_frame
 
-    def find(x: str) -> str:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for s in extra_surfaces:
-        parent[s] = s
-    for r in edge_rows:
-        a, b = r["a"], r["b"]
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            # union by min keeps labels deterministic regardless of edge order
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
+    roots = min_components(((r["a"], r["b"]) for r in edge_rows), extra_surfaces)
     # 's:' namespace: label spaces of the three producers (driver surface-min,
     # distributed 'h:'+hash, isolated 's:'+surface) are disjoint BY CONSTRUCTION
     # — a raw surface that literally looks like another path's label (e.g.
     # 'h:123') could otherwise merge unrelated groups
-    rows = [(s, "s:" + find(s)) for s in parent]
-    return spark.createDataFrame(rows, "surface string, component string")
+    rows = [(s, "s:" + root) for s, root in roots.items()]
+    return local_frame(spark, rows, "surface string, component string")
+
+
+def distributed_components(edges: DataFrame, max_iter: int = 40) -> DataFrame:
+    """(surface, component) over the endpoints of a pinned (a, b) edge
+    frame by distributed large-star/small-star CC: the over-budget branch
+    of connected_components, for callers that already ran its gate
+    (driver_edge_rows)."""
+    touched = (
+        edges.select(F.col("a").alias("surface"))
+        .unionByName(edges.select(F.col("b").alias("surface")))
+        .distinct()
+    )
+    return _distributed_cc(touched, edges, max_iter)
 
 
 def _driver_cc(nodes: DataFrame, edges: DataFrame) -> DataFrame:

@@ -29,6 +29,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kgx.util import local_frame
+
 
 def bucket_col(url_col, n_buckets: int):
     return F.pmod(F.xxhash64(url_col), F.lit(n_buckets)).cast("int")
@@ -373,7 +375,7 @@ class TripleStore:
         from kgx.schema import TRIPLES
 
         if not units:
-            return spark.createDataFrame([], TRIPLES)
+            return local_frame(spark, [], TRIPLES)
         paths = [os.path.join(self.data_dir, f"unit={u}") for u in units]
         # explicit schema: a unit committed from ZERO triples (a micro-batch
         # of extractable-fact-free pages — supported via commit(content=...))
@@ -461,7 +463,7 @@ class TripleStore:
         # data-derived sidecar would silently forget (breaking ingest dedup)
         merged_content = self._content_df(spark, victims)
         if merged_content is None:  # pragma: no cover — victims >= 2 above
-            merged_content = spark.createDataFrame([], "content_sha string")
+            merged_content = local_frame(spark, [], "content_sha string")
         self._write_content_sidecar(unit_id, merged_content)
 
         merged_metrics: dict[str, dict[str, int]] = {}

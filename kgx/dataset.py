@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kgx.config import QUESTION_MAPPING
+from kgx.util import local_frame
 
 # fields nullable: the cast in chat_rows carries column nullability, and a
 # non-null target type is not a valid cast destination
@@ -40,8 +41,8 @@ SYSTEM_PROMPT = (
 
 def question_dim(spark: SparkSession) -> DataFrame:
     """(pred, question) broadcast dimension (config/question_mapping.json)."""
-    return spark.createDataFrame(
-        list(QUESTION_MAPPING.items()), "pred string, question string"
+    return local_frame(
+        spark, list(QUESTION_MAPPING.items()), "pred string, question string"
     )
 
 

@@ -27,17 +27,22 @@ Scale posture, per operator:
   caps every node's oriented out-degree near sqrt(|E|), so the wedge join
   cannot explode on hubs the way a naive (a<b) orientation does. The wedge
   join and the closing-edge semi-join are both equi-joins on node ids.
-- PageRank (g05): the edge frame with precomputed out-weights is built once
-  and persisted; each of the K unrolled iterations is one join + one
-  partial-agg sum keyed by dst. Rank frames are O(nodes) — at web scale they
-  stay partitioned by node and AQE broadcasts the (tiny) rank side into the
-  edge join. Dangling mass is dropped (identically in the oracle).
+- PageRank (g05): the node and edge lists are pinned once; within the
+  driver budget the power iteration runs on the driver (a nation graph has
+  at most 625 weighted edges) and the ranks return as a local frame. Over
+  budget the edge frame with precomputed out-weights is persisted and each
+  of the K unrolled iterations is one join + one partial-agg sum keyed by
+  dst; rank frames are O(nodes), partitioned by node, and AQE broadcasts
+  the (tiny) rank side into the edge join. Dangling mass is dropped
+  (identically in the oracle).
 - N-Triples export (g06): pure string concat/escape in the projection —
   whole-stage codegen, no shuffle beyond the shared triple build.
 - sameAs resolution (g08): CC over the sameAs graph only (sized by the alias
-  population, not the triple count — kgx.canon's budget-gated driver /
-  large-star CC), then one node-keyed mapping join per side; the mapping is
-  the same broadcast-dictionary shape as the pipeline's proponent rewrite.
+  population, not the triple count): within the driver-CC budget a driver
+  union-find builds the mapping rows directly, over it kgx.canon's
+  large-star CC does; then one node-keyed mapping join per side; the
+  mapping is the same broadcast-dictionary shape as the pipeline's
+  proponent rewrite.
 - transitive closure (g09): semi-naive Datalog — each round joins only the
   new frontier pairs and anti-joins the found set, so work is O(closure),
   never O(walks); per-round localCheckpoint caps lineage.
@@ -51,6 +56,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgx.ops import load
+from kgx.util import bounded_stats, driver_rows, local_frame
 
 # ---------------------------------------------------------------------------
 # shared triple construction (Spark + the mirroring SQL CTE)
@@ -308,15 +314,57 @@ SELECT node, COUNT(*) AS tri_cnt FROM members GROUP BY node
 # --- g05: PageRank over the nation trade graph (K unrolled iterations) ------ #
 PR_ITERS = 3
 PR_DAMPING = 0.85
+# node + edge rows cap of pagerank's driver regime: half the measured
+# crossover (bench/driver_regime_bench.py g05, local[4]: driver 0.9 s vs 3.3 s
+# over Spark at 50k rows, 1.7 vs 3.0 at 100k, even at 200k, 6.0 vs 4.4 at 400k)
+PR_DRIVER_MAX_ROWS = 100_000
 
 
 def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = PR_ITERS,
              damping: float = PR_DAMPING) -> DataFrame:
     """nodes(node), edges(src, dst, weight) -> (node, rank) after ``iters``
     weighted power iterations from a uniform start; dangling mass is dropped
-    (the oracle mirrors that definition exactly). The normalized edge frame
-    is computed once; each iteration is one join + one sum keyed by dst.
+    (the oracle mirrors that definition exactly). ``nodes`` holds each node
+    once.
+
+    Two regimes, same rows. The node and edge lists are pinned together
+    once, as one tagged graph relation, either way.
+    - Driver (the graph relation fits the driver budget and
+      PR_DRIVER_MAX_ROWS, kgx.util.driver_rows): the iteration runs in Python over the collected
+      rows (_pagerank_on_driver) and the ranks come back as a local frame.
+      A 25-node trade graph took 30 Spark jobs as unrolled join+sum rounds,
+      almost all of it scheduling latency; here it is the edge build, the
+      pin and one collect.
+    - Distributed (over budget): the normalized edge frame is persisted and
+      each iteration is one join + one sum keyed by dst, with rank frames
+      partitioned by node.
+    Both round the rank with the same Spark ``round`` (HALF_UP) as the
+    last step, so the regimes differ only in summation order below the
+    sixth decimal; the driver sums with ``math.fsum`` (correctly rounded,
+    whatever the order).
     """
+    g = edges.select("src", "dst", "weight", F.lit(False).alias("is_node"))
+    g = g.unionByName(
+        nodes.select(
+            F.col("node").alias("src"),
+            F.lit(None).cast("string").alias("dst"),
+            F.lit(None).cast("double").alias("weight"),
+            F.lit(True).alias("is_node"),
+        )
+    )
+    nbytes = sum(F.coalesce(F.octet_length(c), F.lit(0)) for c in ("src", "dst"))
+    g, rows = driver_rows(g, nbytes + 8, max_rows=PR_DRIVER_MAX_ROWS)
+    if rows is not None:
+        ranks = _pagerank_on_driver(
+            [r[0] for r in rows if r[3]], [r[:3] for r in rows if not r[3]],
+            iters, damping,
+        )
+        return local_frame(
+            nodes.sparkSession, ranks, "node string, rank double not null"
+        ).select("node", F.round("rank", 6).alias("rank"))
+
+    nodes = g.filter("is_node").select(F.col("src").alias("node"))
+    edges = g.filter(~F.col("is_node")).select("src", "dst", "weight")
     n = nodes.count()
     norm = edges.groupBy("src").agg(F.sum("weight").alias("out_w"))
     enorm = edges.join(norm, "src").select(
@@ -347,6 +395,30 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = PR_ITERS,
     out = out.localCheckpoint()  # pin before releasing the edge frame
     enorm.unpersist()
     return out
+
+
+def _pagerank_on_driver(nodes: list, edges: list, iters: int, damping: float):
+    """The distributed iteration's arithmetic on collected rows: shares are
+    weight / out-weight of the src over ALL its edges; a src outside
+    ``nodes`` has no rank and sends nothing; rank = base + damping * inflow
+    with a missing inflow as 0.0. Returns [(node, unrounded rank)]."""
+    import math
+
+    n = len(nodes)
+    out_w: dict = {}
+    for s, _, w in edges:
+        out_w.setdefault(s, []).append(w)
+    out_w = {s: math.fsum(ws) for s, ws in out_w.items()}
+    shares = [(s, d, w / out_w[s]) for s, d, w in edges]
+    rank = {v: 1.0 / n for v in nodes}
+    base = (1.0 - damping) / n
+    for _ in range(iters):
+        inflow: dict = {}
+        for s, d, share in shares:
+            if s in rank:
+                inflow.setdefault(d, []).append(share * rank[s])
+        rank = {v: base + damping * math.fsum(inflow.get(v, (0.0,))) for v in nodes}
+    return [(v, rank[v]) for v in nodes]
 
 
 def g05_nation_pagerank(spark: SparkSession, sf: str) -> DataFrame:
@@ -456,7 +528,7 @@ def g07_bfs_depths(spark: SparkSession, sf: str) -> DataFrame:
     sym = t.select(F.col("subj").alias("src"), F.col("obj").alias("dst")).union(
         t.select(F.col("obj").alias("src"), F.col("subj").alias("dst"))
     ).distinct()
-    seeds = spark.createDataFrame([(BFS_SEED,)], "node string")
+    seeds = local_frame(spark, [(BFS_SEED,)], "node string")
     return bfs_depths(sym, seeds, BFS_MAX_DEPTH)
 
 
@@ -571,53 +643,60 @@ def resolve_sameas(triples: DataFrame, edges: DataFrame) -> DataFrame:
     (min surface over the sameAs component) and collapse duplicates.
 
     This is the KG-construction step the reference pipeline stops short of:
-    connected components over the sameAs graph (kgx.canon's budget-gated
-    driver/large-star CC — sized by the ALIAS population, not the triple
-    count), then one node-keyed mapping join per side. At web scale the
-    mapping is the same broadcast-dictionary shape as the extraction
-    pipeline's proponent rewrite: within the row+byte budget it broadcasts
-    and the corpus side never shuffles for the rewrite at all (plan = the
-    triple build + one distinct exchange); over budget the joins fall back
-    to hash-partitioned shuffles where only node ids cross, never triple
-    payloads."""
-    from kgx.canon import connected_components
+    connected components over the sameAs graph (sized by the ALIAS
+    population, not the triple count), then one node-keyed mapping join per
+    side. The mapping covers only surfaces a sameAs edge touches and drops
+    identity rows; every other surface is its own canonical through the
+    coalesce below, so the mapping is alias-sized, never corpus-sized.
 
-    # the mapping covers ONLY surfaces a sameAs edge touches — surfaces with
-    # no equivalence assertion are their own canonical by definition and are
-    # handled by the coalesce fallback below. This keeps the mapping sized
-    # by the ALIAS population (broadcastable), not the corpus: building it
-    # over every distinct subj/obj would make the rewrite join corpus-sized
-    # for no information gain. nodes=None: the universe IS the edge
-    # endpoints here, so CC skips its isolated-node anti-join (empty by
-    # construction) and derives the touched set once internally.
-    comp = connected_components(None, edges)
-    rep = comp.groupBy("component").agg(F.min("surface").alias("canon"))
-    # drop identity rows: they only inflate the broadcast, coalesce covers them
-    mapping = (
-        comp.join(rep, "component")
-        .filter(F.col("surface") != F.col("canon"))
-        .select("surface", "canon")
-        .localCheckpoint()  # pin: CC must not re-run per rewrite side
-    )
-    # the pinned mapping is an ExistingRDD scan with NO stats, so Catalyst
-    # defaults both rewrite joins to SortMergeJoin — shuffling the CORPUS
-    # side twice (subj, then obj) for an alias-sized dictionary. Broadcast
-    # it under the engine's row+byte budget (the F.broadcast-forces-past-
-    # autoBroadcastJoinThreshold hazard is guarded, same idiom as the
-    # streaming skip probe): within budget the triple side never shuffles
-    # for the rewrite and the plan is build + ONE distinct exchange.
-    from kgx.util import bounded_stats
+    Two regimes for the mapping, same rows:
+    - Driver (the pinned edge list fits the driver-CC budget,
+      kgx.canon.driver_edge_rows): union-find on the collected edges
+      (kgx.canon.min_components; a component's root is its min surface) and
+      the (surface, canon) rows return as a local frame, sized on the
+      driver. No distributed CC, no mapping pin, no size probe.
+    - Distributed (over budget): large-star CC over the same pinned edges
+      (kgx.canon.distributed_components), then a min-surface aggregate and
+      join, pinned so CC runs once for both rewrite sides, and sized by an
+      executor-side probe.
+    Either way SAMEAS_BROADCAST_MAX_* decides the rewrite joins: within the
+    row+byte budget the mapping broadcasts and the corpus side never
+    shuffles for the rewrite (plan = the triple build + one distinct
+    exchange); over it both joins are sort-merge shuffles where only node
+    ids cross, never triple payloads (the hint also keeps a local frame the
+    planner could broadcast on its own from being broadcast past the
+    budget)."""
+    from kgx.canon import distributed_components, driver_edge_rows, min_components
 
-    stats = bounded_stats(
-        mapping,
-        SAMEAS_BROADCAST_MAX_ROWS,
-        F.octet_length("surface") + F.octet_length("canon"),
-    )
-    if (
-        stats["n"] <= SAMEAS_BROADCAST_MAX_ROWS
-        and stats["nbytes"] <= SAMEAS_BROADCAST_MAX_BYTES
-    ):
+    edges, rows = driver_edge_rows(edges)
+    if rows is not None:
+        pairs = [
+            (s, root) for s, root in min_components(rows).items() if s != root
+        ]
+        mapping = local_frame(
+            triples.sparkSession, pairs, "surface string, canon string"
+        )
+        n = len(pairs)
+        nbytes = sum(len(s.encode()) + len(c.encode()) for s, c in pairs)
+    else:
+        comp = distributed_components(edges)
+        rep = comp.groupBy("component").agg(F.min("surface").alias("canon"))
+        mapping = (
+            comp.join(rep, "component")
+            .filter(F.col("surface") != F.col("canon"))
+            .select("surface", "canon")
+            .localCheckpoint()  # pin: CC must not re-run per rewrite side
+        )
+        stats = bounded_stats(
+            mapping,
+            SAMEAS_BROADCAST_MAX_ROWS,
+            F.octet_length("surface") + F.octet_length("canon"),
+        )
+        n, nbytes = stats["n"], stats["nbytes"]
+    if n <= SAMEAS_BROADCAST_MAX_ROWS and nbytes <= SAMEAS_BROADCAST_MAX_BYTES:
         mapping = F.broadcast(mapping)
+    else:
+        mapping = mapping.hint("merge")
     sub_m = mapping.withColumnRenamed("surface", "subj").withColumnRenamed(
         "canon", "canon_subj"
     )

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kgx.util import local_frame
+
 ASSETS = T.StructType(
     [
         T.StructField("asset_id", T.LongType(), False),
@@ -71,7 +73,7 @@ def synth_assets(spark: SparkSession, n: int = 64, seed: int = 42) -> DataFrame:
             "codec": {"image": "png", "audio": "pcm16", "video": "h264"}[kind],
         }
         rows.append((i, kind, payload, meta))
-    return spark.createDataFrame(rows, ASSETS)
+    return local_frame(spark, rows, ASSETS)
 
 
 def _fake_decode(payload: bytes, meta: dict) -> np.ndarray:

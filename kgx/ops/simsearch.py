@@ -10,10 +10,14 @@
   product; exact cosine re-ranks candidates. Exact DuckDB oracle via an
   engine-portable integer scheme.
 - s04 / ivf_build + ivf_query: IVF index — train the coarse quantizer once,
-  materialize cell membership, amortize per-query probe + re-rank.
+  materialize cell membership, amortize per-query probe + re-rank. Within
+  the driver budget the whole index runs in numpy on the driver over one
+  collect of the corpus; over it, as Spark passes.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -213,19 +217,26 @@ def _rh_bands_udf(vec: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
+def _cos_np(A, B):
+    """Row-wise cosine of two (n, dim) float64 matrices, rounded to 6
+    decimals half-away-from-zero: matches Spark's F.round (BigDecimal
+    HALF_UP) and DuckDB's round(); np.round is half-to-even and would
+    diverge on exact midpoints. The one home of the pairwise cosine: the
+    s02/s04 UDF, s03's re-rank and s04's driver re-rank all call it, so
+    every regime scores a pair bit-identically."""
+    import numpy as np
+
+    num = (A * B).sum(axis=1)
+    den = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
+    r = num / den
+    return np.sign(r) * np.floor(np.abs(r) * 1e6 + 0.5) / 1e6
+
+
 @F.pandas_udf(T.DoubleType())
 def _cos_np_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     import numpy as np
 
-    A = np.stack(a.to_numpy())
-    B = np.stack(b.to_numpy())
-    num = (A * B).sum(axis=1)
-    den = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-    r = num / den
-    # round half-away-from-zero: matches Spark's F.round (BigDecimal HALF_UP)
-    # and DuckDB's round(); np.round is half-to-even and would diverge on
-    # exact midpoints
-    return pd.Series(np.sign(r) * np.floor(np.abs(r) * 1e6 + 0.5) / 1e6)
+    return pd.Series(_cos_np(np.stack(a.to_numpy()), np.stack(b.to_numpy())))
 
 
 def s03_ann_lsh(spark: SparkSession, sf: str) -> DataFrame:
@@ -257,20 +268,15 @@ def s03_ann_lsh(spark: SparkSession, sf: str) -> DataFrame:
     # Round 7: the O(queries) matrix rides the UDF closure (the s01 shape) —
     # the re-rank joins back only the CANDIDATE vector and gathers the query
     # row by id inside the batch, instead of also shuffling a qv array per
-    # surviving pair. Same arithmetic per pair as _cos_np_udf (stack, dot,
-    # norm product, half-away-from-zero round), so scores are bit-identical.
+    # surviving pair. Scored by _cos_np like every other pair.
     qrows = sorted(q.collect(), key=lambda r: r.query_id)
     Q = np.stack([np.asarray(r.qv, dtype=np.float64) for r in qrows])
     qindex = {int(r.query_id): i for i, r in enumerate(qrows)}
 
     @F.pandas_udf(T.DoubleType())
     def _cos_vs_query(qid: pd.Series, cv: pd.Series) -> pd.Series:
-        B = np.stack(cv.to_numpy())
         A = Q[[qindex[int(x)] for x in qid]]
-        num = (A * B).sum(axis=1)
-        den = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-        r = num / den
-        return pd.Series(np.sign(r) * np.floor(np.abs(r) * 1e6 + 0.5) / 1e6)
+        return pd.Series(_cos_np(A, np.stack(cv.to_numpy())))
 
     scored = cand.join(c.select("cand_id", "cv"), "cand_id").withColumn(
         "cos", _cos_vs_query("query_id", "cv")
@@ -341,6 +347,11 @@ SELECT query_id, cand_id, rank, cos FROM (
 K_CELLS = 8
 N_PROBE = 2
 IVF_ITERS = 2  # centroid updates; assignments = IVF_ITERS + 1 (final)
+# corpus size cap of ivf_build's driver regime: under half the measured
+# crossover (bench/driver_regime_bench.py s04, dim 64, local[4]: driver 1.5 s
+# vs 3.8 s over Spark at 20k vectors, 2.2 vs 3.7 at 30k, even at 50k, 5.9 vs
+# 4.0 at 100k; the driver process peaks near 300 MB at 20k)
+IVF_DRIVER_MAX_VECTORS = 20_000
 
 
 def _quant_shifted(col):
@@ -357,51 +368,93 @@ def _sqdist(a, b):
     )
 
 
+def _sq_dists(V, C):
+    """Exact int64 squared distances between the rows of V (n, dim) and the
+    centroids C (K, dim), as an (n, K) matrix, via the
+    ||v||^2 - 2 v.C^T + ||c||^2 expansion — O(n*K) memory, no (n, K, dim)
+    tensor, and every term stays exact in int64 (values <= 2^48 at the 1e6
+    quantization and dim 64). Column j is centroid j, so a stable sort of a
+    row orders cells by (distance, cidx). The one home of the IVF distance:
+    the assignment UDF and the driver regime's Lloyd rounds, assignment
+    and probe all call it."""
+    return (
+        (V * V).sum(axis=1)[:, None] - 2 * (V @ C.T) + (C * C).sum(axis=1)[None, :]
+    )
+
+
 def nearest_cidx_udf(cents: list[tuple[int, list[int]]]):
     """Nearest-centroid assignment as a numpy pandas UDF: argmin over exact
-    int64 squared distances with the (distance, cidx) tie-break (argmin takes
-    the first minimum; centroid rows are ordered by cidx).
+    int64 squared distances (_sq_dists) with the (distance, cidx) tie-break
+    (argmin takes the first minimum; centroid rows are ordered by cidx).
 
     This replaces the corpus x K crossJoin + interpreted-HOF `_sqdist` + a
     Window over every candidate that the training loop used before round 3 —
     the exact anti-pattern SURVEY.md §8.3 measured at ~50x slower than numpy,
     plus a full corpus-sized exchange per Lloyd iteration. Here assignment is
     a map-only pass: the K x dim int64 centroid matrix (a few KB) ships in
-    the UDF closure; per batch the distance matrix is computed via the
-    ||v||^2 - 2 v.C^T + ||c||^2 expansion — O(n*K) memory, no (n,K,dim)
-    tensor, and every term stays exact in int64 (values <= 2^48 at the 1e6
-    quantization and dim 64)."""
+    the UDF closure."""
     import numpy as np
 
     C = np.array([v for _, v in sorted(cents)], dtype=np.int64)  # (K, dim)
-    c_sq = (C * C).sum(axis=1)  # (K,)
 
     @F.pandas_udf(T.IntegerType())
     def nearest(vq: pd.Series) -> pd.Series:
         if not len(vq):
             return pd.Series([], dtype="int32")
         V = np.stack(vq.to_numpy()).astype(np.int64)  # (n, dim)
-        d = (V * V).sum(axis=1)[:, None] - 2 * (V @ C.T) + c_sq[None, :]
-        return pd.Series(d.argmin(axis=1).astype("int32"))
+        return pd.Series(_sq_dists(V, C).argmin(axis=1).astype("int32"))
 
     return nearest
 
 
-def ivf_build(
-    c: DataFrame, k_cells: int = K_CELLS, iters: int = IVF_ITERS
-) -> tuple[list[tuple[int, list[int]]], DataFrame]:
+def _vec_bytes(col: str):
+    """Encoded size of an (id, array<double>) row for the driver budget."""
+    return F.lit(8) + F.lit(8) * F.size(col)
+
+
+class IvfIndex(NamedTuple):
+    """ivf_build's output. ``cents`` are the [(cidx, int64 centroid)] rows,
+    ``cells`` the (cand_id, cv, cidx) membership frame; ``rows`` holds the
+    same membership on the driver when the index was built there, else
+    None. ivf_query follows the regime the build chose, so a query neither
+    re-sizes nor re-pins the cells."""
+
+    cents: list[tuple[int, list[int]]]
+    cells: DataFrame
+    rows: list | None = None
+
+
+def ivf_build(c: DataFrame, k_cells: int = K_CELLS, iters: int = IVF_ITERS) -> IvfIndex:
     """Train the coarse quantizer and materialize cell membership ONCE —
     the build-once/query-many half of the IVF index (at corpus scale this is
-    a persisted table keyed by cidx; here a localCheckpoint).
+    a persisted table keyed by cidx).
 
-    ``c`` must carry (cand_id, cv). Returns (centroids, cells DataFrame
-    (cand_id, cv, cidx)). Centroids are always O(K) — collected/broadcast per
-    iteration (the standard k-means dataflow); assignment is a map-only numpy
-    pandas UDF (nearest_cidx_udf — no corpus exchange per iteration); the only
-    shuffle in training is the K x dim partial-aggregated centroid-sum
-    groupBy. Integer quantization (see above) keeps every number engine-exact.
+    ``c`` must carry (cand_id, cv). Returns an IvfIndex. Seeds are the
+    k_cells smallest cand_ids; each Lloyd round assigns every vector to its
+    nearest centroid and moves each non-empty cell's centroid to the
+    floor-divided integer mean of its members. Integer quantization (see
+    above) keeps every number engine-exact. Two regimes, same centroids and
+    cells:
+    - Driver (the quantized corpus fits the driver budget and
+      IVF_DRIVER_MAX_VECTORS, kgx.util.driver_rows): one collect of the
+      vectors Spark quantized, then Lloyd and the final assignment in numpy
+      through the same _sq_dists kernel; the index keeps the cell rows and
+      the cells frame is a local frame.
+    - Distributed (over budget): over the corpus the gate pinned, centroids
+      are O(K), collected per round (the standard k-means dataflow);
+      assignment is the map-only numpy pandas UDF (nearest_cidx_udf — no
+      corpus exchange per round) and the only shuffle is the K x dim
+      partial-aggregated centroid-sum groupBy; cells are pinned with
+      localCheckpoint.
     """
-    cq = c.select("cand_id", "cv", _quant_shifted("cv").alias("vq")).localCheckpoint()
+    from kgx.util import driver_rows
+
+    cq = c.select("cand_id", "cv", _quant_shifted("cv").alias("vq"))
+    cq, rows = driver_rows(
+        cq, _vec_bytes("cv") + _vec_bytes("vq"), max_rows=IVF_DRIVER_MAX_VECTORS
+    )
+    if rows is not None:
+        return _ivf_build_on_driver(c, rows, k_cells, iters)
 
     seeds = cq.orderBy("cand_id").limit(k_cells).select("vq").collect()
     cents = [(i, [int(x) for x in r["vq"]]) for i, r in enumerate(seeds)]
@@ -430,19 +483,46 @@ def ivf_build(
         cq.select("cand_id", "cv", nearest_cidx_udf(cents)("vq").alias("cidx"))
         .localCheckpoint()
     )
-    return cents, cells
+    return IvfIndex(cents, cells)
+
+
+def _ivf_build_on_driver(c: DataFrame, rows, k_cells: int, iters: int):
+    """ivf_build's rounds over collected (cand_id, cv, vq) rows."""
+    import numpy as np
+
+    from kgx.util import local_frame
+
+    rows = sorted(rows, key=lambda r: r[0])  # (cand_id, cv, vq)
+    Vq = np.array([r[2] for r in rows], dtype=np.int64)
+    C = Vq[:k_cells].copy()
+    for _ in range(iters):
+        cidx = _sq_dists(Vq, C).argmin(axis=1)
+        for i in np.unique(cidx):  # an empty cell keeps its centroid
+            members = Vq[cidx == i]
+            C[i] = members.sum(axis=0) // len(members)
+    cidx = _sq_dists(Vq, C).argmin(axis=1)
+    cents = [(i, [int(x) for x in C[i]]) for i in range(len(C))]
+    schema = T.StructType(
+        [c.schema["cand_id"], c.schema["cv"], T.StructField("cidx", T.IntegerType())]
+    )
+    cell_rows = [(r[0], r[1], int(i)) for r, i in zip(rows, cidx)]
+    return IvfIndex(cents, local_frame(c.sparkSession, cell_rows, schema), cell_rows)
 
 
 def ivf_query(
-    q: DataFrame,
-    cents: list[tuple[int, list[int]]],
-    cells: DataFrame,
-    n_probe: int = N_PROBE,
-    k: int = K,
+    q: DataFrame, index: IvfIndex, n_probe: int = N_PROBE, k: int = K
 ) -> DataFrame:
-    """Probe the n_probe nearest cells per query, exact-cosine re-rank the
-    probed members. O(queries x K) probe + O(probed members) re-rank — the
-    amortized per-query half of the index.
+    """Probe the n_probe nearest cells per query (by (distance, cidx)), exact-
+    cosine re-rank the probed members (by (-cos, cand_id)). O(queries x K)
+    probe + O(probed members) re-rank — the amortized per-query half of the
+    index. Two regimes, same rows:
+    - Driver (the index was built on the driver): the queries are
+      collected (O(queries), as in s01/s03) and probe and re-rank run in
+      numpy through _sq_dists and _cos_np; the top-k returns as a local
+      frame.
+    - Distributed (the index was built over budget): the query x centroid
+      crossJoin against the broadcast centroids, a window for the probe,
+      the cells join and the _cos_np_udf re-rank under a window.
 
     Picking an operating point (measured 100k-vector curve in
     BENCH/BASELINE.md round 4, raw data BENCH/ann_sweep.json): prefer MORE,
@@ -454,8 +534,27 @@ def ivf_query(
     1.00 — on an adversarially unclustered corpus (random directions), so
     real embedding corpora do better. The module defaults (8 cells, 2
     probes) are sized for the tiny driver-contract tables, not for scale."""
+    from kgx.util import local_frame
+
     spark = q.sparkSession
-    cent_df = spark.createDataFrame(cents, "cidx int, cent array<long>")
+    cents, cells = index.cents, index.cells
+    if index.rows is not None:
+        qrows = q.select(
+            "query_id", "qv", _quant_shifted("qv").alias("vq")
+        ).collect()
+        schema = T.StructType(
+            [
+                q.schema["query_id"],
+                cells.schema["cand_id"],
+                T.StructField("rank", T.IntegerType(), False),
+                T.StructField("cos", T.DoubleType()),
+            ]
+        )
+        return local_frame(
+            spark, _ivf_query_on_driver(qrows, cents, index.rows, n_probe, k), schema
+        )
+
+    cent_df = local_frame(spark, cents, "cidx int, cent array<long>")
     qq = q.select("query_id", "qv", _quant_shifted("qv").alias("vq"))
     wq = Window.partitionBy("query_id").orderBy("d", "cidx")
     probe = (
@@ -476,6 +575,29 @@ def ivf_query(
     )
 
 
+def _ivf_query_on_driver(qrows, cents, cell_rows, n_probe: int, k: int):
+    """ivf_query's probe and re-rank over collected rows:
+    [(query_id, cand_id, rank, cos)]."""
+    import numpy as np
+
+    C = np.array([v for _, v in sorted(cents)], dtype=np.int64)
+    cand = np.array([r[0] for r in cell_rows], dtype=np.int64)
+    CV = np.array([r[1] for r in cell_rows], dtype=np.float64)
+    cidx = np.array([r[2] for r in cell_rows])
+    out = []
+    for qid, qv, vq in qrows:
+        qv = np.array(qv, dtype=np.float64)
+        d = _sq_dists(np.array([vq], dtype=np.int64), C)[0]
+        probed = np.argsort(d, kind="stable")[:n_probe]
+        sel = np.flatnonzero(np.isin(cidx, probed))
+        cos = _cos_np(np.repeat(qv[None, :], len(sel), axis=0), CV[sel])
+        top = np.lexsort((cand[sel], -cos))[:k]
+        out.extend(
+            (qid, int(cand[sel][j]), r + 1, float(cos[j])) for r, j in enumerate(top)
+        )
+    return out
+
+
 def s04_ann_ivf(spark: SparkSession, sf: str) -> DataFrame:
     """IVF-style ANN: K_CELLS-cell coarse quantizer trained with IVF_ITERS
     deterministic Lloyd iterations (seeds = the K smallest cand_ids), queries
@@ -483,8 +605,7 @@ def s04_ann_ivf(spark: SparkSession, sf: str) -> DataFrame:
     Composition of ivf_build (train once) + ivf_query (amortized per-query);
     the oracle (S04_SQL) is value-exact, tie-breaks included."""
     q, c = _split(spark, sf)
-    cents, cells = ivf_build(c)
-    return ivf_query(q, cents, cells)
+    return ivf_query(q, ivf_build(c))
 
 
 def _sql_sqdist(a: str, b: str, dim: int) -> str:

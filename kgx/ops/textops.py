@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kgx.ops import load
-from kgx.util import spread
+from kgx.util import local_frame, spread
 
 # small English stopword list shared verbatim with the SQL oracles
 STOPWORDS = ["the", "a", "an", "and", "or", "of", "to", "in", "is", "it"]
@@ -431,7 +431,7 @@ def t09_keyword_hits(spark: SparkSession, sf: str) -> DataFrame:
     explode+rlike+groupBy/collect_list shape of the reference's keyword-page
     search, with the keyword dimension broadcast."""
     d = load(spark, sf, "documents")
-    kw = spark.createDataFrame([(k,) for k in KEYWORDS], "keyword string")
+    kw = local_frame(spark, [(k,) for k in KEYWORDS], "keyword string")
     # Column.rlike only takes a literal pattern in the Python API; the SQL
     # form accepts a column expression
     hits = d.join(
@@ -466,7 +466,7 @@ def t11_keyword_positions(spark: SparkSession, sf: str) -> DataFrame:
     then groupBy re-collect; the explode keeps rows narrow (doc_id + one
     token), so the shuffle is O(hits), not O(corpus text)."""
     d = load(spark, sf, "documents")
-    kw = spark.createDataFrame([(k,) for k in KEYWORDS], "keyword string")
+    kw = local_frame(spark, [(k,) for k in KEYWORDS], "keyword string")
     toks = d.select(
         "doc_id", F.posexplode(F.split("text", "\\s+")).alias("pos", "tok")
     )
@@ -512,7 +512,7 @@ def t12_keyword_pages(spark: SparkSession, sf: str) -> DataFrame:
     paginated render applies). Same narrow explode shape as t11: only (doc_id,
     pos) rows for actual hits reach the shuffle."""
     d = load(spark, sf, "documents")
-    kw = spark.createDataFrame([(k,) for k in KEYWORDS], "keyword string")
+    kw = local_frame(spark, [(k,) for k in KEYWORDS], "keyword string")
     toks = d.select(
         "doc_id", F.posexplode(F.split("text", "\\s+")).alias("pos", "tok")
     )
@@ -571,7 +571,7 @@ def t13_bm25_topk(spark: SparkSession, sf: str) -> DataFrame:
     before ranking AND output (ties broken by doc_id, so the rank column is
     deterministic even under last-ulp drift)."""
     d = load(spark, sf, "documents")
-    kw = spark.createDataFrame([(k,) for k in KEYWORDS], "keyword string")
+    kw = local_frame(spark, [(k,) for k in KEYWORDS], "keyword string")
     toks = d.select(
         "doc_id", F.explode(F.split("text", "\\s+")).alias("tok")
     )

@@ -22,6 +22,7 @@ from pyspark.sql import types as T
 
 from kgx import kernel
 from kgx.config import HEADING_VARIANTS
+from kgx.util import local_frame
 
 # (?U): Java \s is ASCII-only by default; Python str.strip() (the golden
 # kernel) strips Unicode whitespace (nbsp and friends — routine in
@@ -37,8 +38,8 @@ def variant_dim(spark: SparkSession) -> DataFrame:
     for prio, (cat, variants) in enumerate(HEADING_VARIANTS.items()):
         for vprio, v in enumerate(variants):
             rows.append((cat, v, prio, vprio))
-    return spark.createDataFrame(
-        rows, "category string, variant string, priority int, vprio int"
+    return local_frame(
+        spark, rows, "category string, variant string, priority int, vprio int"
     )
 
 

@@ -1,17 +1,21 @@
 """Driver regime vs distributed fallback, per operator, at growing sizes.
 
-pagerank (g05), the IVF index (s04) and resolve_sameas (g08) run small
-relations on the driver and fall back to Spark passes over the driver
-budget (kgx.util.driver_rows). This times both forms of one operator on the
-same synthetic input at each size and checks they return the same rows, so
-each operator's driver cap can be set where the driver form stops winning
-or its memory stops being small:
+pagerank (g05), the IVF index (s04), resolve_sameas (g08) and
+dedup_clusters (t07) run small relations on the driver and fall back to
+Spark passes over the driver budget (kgx.util.fits_driver). This times both
+forms of one operator on the same synthetic input at each size and checks
+they return the same rows, so each operator's driver cap can be set where
+the driver form stops winning or its memory stops being small:
 
 - g05: N = size / 10 nodes, ``size`` weighted edges (hash-drawn src/dst,
   grouped like g05's trade flows); the size is nodes + edges rows.
 - s04: ``size`` corpus vectors of dim 64 plus 10 queries, default index
   (8 cells, 2 Lloyd rounds, 2 probes).
 - g08: ``size`` sameAs edges in chains of 10 plus 2 x size triples.
+- t07: ``size`` documents for dedup_clusters (t07's settings: token
+  3-grams, 32 bands, bucket cap 1000), 10-100 tokens drawn from a 31-word
+  vocabulary, 5% of them near-duplicates (an earlier text plus " dup"), the
+  shape of perfbench's generated corpus.
 
 Inputs are pinned before timing. Each form runs ``reps`` times (after one
 untimed warm-up call at the smallest size); the driver form runs with every
@@ -19,7 +23,7 @@ cap lifted, the fallback with the shared budget zeroed. ``rss_mb`` is the
 driver process's peak resident set after the size's driver runs (it only
 grows, so sizes run ascending).
 
-Usage: python bench/driver_regime_bench.py g05|s04|g08 SIZE [SIZE ...]
+Usage: python bench/driver_regime_bench.py g05|s04|g08|t07 SIZE [SIZE ...]
        [--cpus 4] [--reps 3]
 Prints one JSON line per size.
 """
@@ -124,7 +128,44 @@ def _g08(spark, size):
     return run
 
 
-OPS = {"g05": _g05, "s04": _s04, "g08": _g08}
+def _t07(spark, size):
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from kgx import canon
+
+    vocab = F.array(*[F.lit(f"w{i:02d}") for i in range(31)])
+    word = lambda k: F.element_at(  # noqa: E731
+        vocab, (F.pmod(F.xxhash64("id", k), F.lit(31)) + 1).cast("int")
+    )
+    ntok = 10 + F.pmod(F.xxhash64("id", F.lit(1)), F.lit(91))
+    text = F.concat_ws(" ", F.transform(F.sequence(F.lit(1), ntok), word))
+    n_dup, n_base = size // 20, size - size // 20
+    base = spark.range(n_base).select(F.col("id").alias("doc_id"), text.alias("text"))
+    dups = spark.range(n_dup).select(
+        (F.col("id") + n_base).alias("doc_id"),
+        F.pmod(F.xxhash64("id", F.lit(2)), F.lit(n_base)).alias("of"),
+    )
+    docs = base.unionByName(
+        dups.join(base.withColumnRenamed("doc_id", "of"), "of")
+        .select("doc_id", F.concat("text", F.lit(" dup")).alias("text"))
+    ).localCheckpoint()
+
+    def run():
+        comp = canon.dedup_clusters(docs, shingle="token", bucket_cap=1000, n_bands=32)
+        doc = F.col("doc_id").cast("long")
+        first = F.min(doc).over(Window.partitionBy("component"))
+        row = comp.select(doc.alias("doc_id"), first.alias("first")).agg(
+            F.count(F.lit(1)),
+            F.sum((F.col("doc_id") != F.col("first")).cast("long")),
+            F.sum(F.pmod(F.xxhash64("doc_id", "first"), F.lit(2**31))),
+        ).first()
+        return tuple(row)
+
+    return run
+
+
+OPS = {"g05": _g05, "s04": _s04, "g08": _g08, "t07": _t07}
 
 
 def _lift(monkey, forced_fallback):

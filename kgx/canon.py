@@ -37,13 +37,6 @@ N_HASHES = 64
 N_BANDS = 32  # r = 2 rows per band
 JACCARD_THRESHOLD = 0.4
 
-# sig/shingle payload tables under these budgets ship to the candidate
-# gate/verify joins as broadcast hash relations (pair stream never shuffles);
-# above them the joins fall back to shuffles. Sized like the other forced
-# broadcasts in this engine (well under the 8 GB relation cap, small multiple
-# of executor task memory).
-BROADCAST_PAYLOAD_MAX_ROWS = 2_000_000
-BROADCAST_PAYLOAD_MAX_BYTES = 256 * 1024 * 1024
 
 
 @dataclass(frozen=True)
@@ -317,10 +310,11 @@ def _keyed_sig_gen(shingle: str, k: int = 3, counters=None):
     (surface=id, _text) -> (surface, h=sha256(text), sh_hash, sig).
 
     ``counters``: optional (row_acc, byte_acc) Spark accumulators filled with
-    the emitted row count and payload bytes (id + hash arrays) — the
-    broadcast-payload budget probe rides the signature job itself instead of
-    costing a separate bounded_stats action (round 7). Task retries can only
-    OVER-count, which fails toward the shuffle fallback — safe.
+    the emitted row count and payload bytes (id + hash arrays) — the size
+    check of dedup_clusters' regime choice rides the signature job itself
+    instead of costing a separate bounded_stats action (round 7). Task
+    retries can only OVER-count, which fails toward the shuffle fallback —
+    safe.
 
     The text itself never leaves the Arrow batch — only the id, a 64-char
     content hash, and fixed-width hash arrays, so no downstream shuffle or
@@ -430,12 +424,35 @@ def dedup_clusters(
     2. exact-duplicate prepass keys rows by content hash (one h-window) and
        keeps one representative per distinct text, so boilerplate dup-groups
        can't blow an LSH band bucket past ``bucket_cap``;
-    3. LSH banding + exact-Jaccard verification over representatives only,
-       carrying the id string through the band shuffle;
-    4. connected components over ids (driver union-find under the row+byte
-       guards, distributed star-contraction CC above);
+    3. LSH banding + exact-Jaccard verification over representatives only;
+    4. connected components over ids;
     5. every doc maps to its exact-rep's component; docs whose text is unique
        and un-clustered are their own singleton component.
+
+    Two regimes for steps 3-4, same groups, chosen by the reps' (id,
+    shingle ids, sig) payload as the signature pass's accumulators measured
+    it (rows and encoded bytes of all docs, an upper bound), against the
+    engine's driver budget (kgx.util.fits_driver):
+    - driver (within the budget): the reps are collected from the pinned
+      signature frame as one Arrow table and _lsh_on_driver does the
+      banding, the sig gate and the exact Jaccard in numpy; the driver
+      union-find (min_components) labels the touched reps and the labels
+      come back as one broadcast local frame joined to the members (t07
+      on 500 docs: 7 Spark jobs a call, where the joins took 14).
+    - distributed (over it): the band self-join carries the id string
+      through the band shuffle, the sig/shingle payloads are joined to the
+      candidates, and the verified edges go to connected_components (whose
+      own gate still picks the driver union-find for a small edge set).
+    The budget is also the measured cap: no site cap tightens it. Timed
+    with ``bench/driver_regime_bench.py t07`` (t07's settings, 5% planted
+    near-dups, ``local[4]``, medians of 3 or 2 runs) against the
+    broadcast-payload form of the joins with the driver CC: 500 docs
+    1.36 s vs 2.37 s, 10k 1.53 vs 3.18, 50k 3.96 vs 7.69, 100k 7.98 vs
+    15.06, 200k 16.6 vs 38.6, 270k 24.9 vs 61.2 (about 254 MB of payload,
+    next to the 256 MB byte budget; driver peak RSS 1.1 GB); and on 10k
+    docs in 100 families of near-variants (460k gated candidates, 430k
+    edges) 7.0 s vs 101 s. Since that form won nowhere inside the budget
+    it was deleted; past the budget the joins shuffle.
 
     Exact equality and near-dup merging compose transitively: members of an
     exact group share the rep's shingle set, so Jaccard against the rep equals
@@ -452,18 +469,20 @@ def dedup_clusters(
 
     ``metrics``: an optional dict this call fills with blocking-stage counts
     — ``n_reps`` (exact-dup representatives entering LSH),
-    ``candidate_pairs`` (post-band, post-sig-gate pairs reaching the exact
-    Jaccard check) and ``verified_pairs`` (edges surviving it). Diagnostics
-    mode for scale attribution: wall time should track candidate/verified
-    pair counts, and these counts make that checkable instead of argued.
-    Counting candidates re-executes the band join once from the checkpointed
-    reps (NOT pinned: the gated candidate rows carry two shingle arrays each,
-    and checkpointing a corpus-scale pair set of multi-KB arrays into block
-    storage is exactly the kind of hidden O(pairs·doc-size) memory cost this
-    engine avoids); verified edges are slim (a, b) rows and ARE pinned so the
-    count and connected components read one execution.
+    ``candidate_pairs`` (distinct post-band, post-sig-gate pairs reaching
+    the exact Jaccard check) and ``verified_pairs`` (edges surviving it).
+    Diagnostics mode for scale attribution: wall time should track
+    candidate/verified pair counts, and these counts make that checkable
+    instead of argued. The driver regime counts them as it goes, at no
+    cost. The distributed one re-executes the band join once from the
+    checkpointed reps to count candidates (NOT pinned: the gated candidate
+    rows carry two shingle arrays each, and checkpointing a corpus-scale
+    pair set of multi-KB arrays into block storage is exactly the kind of
+    hidden O(pairs·doc-size) memory cost this engine avoids); verified
+    edges are slim (a, b) rows and ARE pinned so the count and connected
+    components read one execution.
     """
-    from kgx.util import spread
+    from kgx.util import fits_driver, spread
 
     keyed = docs.select(
         F.col(id_col).cast("string").alias("surface"), F.col(text_col).alias("_text")
@@ -491,42 +510,38 @@ def dedup_clusters(
     reps = surf2.filter(F.col("surface") == F.col("erep")).select(
         "surface", "sh_hash", "sig"
     )
-    # payload-join regime decision: reps within a row+byte budget ship their
-    # sig/shingle arrays to the candidate checks as broadcast hash relations
-    # — the (a,b) pair stream then never shuffles at all; over budget falls
-    # back to the shuffled joins (identical rows either way). The budgets are
-    # checked against the accumulator totals the signature job just filled —
-    # an upper bound on the rep payload (reps <= all docs; retries only
-    # inflate it), so no separate probe action runs.
-    broadcast_payloads = (
-        n_acc.value <= BROADCAST_PAYLOAD_MAX_ROWS
-        and b_acc.value <= BROADCAST_PAYLOAD_MAX_BYTES
-    )
-    cand = candidate_pairs(
-        reps,
-        bucket_cap=bucket_cap,
-        n_bands=n_bands,
-        # 4 sigma under the exact-verify threshold: weak candidates die on
-        # the 512B sigs, true pairs reach the exact check
-        est_gate=max(0.0, threshold - 0.25),
-        broadcast_payloads=broadcast_payloads,
-    )
-    edges = verified_edges(cand, threshold=threshold)
-    if metrics is not None:
-        metrics["n_reps"] = reps.count()
-        # distinct pairs, as before round 7: the candidate STREAM now carries
-        # one row per colliding band, so the diagnostic dedups explicitly
-        metrics["candidate_pairs"] = (
-            cand.select("a", "b").dropDuplicates(["a", "b"]).count()
+    # regime decision, against the accumulator totals the signature job
+    # just filled: an upper bound on the reps' payload (reps <= all docs;
+    # retries only inflate it), so no separate probe action runs. Within
+    # the driver budget the reps are collected from the pin and blocking,
+    # verification and CC run on the driver; past it the joins shuffle.
+    # est_gate: 4 sigma under the exact-verify threshold, so weak candidates
+    # die on the 512B sigs and true pairs reach the exact check
+    est_gate = max(0.0, threshold - 0.25)
+    if fits_driver(n_acc.value, b_acc.value):
+        edges, counts = _lsh_on_driver(
+            reps.toArrow(), bucket_cap, n_bands, est_gate, threshold
         )
-        edges = edges.localCheckpoint()
-        metrics["verified_pairs"] = edges.count()
-    # CC runs over edge endpoints only; docs whose rep never touched an edge
-    # are their own singleton component ('s:' namespace) via the coalesce
-    # fallback — the touched mapping joins back to members directly (round-7:
-    # replaces materializing a full per-rep component frame through a
-    # distinct + anti-join + union + corpus-wide inner join).
-    comp = connected_components(None, edges)
+        if metrics is not None:
+            metrics.update(counts)
+        comp = F.broadcast(_driver_cc_from_rows(docs.sparkSession, edges))
+    else:
+        cand = candidate_pairs(
+            reps, bucket_cap=bucket_cap, n_bands=n_bands, est_gate=est_gate
+        )
+        edges = verified_edges(cand, threshold=threshold)
+        if metrics is not None:
+            metrics["n_reps"] = reps.count()
+            # distinct pairs: the candidate STREAM carries one row per
+            # colliding band, so the diagnostic dedups explicitly
+            metrics["candidate_pairs"] = (
+                cand.select("a", "b").dropDuplicates(["a", "b"]).count()
+            )
+            edges = edges.localCheckpoint()
+            metrics["verified_pairs"] = edges.count()
+        comp = connected_components(None, edges)
+    # docs whose rep never touched an edge are their own singleton
+    # component ('s:' namespace) via the coalesce fallback
     return members.join(
         comp.select(F.col("surface").alias("erep"), F.col("component").alias("_c")),
         "erep",
@@ -537,12 +552,76 @@ def dedup_clusters(
     )
 
 
+def _lsh_on_driver(reps, bucket_cap, n_bands, est_gate, threshold):
+    """dedup_clusters' blocking and verification over the reps' collected
+    (surface, sh_hash, sig) Arrow table, in numpy: the same banding (a band
+    is ``N_HASHES // n_bands`` consecutive sig slots; buckets over
+    ``bucket_cap`` members are dropped), the same 64-slot agreement gate
+    (skipped when ``est_gate`` is 0) and the same exact Jaccard on the
+    shingle-hash sets as candidate_pairs + verified_edges. Buckets group by
+    the band's slot values themselves, where the distributed form groups by
+    their xxhash64; the two differ only on a 64-bit hash collision.
+
+    Returns ``(edges, counts)``: the distinct verified (a, b) surface pairs
+    and the metrics dedup_clusters reports (``n_reps``, distinct gated
+    ``candidate_pairs``, ``verified_pairs``), counted as they are made."""
+    import numpy as np
+
+    surf = reps.column("surface").to_pylist()
+    n = len(surf)
+    sig = reps.column("sig").combine_chunks().flatten().to_numpy().reshape(n, N_HASHES)
+    sh = reps.column("sh_hash").combine_chunks()
+    offs = sh.offsets.to_numpy()
+    vals = sh.values.to_numpy()
+    r = N_HASHES // n_bands
+    cap = n if bucket_cap is None else bucket_cap
+    codes = [np.empty(0, dtype=np.int64)]
+    for b in range(n_bands):
+        keys = sig[:, b * r : (b + 1) * r]
+        # stable sort by the band's slots: a bucket is a run of equal keys,
+        # its members in ascending row order
+        order = np.lexsort(keys.T[::-1])
+        ks = keys[order]
+        first = np.ones(n, dtype=bool)
+        first[1:] = (ks[1:] != ks[:-1]).any(axis=1)
+        starts = np.flatnonzero(first)
+        bucket = np.cumsum(first) - 1
+        size = np.diff(np.append(starts, n))[bucket]
+        after = size - (np.arange(n) - starts[bucket]) - 1  # later members
+        # every row pairs with each later member of its bucket: offset k
+        # at a time, over the rows that still have a k-th later member
+        live = np.flatnonzero((size <= cap) & (after > 0))
+        k = 1
+        while live.size:
+            codes.append(order[live] * n + order[live + k])
+            k += 1
+            live = live[after[live] >= k]
+    codes = np.unique(np.concatenate(codes))
+    ia, ib = np.divmod(codes, max(n, 1))
+    if est_gate > 0.0:
+        agree = np.empty(len(ia), dtype=np.int64)
+        for k in range(0, len(ia), 65536):  # bounded (pairs x 64) temporaries
+            sl = slice(k, k + 65536)
+            agree[sl] = (sig[ia[sl]] == sig[ib[sl]]).sum(axis=1)
+        passed = agree / N_HASHES >= est_gate
+        ia, ib = ia[passed], ib[passed]
+    edges = []
+    for i, j in zip(ia.tolist(), ib.tolist()):
+        if surf[i] == surf[j]:  # the band join's a < b drops a repeated id
+            continue
+        a, b = vals[offs[i] : offs[i + 1]], vals[offs[j] : offs[j + 1]]
+        inter = len(np.intersect1d(a, b, assume_unique=True))
+        if inter / (len(a) + len(b) - inter) >= threshold:
+            edges.append((surf[i], surf[j]))
+    counts = {"n_reps": n, "candidate_pairs": len(ia), "verified_pairs": len(edges)}
+    return edges, counts
+
+
 def candidate_pairs(
     surf: DataFrame,
     bucket_cap: int | None = None,
     n_bands: int = N_BANDS,
     est_gate: float | None = None,
-    broadcast_payloads: bool = False,
 ) -> DataFrame:
     """LSH banding self-join -> candidate (a, b) pairs, a < b (one row per
     colliding band — see the dedup note below; verified_edges dedups).
@@ -563,12 +642,7 @@ def candidate_pairs(
       the 512-byte sigs instead of multi-KB shingle sets cuts the widest
       shuffle ~7x. Set the gate >= 3-4 sigma under the verify threshold so
       true pairs pass with certainty-in-practice (deterministic given sigs,
-      so oracle parity is checkable, not probabilistic);
-    - ``broadcast_payloads``: the caller's promise (budget-probed in
-      dedup_clusters) that the sig/shingle payload table fits executor
-      memory as a broadcast hash relation — the pair stream then never
-      shuffles through the gate/verify joins. False keeps the shuffled
-      joins; output rows identical either way.
+      so oracle parity is checkable, not probabilistic).
     """
     r = N_HASHES // n_bands
     bands = surf.select(
@@ -603,9 +677,6 @@ def candidate_pairs(
         .filter(F.col("a") < F.col("b"))
         .select("a", "b")
     )
-    def _maybe_bc(df):
-        return F.broadcast(df) if broadcast_payloads else df
-
     if est_gate is not None and est_gate > 0.0:
         sigs = surf.select("surface", "sig")
         # the aggregate/zip_with agreement sum stays: a 64-term chain of
@@ -619,19 +690,19 @@ def candidate_pairs(
             lambda acc, v: acc + v,
         ) / F.lit(N_HASHES)
         pairs = (
-            pairs.join(_maybe_bc(sigs.select(F.col("surface").alias("a"),
-                                             F.col("sig").alias("sig_a"))), "a")
-            .join(_maybe_bc(sigs.select(F.col("surface").alias("b"),
-                                        F.col("sig").alias("sig_b"))), "b")
+            pairs.join(sigs.select(F.col("surface").alias("a"),
+                                   F.col("sig").alias("sig_a")), "a")
+            .join(sigs.select(F.col("surface").alias("b"),
+                              F.col("sig").alias("sig_b")), "b")
             .filter(est >= est_gate)
             .select("a", "b")
         )
     sets = surf.select("surface", "sh_hash")
     return (
-        pairs.join(_maybe_bc(sets.select(F.col("surface").alias("a"),
-                                         F.col("sh_hash").alias("sh_a"))), "a")
-        .join(_maybe_bc(sets.select(F.col("surface").alias("b"),
-                                    F.col("sh_hash").alias("sh_b"))), "b")
+        pairs.join(sets.select(F.col("surface").alias("a"),
+                               F.col("sh_hash").alias("sh_a")), "a")
+        .join(sets.select(F.col("surface").alias("b"),
+                          F.col("sh_hash").alias("sh_b")), "b")
     )
 
 
@@ -829,13 +900,14 @@ def connected_components(
 
 
 def _driver_cc_from_rows(spark, edge_rows, extra_surfaces=()) -> DataFrame:
-    """Union-find over an ALREADY-COLLECTED edge list (the caller collects
-    the checkpointed edges once the executor-side row+byte guard passes).
+    """Union-find over an ALREADY-COLLECTED list of (a, b) edges (the
+    caller collects the checkpointed edges once the executor-side row+byte
+    guard passes, or dedup_clusters' driver regime verifies them).
     Touched nodes are the edge endpoints; callers add ``extra_surfaces`` for
     nodes that must appear as singletons."""
     from kgx.util import local_frame
 
-    roots = min_components(((r["a"], r["b"]) for r in edge_rows), extra_surfaces)
+    roots = min_components(edge_rows, extra_surfaces)
     # 's:' namespace: label spaces of the three producers (driver surface-min,
     # distributed 'h:'+hash, isolated 's:'+surface) are disjoint BY CONSTRUCTION
     # — a raw surface that literally looks like another path's label (e.g.

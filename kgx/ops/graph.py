@@ -325,7 +325,7 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = PR_ITERS,
     """nodes(node), edges(src, dst, weight) -> (node, rank) after ``iters``
     weighted power iterations from a uniform start; dangling mass is dropped
     (the oracle mirrors that definition exactly). ``nodes`` holds each node
-    once.
+    once; no nodes give no rows.
 
     Two regimes, same rows. The node and edge lists are pinned together
     once, as one tagged graph relation, either way.
@@ -359,13 +359,13 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = PR_ITERS,
             [r[0] for r in rows if r[3]], [r[:3] for r in rows if not r[3]],
             iters, damping,
         )
-        return local_frame(
-            nodes.sparkSession, ranks, "node string, rank double not null"
-        ).select("node", F.round("rank", 6).alias("rank"))
+        return _local_ranks(nodes.sparkSession, ranks)
 
     nodes = g.filter("is_node").select(F.col("src").alias("node"))
     edges = g.filter(~F.col("is_node")).select("src", "dst", "weight")
     n = nodes.count()
+    if n == 0:
+        return _local_ranks(nodes.sparkSession, [])
     norm = edges.groupBy("src").agg(F.sum("weight").alias("out_w"))
     enorm = edges.join(norm, "src").select(
         "src", "dst", (F.col("weight") / F.col("out_w")).alias("share")
@@ -397,6 +397,13 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = PR_ITERS,
     return out
 
 
+def _local_ranks(spark, ranks: list) -> DataFrame:
+    """Driver-held (node, unrounded rank) rows as pagerank's result frame."""
+    return local_frame(spark, ranks, "node string, rank double not null").select(
+        "node", F.round("rank", 6).alias("rank")
+    )
+
+
 def _pagerank_on_driver(nodes: list, edges: list, iters: int, damping: float):
     """The distributed iteration's arithmetic on collected rows: shares are
     weight / out-weight of the src over ALL its edges; a src outside
@@ -405,6 +412,8 @@ def _pagerank_on_driver(nodes: list, edges: list, iters: int, damping: float):
     import math
 
     n = len(nodes)
+    if n == 0:
+        return []
     out_w: dict = {}
     for s, _, w in edges:
         out_w.setdefault(s, []).append(w)

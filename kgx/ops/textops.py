@@ -562,23 +562,29 @@ def t13_bm25_topk(spark: SparkSession, sf: str) -> DataFrame:
     """BM25 top-k documents per keyword — the retrieval-quality scorer a
     training-data pipeline uses to mine topical documents at corpus scale.
 
-    Fully relational (no UDFs): token explode -> tf per (keyword, doc) +
-    doc length, two broadcastable O(#keywords) aggregates (df, avgdl), a
-    whole-corpus scalar N, then the BM25 formula in JVM expressions and a
-    per-keyword top-k window. Every shuffle is O(hits) or O(keywords); the
-    corpus-sized explode feeds a partial-aggregated groupBy. Exact DuckDB
-    oracle: idf/tf math is double-precision on both engines, rounded to 6
-    before ranking AND output (ties broken by doc_id, so the rank column is
-    deterministic even under last-ulp drift)."""
+    Fully relational (no UDFs), one projection of ``documents``: each doc's
+    token array gives its length ``dl`` and its keyword hits (the tokens
+    that are keywords, filtered in place, so only hits ever leave the row).
+    One aggregate over that projection returns the corpus scalars N and
+    SUM(dl) together (one ``first()``). The hits explode into
+    (keyword, doc_id, dl) rows whose count is ``tf``; ``df`` is a count
+    window over ``keyword``, and the per-keyword top-k rank window sorts
+    within the same keyword partitioning, so the two windows share one
+    exchange and no join runs at all (doc length rides along in the group
+    key). Every shuffle is O(hits); the corpus-sized pass feeds a
+    partial-aggregated groupBy. Exact DuckDB oracle: idf/tf math is
+    double-precision on both engines, rounded to 6 before ranking AND
+    output (ties broken by doc_id, so the rank column is deterministic even
+    under last-ulp drift)."""
     d = load(spark, sf, "documents")
-    kw = local_frame(spark, [(k,) for k in KEYWORDS], "keyword string")
-    toks = d.select(
-        "doc_id", F.explode(F.split("text", "\\s+")).alias("tok")
+    # _once: the filter lambda is interpreted (no codegen CSE), so an inline
+    # split would tokenize every document twice, once per consumer
+    toks = d.select("doc_id", _once(F.split("text", "\\s+")).alias("toks"))
+    docs = toks.select(
+        "doc_id",
+        F.size("toks").cast("double").alias("dl"),
+        F.filter("toks", lambda t: t.isin(KEYWORDS)).alias("hits"),
     )
-    doclen = d.select(
-        "doc_id", F.size(F.split("text", "\\s+")).cast("double").alias("dl")
-    )
-    n_docs = d.count()  # scalar: one job, O(metadata) on parquet row counts
     # avgdl as exact-sum / count, NOT avg(): dl values are integer-valued
     # doubles and sums of integer-valued doubles are EXACT in IEEE754 (below
     # 2^53) regardless of partial-sum order — so one final division is
@@ -586,30 +592,23 @@ def t13_bm25_topk(spark: SparkSession, sf: str) -> DataFrame:
     # (incremental mean vs sum/count) could drift an ulp and flip the
     # 6-decimal ROUND at a boundary (the per-corpus-parity caveat class the
     # t07 docstring documents). The oracle SQL mirrors SUM(dl)/COUNT(*).
-    srow = doclen.agg(F.sum("dl").alias("s"), F.count(F.lit(1)).alias("c")).first()
-    avgdl = float(srow["s"]) / float(srow["c"])
+    srow = docs.agg(F.sum("dl").alias("s"), F.count(F.lit(1)).alias("c")).first()
+    n_docs, avgdl = float(srow["c"]), float(srow["s"]) / float(srow["c"])
     tf = (
-        toks.join(F.broadcast(kw), F.col("tok") == F.col("keyword"))
-        .groupBy("keyword", "doc_id")
+        docs.select("doc_id", "dl", F.explode("hits").alias("keyword"))
+        .groupBy("keyword", "doc_id", "dl")
         .agg(F.count(F.lit(1)).cast("double").alias("tf"))
     )
-    df_ = tf.groupBy("keyword").agg(F.count(F.lit(1)).cast("double").alias("df"))
-    idf = F.log((F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-    scored = (
-        tf.join(F.broadcast(df_), "keyword")
-        .join(doclen, "doc_id")
-        .withColumn(
-            "score",
-            F.round(
-                idf
-                * (F.col("tf") * (BM25_K1 + 1))
-                / (
-                    F.col("tf")
-                    + BM25_K1 * (1 - BM25_B + BM25_B * F.col("dl") / avgdl)
-                ),
-                6,
-            ),
-        )
+    df_ = F.count(F.lit(1)).over(Window.partitionBy("keyword")).cast("double")
+    idf = F.log((F.lit(n_docs) - df_ + 0.5) / (df_ + 0.5) + 1.0)
+    scored = tf.withColumn(
+        "score",
+        F.round(
+            idf
+            * (F.col("tf") * (BM25_K1 + 1))
+            / (F.col("tf") + BM25_K1 * (1 - BM25_B + BM25_B * F.col("dl") / avgdl)),
+            6,
+        ),
     )
     w = Window.partitionBy("keyword").orderBy(F.desc("score"), F.asc("doc_id"))
     return (

@@ -8,9 +8,10 @@ from pyspark.sql import functions as F
 # The driver budget: how large a relation may get before an operator stops
 # holding it on the driver (rows AND utf-8 bytes; a row cap alone admits
 # multi-GB collects of long keys). The ceiling of every driver regime
-# (driver_rows); each site passes the cap measured for its own driver form
+# (fits_driver); each site passes the cap measured for its own driver form
 # against its distributed one (canon.DRIVER_CC_MAX_*, graph.PR_DRIVER_MAX_ROWS,
-# simsearch.IVF_DRIVER_MAX_VECTORS), which may only tighten it, so zeroing
+# simsearch.IVF_DRIVER_MAX_VECTORS), which may only tighten it, or none where
+# the driver form won up to this budget (canon.dedup_clusters), so zeroing
 # these two sends every driver regime to its distributed fallback at once.
 DRIVER_MAX_ROWS = 2_000_000
 DRIVER_MAX_BYTES = 256 * 1024 * 1024
@@ -131,10 +132,6 @@ def driver_rows(df: DataFrame, nbytes_expr, max_rows=None, max_bytes=None):
     from py4j.protocol import Py4JJavaError
     from pyspark.sql import Observation
 
-    cap_rows = DRIVER_MAX_ROWS if max_rows is None else min(max_rows, DRIVER_MAX_ROWS)
-    cap_bytes = (
-        DRIVER_MAX_BYTES if max_bytes is None else min(max_bytes, DRIVER_MAX_BYTES)
-    )
     size = Observation()
     metrics = (
         F.count(F.lit(1)).alias("n"),
@@ -146,6 +143,19 @@ def driver_rows(df: DataFrame, nbytes_expr, max_rows=None, max_bytes=None):
         n, nbytes = got["n"], got["nbytes"]
     except (KeyError, Py4JJavaError):
         n, nbytes = pinned.agg(*metrics).first()
-    if n <= cap_rows and nbytes <= cap_bytes:
+    if fits_driver(n, nbytes, max_rows, max_bytes):
         return pinned, pinned.collect()
     return pinned, None
+
+
+def fits_driver(n: int, nbytes: int, max_rows=None, max_bytes=None) -> bool:
+    """Whether ``n`` rows of ``nbytes`` utf-8 encoded bytes may be held on
+    the driver: within DRIVER_MAX_ROWS / DRIVER_MAX_BYTES and the site's own
+    caps, which may only tighten the shared budget. The one budget check of
+    every driver regime, for sizes measured executor-side (driver_rows'
+    observed pin, canon.dedup_clusters' signature-pass accumulators)."""
+    cap_rows = DRIVER_MAX_ROWS if max_rows is None else min(max_rows, DRIVER_MAX_ROWS)
+    cap_bytes = (
+        DRIVER_MAX_BYTES if max_bytes is None else min(max_bytes, DRIVER_MAX_BYTES)
+    )
+    return n <= cap_rows and nbytes <= cap_bytes

@@ -1,5 +1,5 @@
 """Small relations on the driver: local_frame, and the driver regimes of g05,
-s04 and g08 against their distributed fallbacks."""
+s04, g08 and t07 against their distributed fallbacks."""
 
 from __future__ import annotations
 
@@ -8,12 +8,13 @@ import pytest
 from test_graph import SF  # the sf0.001 driver tables test_graph reads
 
 from kgx import util
-from kgx.ops import graph, simsearch
+from kgx.ops import graph, simsearch, textops
 
 REGIME_QUERIES = {
     "g05_nation_pagerank": graph.g05_nation_pagerank,
     "s04_ann_ivf": simsearch.s04_ann_ivf,
     "g08_sameas_resolution": graph.g08_sameas_resolution,
+    "t07_minhash_clusters": textops.t07_minhash_clusters,
 }
 
 
@@ -134,23 +135,57 @@ def test_driver_regime_matches_forced_fallback(spark, monkeypatch, name):
 
 
 def test_driver_regime_job_counts(spark):
-    """Fixed cost of the three driver regimes, pinned as Spark jobs per call
-    on sf0.001 (the second call; the first warms the session): s04 4, g05
-    12, g08 8. The distributed forms they replace submitted 13, 30 and 15
-    jobs for the same calls: s04 pinned the quantized corpus, ran two
-    Lloyd rounds as UDF passes plus centroid-sum aggregates and a final
-    assignment pass, then probed and re-ranked under two windows; g05 ran
-    three unrolled join+sum rounds, a node count and a final pin; g08 ran
-    CC with a separate size probe, then the mapping aggregate, its pin and
-    a second size probe. What is left is one parquet schema job per table
-    load, the edge build's stages, one pin per gate and one collect."""
+    """Fixed cost of the driver regimes and of t13, pinned as Spark jobs
+    per call on sf0.001 (the second call; the first warms the session):
+    s04 3, g05 7, g08 5, t07 7, t13 5.
+
+    Before the tables were read with declared schemas (kgx.ops.TABLES)
+    every load submitted one parquet schema-inference job, and the same
+    calls took s04 4, g05 12, g08 8 (one, five and three table loads
+    more); t07 took 14 jobs with its blocking, verification and CC as
+    distributed joins, and t13 13 with a separate corpus count, an avgdl
+    aggregate and df/doclen joins. Before the driver regimes the
+    distributed forms took s04 13, g05 30, g08 15: s04 pinned the
+    quantized corpus, ran two Lloyd rounds as UDF passes plus
+    centroid-sum aggregates and a final assignment pass, then probed and
+    re-ranked under two windows; g05 ran three unrolled join+sum rounds, a
+    node count and a final pin; g08 ran CC with a separate size probe,
+    then the mapping aggregate, its pin and a second size probe. What is
+    left is the edge build's stages, one pin per gate and one collect (t07:
+    the signature pin, the reps' collect and the cluster window; t13: the
+    corpus-scalar aggregate, the tf aggregate and the shared window
+    exchange)."""
+    queries = {**REGIME_QUERIES, "t13_bm25_topk": textops.t13_bm25_topk}
     counts = {}
-    for name, fn in REGIME_QUERIES.items():
+    for name, fn in queries.items():
         fn(spark, SF).collect()
         _, counts[name] = _jobs(spark, lambda: fn(spark, SF).collect())
         spark.catalog.clearCache()
     assert counts == {
-        "s04_ann_ivf": 4,
-        "g05_nation_pagerank": 12,
-        "g08_sameas_resolution": 8,
+        "s04_ann_ivf": 3,
+        "g05_nation_pagerank": 7,
+        "g08_sameas_resolution": 5,
+        "t07_minhash_clusters": 7,
+        "t13_bm25_topk": 5,
     }
+
+
+@pytest.mark.parametrize("zero_budget", [False, True])
+def test_pagerank_on_no_nodes_returns_no_rows(spark, monkeypatch, zero_budget):
+    """A node frame filtered to nothing gives zero ranks with pagerank's
+    (node string, rank double) schema, in the driver regime and in the
+    distributed fallback alike (the uniform start 1/N has no N)."""
+    from pyspark.sql import functions as F
+
+    if zero_budget:
+        monkeypatch.setattr(util, "DRIVER_MAX_ROWS", 0)
+        monkeypatch.setattr(util, "DRIVER_MAX_BYTES", 0)
+    nodes = spark.createDataFrame([("a",), ("b",)], "node string").filter(
+        F.col("node") == "none"
+    )
+    edges = spark.createDataFrame([("a", "b", 1.0)], "src string, dst string, weight double")
+    out = graph.pagerank(nodes, edges)
+    assert out.collect() == []
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+        ("node", "string"), ("rank", "double"),
+    ]

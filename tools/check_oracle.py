@@ -4,22 +4,19 @@ Runs every __spark_entry__.queries() entry on Spark and its oracle_sql() on
 DuckDB over the same parquet, then compares row count, column names, and an
 order-insensitive value hash (columns sorted by name, rows sorted, values
 stringified). Usage:  python tools/check_oracle.py [sf_dir] [name ...]
+(from any working directory).
 """
 
 from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, ".")
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _norm(v) -> str:
@@ -47,7 +44,13 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
+    sys.path.insert(0, ROOT)
+    # the Python workers Spark starts inherit the environment, not sys.path
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
     import __spark_entry__ as entry
+    from kgx.ops import TABLES
     from kgx.session import get_spark
 
     spark = get_spark(master="local[8]", shuffle_partitions=16, app_name="oracle-check")

@@ -41,10 +41,13 @@ JACCARD_THRESHOLD = 0.4
 
 @dataclass(frozen=True)
 class CanonicalMapping:
-    """canonical_mapping's result: the (surface, rep) frame, plus the same
-    rows as driver-side tuples when the driver path built them (``rows`` is
-    None on the distributed path). Consumers holding ``rows`` skip the
-    localCheckpoint pin, the executor-side size probe and the collect, all
+    """A (surface, rep) relation: canonical_mapping's result, or the store's
+    entity dictionary (TripleStore.known_entities, where the union of
+    snapshots need not be one rep per surface). ``df`` is the frame and
+    ``rows`` the same rows as driver-side tuples when the relation lives on
+    the driver (the driver path built it, or the store read its snapshots
+    with pyarrow); None on the distributed path. Consumers holding ``rows``
+    skip the localCheckpoint pin, the executor-side size probe and the collect, all
     pure latency for a dictionary that already lives on the driver. Carried
     as a value, not as an attribute on the DataFrame, which any
     ``.select()`` would silently drop."""
@@ -732,7 +735,9 @@ def verified_edges(pairs: DataFrame, threshold: float = JACCARD_THRESHOLD) -> Da
 # the driver process peaking near 1.2 GB at 2M
 DRIVER_CC_MAX_EDGES = 2_000_000
 DRIVER_CC_MAX_BYTES = 256 * 1024 * 1024
-DRIVER_CANON_MAX_SURFACES = 1000  # collect threshold for whole-mapping fast path
+# the driver regime of the canonical mapping (all-pairs on the driver) and of
+# the store's entity dictionary (TripleStore.known_entities)
+DRIVER_CANON_MAX_SURFACES = 1000
 
 
 def _py_shingles(surface: str, shingle: str, k: int = 3) -> frozenset[str]:
@@ -771,19 +776,16 @@ def min_components(pairs, nodes=()) -> dict[str, str]:
     return {s: find(s) for s in parent}
 
 
-def _driver_canonical_mapping(spark, surfaces, known, shingle, threshold):
+def _driver_canonical_mapping(spark, names, known_pairs, shingle, threshold):
     """Pure-driver exact mapping for small dictionaries (same semantics as the
     distributed path: exact-Jaccard >= threshold edges, known-group edges,
-    sticky known reps, min-(norm,surface) representative). ``surfaces`` is the
-    ALREADY-COLLECTED node list (the caller's path probe collects it once —
-    round 7 removed the count-then-collect double execution)."""
+    sticky known reps, min-(norm,surface) representative). ``names`` is the
+    sorted node list (the batch's surfaces plus every known surface and rep)
+    and ``known_pairs`` the known (surface, rep) rows, both already on the
+    driver: canonical_mapping collected them once, or the store read them."""
     from kgx import kernel
     from kgx.util import local_frame
 
-    known_pairs = (
-        [(r["surface"], r["rep"]) for r in known.collect()] if known is not None else []
-    )
-    names = sorted({*surfaces, *(x for pair in known_pairs for x in pair)})
     shs = {s: _py_shingles(s, shingle) for s in names}
     edges = list(known_pairs)
     for i, a in enumerate(names):
@@ -810,6 +812,25 @@ def _driver_canonical_mapping(spark, surfaces, known, shingle, threshold):
     return CanonicalMapping(
         local_frame(spark, rows, "surface string, rep string"), rows
     )
+
+
+def mention_surfaces(mentions: DataFrame) -> list[str] | None:
+    """The distinct ``surface`` values of ``mentions`` on the driver, or None
+    when the mention rows do not fit the driver budget (kgx.util.fits_driver).
+    One bounded collect: ``limit(DRIVER_MAX_ROWS + 1)`` over the raw mention
+    rows, deduplicated on the driver, so an over-budget batch stops at the
+    cap. Collected through Arrow: a limit executed as a plan is one job
+    whose map stage runs every partition at once, where ``collect()``'s
+    incremental take scans one partition first and then the rest (two
+    jobs). On a streaming epoch this is the job that first materializes the
+    persisted facts."""
+    from kgx import util
+
+    table = mentions.select("surface").limit(util.DRIVER_MAX_ROWS + 1).toArrow()
+    got = table.column(0).to_pylist()
+    if not util.fits_driver(len(got), sum(len(s.encode()) for s in got)):
+        return None
+    return list(dict.fromkeys(got))
 
 
 def driver_edge_rows(edges: DataFrame):
@@ -1065,10 +1086,11 @@ def _distributed_cc(nodes: DataFrame, edges: DataFrame, max_iter: int = 40) -> D
 
 def canonical_mapping(
     mentions: DataFrame,
-    known: DataFrame | None = None,
+    known: CanonicalMapping | DataFrame | None = None,
     shingle: str = "char",
     bucket_cap: int | None = None,
     n_bands: int = N_BANDS,
+    surfaces: list[str] | None = None,
 ) -> CanonicalMapping:
     """mentions(surface,...) -> (surface, rep): representative per component.
 
@@ -1081,30 +1103,64 @@ def canonical_mapping(
     contains previously-assigned reps keeps the smallest of them, so triples
     committed in earlier runs stay consistent with new ones.
 
+    Two regimes, same mapping:
+
+    - driver: the node set (the batch's distinct mentions plus every known
+      surface and rep) fits DRIVER_CANON_MAX_SURFACES and the driver budget
+      (kgx.util.fits_driver), and the exact all-pairs mapping runs on the
+      driver. When ``known`` carries driver ``rows`` (the store's
+      driver-regime dictionary, a streaming run's cached mapping) the probe
+      collects only the batch's mentions (mention_surfaces) — or nothing
+      when the caller already holds them and passes them as ``surfaces`` —
+      and the known pairs are read from the rows, never collected.
+    - distributed: MinHash-LSH blocking + connected components, for a node
+      set over the cap. A ``known`` held only as a frame (the store's
+      dictionary over its driver budget) is probed first: one bounded
+      ``limit(cap + 1)`` collect of its distinct union with the mentions
+      decides the regime and, under the cap, already holds the node list.
+
     Returns a CanonicalMapping; its ``rows`` are set only on the driver path.
     """
+    from kgx.util import fits_driver
+
+    if isinstance(known, DataFrame):
+        known = CanonicalMapping(known)
     nodes = mentions.select("surface").distinct()
     if known is not None:
-        nodes = nodes.unionByName(known.select("surface")).unionByName(
-            known.select(F.col("rep").alias("surface"))
+        nodes = nodes.unionByName(known.df.select("surface")).unionByName(
+            known.df.select(F.col("rep").alias("surface"))
         ).distinct()
-    # size the stage to the dictionary, not the session: a few-thousand-surface
-    # dictionary on 64 shuffle partitions means every downstream stage pays for
-    # dozens of empty tasks (measured: the whole mapping phase was SLOWER on 32
-    # cores than 8 before this). The path probe collects a bounded
-    # limit(cap+1) slice — ONE job that both decides the path and, on the
-    # driver path, already holds the node list (round 7: count() followed by
-    # a second collect() of the same distinct ran the whole upstream twice).
-    probe = nodes.limit(DRIVER_CANON_MAX_SURFACES + 1).collect()
-    if len(probe) <= DRIVER_CANON_MAX_SURFACES:
+    pairs = None
+    if known is None or known.rows is not None:
+        pairs = known.rows if known is not None else []
+        if surfaces is None:
+            surfaces = mention_surfaces(mentions)
+        names = None if surfaces is None else sorted(
+            {*surfaces, *(x for pair in pairs for x in pair)}
+        )
+    else:
+        # one limit(cap+1) collect both decides the path and holds the node
+        # list (count() then collect() would run the upstream twice)
+        names = sorted(
+            r[0] for r in nodes.limit(DRIVER_CANON_MAX_SURFACES + 1).collect()
+        )
+    if names is not None and fits_driver(
+        len(names), sum(len(s.encode()) for s in names), DRIVER_CANON_MAX_SURFACES
+    ):
         # tiny dictionary: ~10 near-empty distributed jobs cost more scheduler
         # latency than the whole computation — do exact all-pairs on the driver
         # (strictly more candidate recall than LSH blocking, same exact-Jaccard
-        # gate, same rep rule)
+        # gate, same rep rule; the all-pairs Jaccard is quadratic, hence the
+        # site cap)
+        if pairs is None:
+            pairs = [(r["surface"], r["rep"]) for r in known.df.collect()]
         return _driver_canonical_mapping(
-            mentions.sparkSession, [r[0] for r in probe], known, shingle,
-            JACCARD_THRESHOLD,
+            mentions.sparkSession, names, pairs, shingle, JACCARD_THRESHOLD
         )
+    # size the stage to the dictionary, not the session: a few-thousand-surface
+    # dictionary on 64 shuffle partitions means every downstream stage pays for
+    # dozens of empty tasks (measured: the whole mapping phase was SLOWER on 32
+    # cores than 8 before this)
     n = nodes.count()
     # ~250 surfaces per task: signature computation is ~ms per surface for
     # document-sized strings, so tasks stay in the 0.1-1s sweet spot; capped at
@@ -1116,7 +1172,7 @@ def canonical_mapping(
     edges = verified_edges(candidate_pairs(surf, bucket_cap=bucket_cap, n_bands=n_bands))
     if known is not None:
         known_edges = (
-            known.filter(F.col("surface") != F.col("rep"))
+            known.df.filter(F.col("surface") != F.col("rep"))
             .select(F.col("surface").alias("a"), F.col("rep").alias("b"))
             .distinct()
         )
@@ -1131,7 +1187,7 @@ def canonical_mapping(
     if known is not None:
         sticky = (
             with_norm.join(
-                known.select(F.col("rep").alias("surface")).distinct(), "surface"
+                known.df.select(F.col("rep").alias("surface")).distinct(), "surface"
             )
             .groupBy("component")
             .agg(F.min(F.struct("norm", "surface")).alias("_k"))

@@ -29,7 +29,10 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kgx.util import local_frame
+from kgx import canon
+from kgx.util import fits_driver, local_frame
+
+_ENTITY_SCHEMA = "surface string, rep string"
 
 
 def bucket_col(url_col, n_buckets: int):
@@ -81,11 +84,13 @@ class TripleStore:
 
     # -- atomic parquet publish (shared by sidecar / stage / entities / map) --
     def _publish_parquet(
-        self, df: DataFrame, tmp_name: str, final_path: str, replace: bool = False
+        self, data, tmp_name: str, final_path: str, replace: bool = False
     ) -> None:
-        """Write ``df`` as parquet to a ROOT-level tmp dir, then rename(2)
+        """Write ``data`` as parquet to a ROOT-level tmp dir, then rename(2)
         into place — the atomic-publish idiom every parquet artifact of the
-        store uses. ``tmp_name`` MUST carry one of vacuum()'s swept prefixes
+        store uses. ``data`` is a DataFrame (a Spark write) or a pyarrow
+        Table held on the driver (one file written with pyarrow, no Spark
+        job). ``tmp_name`` MUST carry one of vacuum()'s swept prefixes
         (``_tmp-`` / ``_stage-tmp-`` / ``_ent-tmp-``): a crash between write
         and rename leaves an orphan that the grace-windowed sweep reclaims,
         and keeping the publish here keeps that naming contract in ONE place
@@ -95,7 +100,13 @@ class TripleStore:
         import shutil
 
         tmp = os.path.join(self.root, tmp_name)
-        df.write.mode("overwrite").parquet(tmp)
+        if isinstance(data, DataFrame):
+            data.write.mode("overwrite").parquet(tmp)
+        else:
+            import pyarrow.parquet as pq
+
+            os.makedirs(tmp)
+            pq.write_table(data, os.path.join(tmp, "part-00000.parquet"))
         if replace:
             shutil.rmtree(final_path, ignore_errors=True)
         os.rename(tmp, final_path)
@@ -168,16 +179,26 @@ class TripleStore:
         return done
 
     # -- write ---------------------------------------------------------------
-    def _write_content_sidecar(self, unit_id: str, content: DataFrame) -> None:
+    def _write_content_sidecar(
+        self, unit_id: str, content: DataFrame | list[str]
+    ) -> None:
         """Per-unit distinct-content_sha index, published with the same
         tmp+rename pattern as data (the `_tmp-` prefix keeps crash orphans
         inside vacuum()'s sweep). Probing committed content then costs a scan
         of these slim sidecars — the O(1)-per-probe semantics of the
         reference's Redis content cache (initial_pipeline/app.py:70-81) at
         snapshot-store scale — instead of re-reading every committed unit's
-        triple data per probe."""
+        triple data per probe. ``content`` is a frame with a ``content_sha``
+        column, or the shas as a driver-side list (written with pyarrow)."""
+        if isinstance(content, DataFrame):
+            data = content.select("content_sha").distinct()
+        else:
+            import pyarrow as pa
+
+            shas = pa.array(sorted(set(content)), pa.string())
+            data = pa.table({"content_sha": shas})
         self._publish_parquet(
-            content.select("content_sha").distinct(),
+            data,
             f"_tmp-content-{unit_id}",
             os.path.join(self.content_dir, f"unit={unit_id}"),
         )
@@ -186,7 +207,7 @@ class TripleStore:
         self,
         triples: DataFrame,
         buckets: list[int],
-        content: DataFrame | None = None,
+        content: DataFrame | list[str] | None = None,
         epoch: int | None = None,
         stream_id: str | None = None,
     ) -> str:
@@ -204,7 +225,9 @@ class TripleStore:
         EVERY content hash processed into this unit — pass it when some inputs
         legitimately yield zero triples (a page with no extractable facts must
         still register, or ingest-time dedup re-extracts it forever). Defaults
-        to the distinct content_sha of the triples themselves.
+        to the distinct content_sha of the triples themselves. A list of sha
+        strings (shas the caller already holds on the driver) writes the
+        sidecar with pyarrow, with no Spark job.
 
         ``epoch``: optional streaming micro-batch id recorded in the manifest
         — the idempotence key that lets a replayed foreachBatch epoch (crash
@@ -681,21 +704,68 @@ class TripleStore:
             shutil.rmtree(d)
 
     # -- persistent entity dictionary (cross-run canonicalization stickiness) ---
-    def known_entities(self, spark: SparkSession) -> DataFrame | None:
-        parts = [
-            os.path.join(self.entities_dir, d)
-            for d in sorted(os.listdir(self.entities_dir))
-            if not d.startswith("_")
+    def _entity_dirs(self) -> list[str]:
+        return sorted(d for d in os.listdir(self.entities_dir) if not d.startswith("_"))
+
+    def _entity_rows(self, dirs: list[str]) -> list[tuple[str, str]] | None:
+        """The distinct (surface, rep) rows of the snapshot ``dirs``, read
+        with pyarrow, when the snapshots fit the dictionary's driver budget
+        (canon.DRIVER_CANON_MAX_SURFACES rows and kgx.util.fits_driver); else
+        None. The size comes from the parquet footers (row counts and
+        uncompressed row-group bytes), so an over-budget dictionary is never
+        read: zero Spark jobs either way. The footer rows sum over the
+        snapshots, an upper bound on the distinct union."""
+        import pyarrow.parquet as pq
+
+        files = [
+            os.path.join(self.entities_dir, d, f)
+            for d in dirs
+            for f in sorted(os.listdir(os.path.join(self.entities_dir, d)))
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
         ]
-        if not parts:
+        metas = [pq.read_metadata(f) for f in files]
+        n = sum(m.num_rows for m in metas)
+        nbytes = sum(
+            m.row_group(i).total_byte_size
+            for m in metas
+            for i in range(m.num_row_groups)
+        )
+        if not fits_driver(n, nbytes, canon.DRIVER_CANON_MAX_SURFACES):
             return None
+        rows: dict[tuple[str, str], None] = {}
+        for f in files:
+            with pq.ParquetFile(f) as pf:
+                t = pf.read(columns=["surface", "rep"])
+            rows.update(dict.fromkeys(zip(*(c.to_pylist() for c in t.columns))))
+        return list(rows)
+
+    def known_entities(self, spark: SparkSession) -> canon.CanonicalMapping | None:
+        """The entity dictionary: the distinct union of every snapshot, or
+        None on a store without one. Two regimes:
+
+        - driver: when the snapshots fit the driver budget (sized from their
+          footers, _entity_rows), the rows are read with pyarrow and come
+          back as ``rows`` with a ``local_frame`` over them — no Spark job,
+          and canonical_mapping reads the known pairs from the rows;
+        - distributed: over the budget, a lazy parquet read of every
+          snapshot dir with a distinct, as before.
+
+        The union is not necessarily a function: a surface whose cluster a
+        later mapping merged appears with its old and its new rep."""
+        dirs = self._entity_dirs()
+        if not dirs:
+            return None
+        rows = self._entity_rows(dirs)
+        if rows is not None:
+            frame = local_frame(spark, rows, _ENTITY_SCHEMA)
+            return canon.CanonicalMapping(frame, rows)
         # explicit schema: a snapshot can legitimately be EMPTY (a first
         # epoch whose batch carried no entity mentions stages an empty
         # mapping, which adopt_entities links in verbatim), and a part-less
         # parquet dir defeats schema inference (review r6)
-        return (
-            spark.read.schema("surface string, rep string")
-            .parquet(*parts)
+        return canon.CanonicalMapping(
+            spark.read.schema(_ENTITY_SCHEMA)
+            .parquet(*[os.path.join(self.entities_dir, d) for d in dirs])
             .select("surface", "rep")
             .distinct()
         )
@@ -703,7 +773,9 @@ class TripleStore:
     def stage_mapping(self, mapping: DataFrame, run: str, epoch: int) -> str:
         """Durably materialize one run-scoped canonical mapping under
         ``mapping_cache/<run>-<epoch>`` and return the path — the streaming
-        epoch loop's task-recoverable substitute for localCheckpoint-ing the
+        epoch's distributed regime only (a mapping the driver built is held
+        as rows and written by save_entities, with no staging): its
+        task-recoverable substitute for localCheckpoint-ing the
         mapping (the entities dir can't serve: save_entities' fold may
         delete the snapshot it just wrote, and the snapshot UNION is not a
         one-rep-per-surface function). One write executes the LSH+CC plan
@@ -750,9 +822,14 @@ class TripleStore:
                 shutil.rmtree(os.path.join(d, name), ignore_errors=True)
 
     def save_entities(
-        self, mapping: DataFrame, fold_max_dirs: int | None = None
+        self,
+        mapping: canon.CanonicalMapping | DataFrame,
+        fold_max_dirs: int | None = None,
     ) -> None:
         """Persist a (surface, rep) dictionary snapshot as a new directory.
+        A canon.CanonicalMapping with driver ``rows`` is written from the
+        rows with pyarrow (no Spark job); a frame by a Spark write. Either way it
+        publishes through the ``_ent-tmp-`` tmp dir and rename.
 
         ``fold_max_dirs``: when set, and the snapshot count now exceeds it,
         fold every snapshot into ONE directory. save_entities appends one dir
@@ -760,13 +837,21 @@ class TripleStore:
         stream that never calls vacuum() would otherwise accumulate O(epochs)
         dirs and re-union them every batch — the fold bounds both the dir
         count and the per-probe read to O(fold_max_dirs)."""
+        if isinstance(mapping, DataFrame):
+            mapping = canon.CanonicalMapping(mapping)
+        if mapping.rows is not None:
+            import pyarrow as pa
+
+            surface, rep = zip(*mapping.rows) if mapping.rows else ((), ())
+            data = pa.table({"surface": pa.array(surface, pa.string()),
+                             "rep": pa.array(rep, pa.string())})
+        else:
+            data = mapping.df.select("surface", "rep")
         key = self._new_key()
         self._publish_parquet(
-            mapping.select("surface", "rep"),
-            f"_ent-tmp-{key}",
-            os.path.join(self.entities_dir, key),
+            data, f"_ent-tmp-{key}", os.path.join(self.entities_dir, key)
         )
-        self._maybe_fold(mapping.sparkSession, fold_max_dirs)
+        self._maybe_fold(mapping.df.sparkSession, fold_max_dirs)
 
     def adopt_entities(
         self,
@@ -775,13 +860,13 @@ class TripleStore:
         fold_max_dirs: int | None = None,
     ) -> None:
         """Adopt an already-materialized (surface, rep) parquet directory —
-        the streaming loop's just-staged mapping (stage_mapping writes
-        exactly the save_entities column set) — as a new entity snapshot
-        WITHOUT re-executing a Spark write: hard-link the files into an
-        ``_ent-tmp-`` dir and rename, the same atomic publish as
-        save_entities at zero dictionary I/O and zero extra Spark jobs
-        (review r6: each mapping-bearing epoch previously wrote the
-        identical dictionary twice). The links keep the snapshot's bytes
+        in the streaming epoch's distributed regime, its just-staged mapping
+        (stage_mapping writes exactly the save_entities column set) — as a
+        new entity snapshot WITHOUT re-executing a Spark write: hard-link
+        the files into an ``_ent-tmp-`` dir and rename, the same atomic
+        publish as save_entities at zero dictionary I/O and zero extra Spark
+        jobs (a Spark write of the staged mapping would write the same
+        dictionary twice). The links keep the snapshot's bytes
         alive after the source entry is deleted by stage_mapping
         supersession or clear_mapping_cache; a cross-filesystem link error
         falls back to a copy. ``fold_max_dirs`` as in save_entities."""
@@ -801,26 +886,21 @@ class TripleStore:
         self._maybe_fold(spark, fold_max_dirs)
 
     def _maybe_fold(self, spark: SparkSession, fold_max_dirs: int | None) -> None:
-        if fold_max_dirs is None:
-            return
-        n = sum(1 for d in os.listdir(self.entities_dir) if not d.startswith("_"))
-        if n > fold_max_dirs:
+        if fold_max_dirs is not None and len(self._entity_dirs()) > fold_max_dirs:
             self._fold_entities(spark)
 
     def _fold_entities(self, spark: SparkSession) -> int:
         """Rewrite the distinct union of every entity snapshot into ONE
         directory (write-new-then-delete-old — a crash between the two leaves
-        duplicates, which the reader's distinct() tolerates). Returns the
-        number of directories folded away."""
+        duplicates, which the reader's distinct() tolerates). A dictionary
+        in the driver regime folds on the driver (pyarrow read and write).
+        Returns the number of directories folded away."""
         import shutil
 
-        ent_dirs = sorted(
-            d for d in os.listdir(self.entities_dir) if not d.startswith("_")
-        )
+        ent_dirs = self._entity_dirs()
         if len(ent_dirs) <= 1:
             return 0
-        merged = self.known_entities(spark)
-        self.save_entities(merged)
+        self.save_entities(self.known_entities(spark))
         for d in ent_dirs:
             shutil.rmtree(os.path.join(self.entities_dir, d), ignore_errors=True)
         return len(ent_dirs)

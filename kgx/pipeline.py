@@ -170,8 +170,9 @@ def canonicalize_proponents(
     (caught by verification: 2-unit run disagreed with the one-shot run on
     ~2.6%% of proponent triples until the mapping was hoisted). A plain
     DataFrame is accepted; a CanonicalMapping carrying driver-side ``rows``
-    (canon.canonical_mapping's driver path, or the streaming epoch's staged
-    read-back) skips the size probe and the collect below.
+    (canon.canonical_mapping's driver path, or the store's driver-regime
+    dictionary reused by a streaming epoch that skipped canonicalization)
+    skips the size probe and the collect below.
 
     Two physical regimes, byte-equal output (asserted in tests):
 
@@ -365,12 +366,15 @@ def run_checkpointed(
             F.explode("surfaces").alias("surface")
         )
         mentions = m if mentions is None else mentions.unionByName(m)
+    # a dictionary within the driver budget comes back as driver rows
+    # (TripleStore.known_entities), so the mapping's probe collects only the
+    # staged mentions and the snapshot below is written from the rows
     known = store.known_entities(spark)
     mapping = _pinned(canon.canonical_mapping(mentions, known=known))
     # persist BEFORE commits: a run killed mid-phase-C resumes with the exact
     # same representative assignment (mapping is deterministic given its node
     # set, and the saved dictionary carries the full node set forward)
-    store.save_entities(mapping.df)
+    store.save_entities(mapping)
 
     # phase C: commit each staged unit with the shared mapping
     unit_ids = []

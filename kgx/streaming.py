@@ -29,17 +29,11 @@ from pyspark.sql import functions as F
 
 from kgx import canon, pipeline
 from kgx.schema import PAGES
-from kgx.util import bounded_stats, content_sha_col, spread
+from kgx.util import content_sha_col, driver_rows, local_frame, spread
 
 # entity-dictionary snapshots are folded into one dir past this count, so an
 # un-vacuumed long-running stream holds O(1) dirs, not O(epochs)
 ENTITY_FOLD_MAX_DIRS = 16
-
-# budgets for the skip-canonicalization probe's forced broadcast of the
-# per-batch mention set (F.broadcast bypasses autoBroadcastJoinThreshold, so
-# the guard must live here); over-budget batches take the full path
-SKIP_PROBE_MAX_MENTIONS = 1_000_000
-SKIP_PROBE_MAX_BYTES = 64 * 1024 * 1024
 
 
 def _stream_run_id(store) -> str | None:
@@ -58,10 +52,9 @@ def _stream_run_id(store) -> str | None:
 
 class _EpochCaches:
     """Cross-epoch caches for ONE ingest run: the committed-content sha set
-    and the entity dictionary, held as (persisted) DataFrames and extended
-    incrementally per micro-batch instead of re-read from the store's
-    sidecars / entity dirs on every epoch (round-4 review: the per-epoch
-    probe was metadata-sized but still O(units) forever).
+    and the entity dictionary, extended incrementally per micro-batch
+    instead of re-read from the store's sidecars / entity dirs on every
+    epoch (a per-epoch probe is metadata-sized but still O(units) forever).
 
     The content cache is built lazily. The seed from the sidecars is
     persisted but not counted: the epoch's dedup anti join materializes it.
@@ -81,17 +74,23 @@ class _EpochCaches:
     stream query. The persisted union on top is plain persist:
     evicted/lost blocks rebuild from the sidecar reads.
 
-    The ENTITY cache's leaf is likewise durable: each mapping-bearing epoch
-    stages its mapping to the store's ``mapping_cache/`` scratch
-    (TripleStore.stage_mapping — one execution of LSH+CC into parquet) and
-    the cache holds the read-back frame, together with the mapping's
-    driver-side rows when the driver path built it (``entity_rows``).
-    Re-reading the entities-dir snapshot instead would NOT be safe —
-    save_entities' fold can delete the dir it just wrote, and the folded
-    union of snapshots is not a function (one rep per surface) — hence the
-    dedicated scratch. Net: every frame this cache holds across epochs
-    recomputes from disk on block loss; no cross-epoch state lives only in
-    executor memory."""
+    The ENTITY cache (``entities``, a canon.CanonicalMapping) has two
+    regimes, following the mapping the epoch computed:
+
+    - driver: the store's dictionary fit the driver budget
+      (TripleStore.known_entities read it with pyarrow) and the mapping was
+      built on the driver, so the cache holds its rows and a
+      ``local_frame`` over them. Nothing is staged, persisted or read back;
+      no cross-epoch state lives on executors, so block loss cannot touch
+      it.
+    - distributed: each mapping-bearing epoch stages its mapping to the
+      store's ``mapping_cache/`` scratch (TripleStore.stage_mapping — one
+      execution of LSH+CC into parquet) and the cache holds the persisted
+      read-back. Re-reading the entities-dir snapshot instead would NOT be
+      safe — save_entities' fold can delete the dir it just wrote, and the
+      folded union of snapshots is not a function (one rep per surface) —
+      hence the dedicated scratch. Every frame this cache holds across
+      epochs recomputes from disk on block loss."""
 
     REBASE_EVERY = 32
 
@@ -100,8 +99,7 @@ class _EpochCaches:
         self._content_loaded = False
         self._content_probes = 0
         self._pending_units: list[str] = []
-        self.entities: DataFrame | None = None
-        self.entity_rows: list[tuple[str, str]] | None = None
+        self.entities: canon.CanonicalMapping | None = None
         self._entities_loaded = False
         # True only when `entities` is a mapping THIS run computed (one rep
         # per surface); the store-seeded union of snapshots may not be
@@ -154,7 +152,9 @@ class _EpochCaches:
         ends."""
         self._pending_units.append(unit_id)
 
-    def known_entities(self, spark: SparkSession, store) -> DataFrame | None:
+    def known_entities(
+        self, spark: SparkSession, store
+    ) -> canon.CanonicalMapping | None:
         if not self._entities_loaded:
             self.entities = store.known_entities(spark)
             self._entities_loaded = True
@@ -165,23 +165,26 @@ class _EpochCaches:
         canonical_mapping(known=...) carries every known surface AND rep into
         its node set, so its output is a superset of the prior dictionary.
 
-        The read-back is persisted MEMORY_AND_DISK (review r6): the skip
-        probe, regime probe, broadcast build, and canonicalize join all act
-        on it every epoch, and an unpersisted frame re-scans the staged
-        parquet per action; block loss still recomputes from the durable
-        parquet, so persisting strictly dominates. The superseded frame —
-        the prior epoch's persisted mapping, or the unpersisted store-seeded
-        union — derives from disk, not from the new frame, so it can be
-        dropped without materializing the new one first."""
+        A distributed mapping (the staged read-back) is persisted
+        MEMORY_AND_DISK: the skip probe, broadcast build and
+        canonicalize join act on it every epoch, and an unpersisted frame
+        re-scans the staged parquet per action; block loss still recomputes
+        from the durable parquet, so persisting strictly dominates. A
+        driver mapping is its rows and needs no persist. The superseded
+        frame derives from disk or from driver rows, not from the new one,
+        so it can be dropped without materializing the new one first."""
         from pyspark import StorageLevel
 
         old = self.entities
-        self.entities = mapping.df.persist(StorageLevel.MEMORY_AND_DISK)
-        self.entity_rows = mapping.rows
+        if mapping.rows is None:
+            mapping = canon.CanonicalMapping(
+                mapping.df.persist(StorageLevel.MEMORY_AND_DISK)
+            )
+        self.entities = mapping
         self._entities_loaded = True
         self.entities_canonical = True
         if old is not None:
-            old.unpersist()
+            old.df.unpersist()
 
     def release(self) -> None:
         """Drop every persisted block AND reset the loaded flags — a caches
@@ -193,9 +196,8 @@ class _EpochCaches:
         self._content_probes = 0
         self._pending_units = []
         if self.entities is not None:
-            self.entities.unpersist()
+            self.entities.df.unpersist()
         self.entities = None
-        self.entity_rows = None
         self._entities_loaded = False
         self.entities_canonical = False
 
@@ -324,7 +326,7 @@ def _process_epoch(
     crashing a live stream checkpoint).
 
     ``caches`` (optional, supplied by ingest_available_now) holds the
-    known-content and entity-dictionary DataFrames across epochs so the
+    known-content frame and the entity dictionary across epochs so the
     store's sidecars / entity dirs are read once per run, not once per
     micro-batch; None falls back to per-call store reads (the standalone
     test/replay path).
@@ -348,10 +350,10 @@ def _process_epoch(
     if store.is_epoch_committed(epoch_id, stream_id,
                                 include_legacy=honor_legacy_epochs):
         return None
-    if not batch_df.take(1):
+    # dedup mode learns emptiness from its pin below, at no job of its own
+    if not dedup_content and not batch_df.take(1):
         return None
     t = _mark("guard", t)
-    batch_shas = None
     if dedup_content:
         from pyspark.sql import Window
 
@@ -372,14 +374,22 @@ def _process_epoch(
         if known is not None:
             keyed = keyed.join(known, "content_sha", "left_anti")
         # pin ONE execution of the dedup subplan (sha2 over full html +
-        # window + anti-join): the emptiness probe, the extraction chain,
-        # and the commit-time sidecar write below would otherwise each
-        # re-run it per micro-batch
-        keyed = keyed.localCheckpoint()
-        batch_shas = keyed.select("content_sha")
-        batch_df = keyed.drop("content_sha")
-        if not batch_df.take(1):
+        # window + anti-join): the extraction chain and the commit-time
+        # sidecar would otherwise each re-run it per micro-batch. The pin's
+        # own pass sizes its content_sha column (driver_rows); when the shas
+        # fit the driver budget they are collected and the commit writes
+        # the sidecar from them with no Spark job, and an empty list is the
+        # emptiness check. Over the budget the batch is non-empty and the
+        # sidecar is a Spark write of the pin's column.
+        keyed, shas = driver_rows(
+            keyed, F.octet_length("content_sha"), cols=["content_sha"]
+        )
+        if shas is not None and not shas:
             return None
+        batch_shas = (
+            keyed.select("content_sha") if shas is None else [r[0] for r in shas]
+        )
+        batch_df = keyed.drop("content_sha")
     else:
         # commit()'s contract holds in BOTH modes: every processed content
         # hash registers, INCLUDING pages yielding zero facts — otherwise a
@@ -429,9 +439,9 @@ def _finish_epoch(
     )
     # steady-state shortcut: a batch whose every mention is already in the
     # dictionary cannot change the clustering (the mapping is a pure function
-    # of the node set, and the node set is unchanged), so the whole LSH + CC
-    # stage — O(dictionary) work per micro-batch — is skipped and the cached
-    # mapping reused as-is; no new entity snapshot is written either. On a
+    # of the node set, and the node set is unchanged), so canonicalization —
+    # O(dictionary) work per micro-batch — is skipped and the cached mapping
+    # reused as-is; no new entity snapshot is written either. On a
     # long-running stream over a recurring entity population this is the
     # common case: only epochs that actually introduce surfaces pay for
     # canonicalization. Gated on entities_canonical: the reuse is only sound
@@ -439,58 +449,35 @@ def _finish_epoch(
     # for a mapping this run computed, NOT for the store-seeded union of
     # snapshots, which can carry both the old and new rep for a surface
     # whose cluster a later epoch merged. So the first mapping-bearing epoch
-    # of each run always runs the full path.
+    # of each run always runs the full path. The batch's distinct mentions
+    # are collected once, under the driver budget; a mention set over it
+    # takes the full path, which handles any size.
+    surfaces = None
     skip = False
     if caches is not None and caches.entities_canonical and known is not None:
-        # probe shape matters at scale: a left_anti would SHUFFLE the whole
-        # dictionary (anti builds the right side, and the dictionary is too
-        # big to broadcast); broadcasting the per-batch mention set into an
-        # inner join instead scans the dictionary in place — no exchange —
-        # and compares hit count to mention count. The broadcast is guarded
-        # by row AND byte budgets computed executor-side (F.broadcast forces
-        # the hash join regardless of autoBroadcastJoinThreshold, so an
-        # unguarded giant-backlog epoch would OOM the driver); an over-budget
-        # mention set just takes the full canonicalization path, which
-        # handles any size. The distinct is persisted for the probe's two
-        # actions (and the broadcast build) and unpersisted right after —
-        # plain persist, not localCheckpoint: lineage-recoverable AND
-        # deterministically released, so epochs leave no one-use blocks.
-        from pyspark import StorageLevel
-
-        m = mentions.distinct().persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            stats = bounded_stats(
-                m, SKIP_PROBE_MAX_MENTIONS, F.octet_length("surface")
-            )
-            if (
-                stats["n"] <= SKIP_PROBE_MAX_MENTIONS
-                and stats["nbytes"] <= SKIP_PROBE_MAX_BYTES
-            ):
-                n_hit = (
-                    known.join(F.broadcast(m), "surface")
-                    .select("surface").distinct().count()
-                )
-                skip = n_hit == stats["n"]
-        finally:
-            m.unpersist()
+        surfaces = canon.mention_surfaces(mentions)
+        if surfaces is not None:
+            skip = _all_known(spark, surfaces, known)
     if skip:
-        mapping = canon.CanonicalMapping(known, caches.entity_rows)
+        mapping = known
     else:
-        # durable leaf (round 6): the mapping is written ONCE to the store's
-        # run-scoped scratch (one execution of LSH+CC) and read back as
-        # plain parquet — every cross-epoch frame the cache holds is now
-        # task-level recoverable, where the round-5 localCheckpoint died
-        # with its executor. The entity snapshot then ADOPTS the staged
-        # files by hardlink (no second Spark write of the same dictionary).
-        # A driver-built mapping's rows ride along with the read-back, so
-        # the rewrite needs no size probe and no collect.
-        computed = canon.canonical_mapping(mentions, known=known)
-        staged = store.stage_mapping(computed.df, stream_id or "run", epoch_id)
-        mapping = canon.CanonicalMapping(
-            spark.read.schema("surface string, rep string").parquet(staged),
-            computed.rows,
-        )
-        store.adopt_entities(spark, staged, fold_max_dirs=ENTITY_FOLD_MAX_DIRS)
+        mapping = canon.canonical_mapping(mentions, known=known, surfaces=surfaces)
+        if mapping.rows is not None:
+            # driver regime: the snapshot is written from the rows (pyarrow,
+            # no Spark job) and the cache keeps the rows themselves
+            store.save_entities(mapping, fold_max_dirs=ENTITY_FOLD_MAX_DIRS)
+        else:
+            # distributed regime, a durable leaf: the mapping is
+            # written ONCE to the store's run-scoped scratch (one execution
+            # of LSH+CC) and read back as plain parquet, so every
+            # cross-epoch frame the cache holds is task-level recoverable.
+            # The entity snapshot then ADOPTS the staged files by hardlink
+            # (no second Spark write of the same dictionary).
+            staged = store.stage_mapping(mapping.df, stream_id or "run", epoch_id)
+            mapping = canon.CanonicalMapping(
+                spark.read.schema("surface string, rep string").parquet(staged)
+            )
+            store.adopt_entities(spark, staged, fold_max_dirs=ENTITY_FOLD_MAX_DIRS)
         if caches is not None:
             caches.set_entities(mapping)
     t = _mark("canon", t)
@@ -507,6 +494,19 @@ def _finish_epoch(
         # cache would only grow the queue
         caches.extend_content(unit)
     return unit
+
+
+def _all_known(spark, surfaces: list[str], known: canon.CanonicalMapping) -> bool:
+    """Whether every batch surface is already in the dictionary: a set
+    check when the dictionary lives on the driver; else the dictionary is
+    scanned in place against a broadcast of the (driver-budgeted) surfaces —
+    a left_anti would SHUFFLE the whole dictionary — and the distinct hits
+    are counted."""
+    if known.rows is not None:
+        return {s for s, _ in known.rows}.issuperset(surfaces)
+    batch = local_frame(spark, [(s,) for s in surfaces], "surface string")
+    hits = known.df.join(F.broadcast(batch), "surface").select("surface").distinct()
+    return hits.count() == len(surfaces)
 
 
 def pages_stream(spark: SparkSession, pages_dir: str) -> DataFrame:

@@ -107,14 +107,16 @@ def local_frame(spark, rows, schema) -> DataFrame:
     return spark.createDataFrame(table, struct)
 
 
-def driver_rows(df: DataFrame, nbytes_expr, max_rows=None, max_bytes=None):
+def driver_rows(df: DataFrame, nbytes_expr, max_rows=None, max_bytes=None, cols=None):
     """The gate of every driver regime: returns ``(pinned, rows)``, where
     ``pinned`` is ``df`` materialized once (localCheckpoint) and ``rows``
     are its rows collected to the driver when they fit the driver budget
     (DRIVER_MAX_ROWS / DRIVER_MAX_BYTES, or the site's tighter caps), else
     None — the caller then runs its distributed form over ``pinned``.
     ``nbytes_expr`` sizes one row in utf-8 encoded bytes, as for
-    bounded_stats.
+    bounded_stats. ``cols`` collects only those columns of the pin (size
+    them alone in ``nbytes_expr``); an empty frame always fits, so rows
+    of None also mean the frame is not empty.
 
     The size check costs no pass of its own: the row and byte counts ride
     on the pin's own execution as an Observation, executor-side, so nothing
@@ -144,7 +146,7 @@ def driver_rows(df: DataFrame, nbytes_expr, max_rows=None, max_bytes=None):
     except (KeyError, Py4JJavaError):
         n, nbytes = pinned.agg(*metrics).first()
     if fits_driver(n, nbytes, max_rows, max_bytes):
-        return pinned, pinned.collect()
+        return pinned, (pinned.select(*cols) if cols else pinned).collect()
     return pinned, None
 
 

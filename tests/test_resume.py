@@ -230,7 +230,7 @@ def test_vacuum_removes_orphans_and_compacts_entities(spark, small_pages, tmp_pa
         os.makedirs(os.path.join(store.root, orphan), exist_ok=True)
     assert len([d for d in os.listdir(store.entities_dir) if not d.startswith("_")]) >= 2
 
-    before_entities = {tuple(r) for r in store.known_entities(spark).collect()}
+    before_entities = {tuple(r) for r in store.known_entities(spark).df.collect()}
     before_triples = _triple_set(store.read(spark))
 
     # default grace window protects freshly-created tmp dirs (a racing writer)
@@ -242,7 +242,7 @@ def test_vacuum_removes_orphans_and_compacts_entities(spark, small_pages, tmp_pa
     stats = store.vacuum(spark, grace_s=0.0)
     assert stats["orphans_removed"] >= 3
 
-    assert {tuple(r) for r in store.known_entities(spark).collect()} == before_entities
+    assert {tuple(r) for r in store.known_entities(spark).df.collect()} == before_entities
     assert _triple_set(store.read(spark)) == before_triples
     assert len([d for d in os.listdir(store.entities_dir) if not d.startswith("_")]) == 1
     assert not any(n.startswith("_tmp-") for n in os.listdir(store.root))
@@ -503,5 +503,5 @@ def test_empty_entity_snapshot_readable(spark, tmp_path):
     # a later real snapshot unions fine with the empty one
     m = spark.createDataFrame([("a", "a")], "surface string, rep string")
     store.save_entities(m)
-    assert {(r.surface, r.rep) for r in store.known_entities(spark).collect()} \
+    assert {(r.surface, r.rep) for r in store.known_entities(spark).df.collect()} \
         == {("a", "a")}

@@ -585,7 +585,7 @@ def test_all_known_mentions_skip_canonicalization(spark, tmp_path, monkeypatch):
         spark, store, b2, 2, False, stream_id="r", caches=caches) is not None
     assert calls["n"] == 2, "novel-surface batch did not re-canonicalize"
     assert len(ent_dirs()) == n_dirs + 1
-    surfaces = {r.surface for r in store.known_entities(spark).collect()}
+    surfaces = {r.surface for r in store.known_entities(spark).df.collect()}
     assert any("Zyxq Consolidated" in s for s in surfaces)
     caches.release()
 
@@ -633,6 +633,19 @@ def test_content_cache_survives_block_loss_mid_run(spark, tmp_path):
     committed content instead of failing or double-committing. The round-5
     localCheckpoint leaves were non-recoverable by construction: clearing
     them destroyed the only copy of the data."""
+    _epochs_across_block_loss(spark, tmp_path)
+
+
+def test_distributed_entity_cache_survives_block_loss(
+    spark, tmp_path, distributed_dictionary
+):
+    """The same block loss with the dictionary in its distributed regime:
+    the entity cache's leaf is then the staged-mapping parquet, which the
+    persisted read-back recomputes from."""
+    _epochs_across_block_loss(spark, tmp_path)
+
+
+def _epochs_across_block_loss(spark, tmp_path):
     import pandas as pd
 
     pages = fixtures.gen_pages(9)
@@ -648,9 +661,10 @@ def test_content_cache_survives_block_loss_mid_run(spark, tmp_path):
     # drop every persisted/checkpointed block — the outer persisted union AND
     # any leaf blocks — via the JVM persistent-RDD registry (DataFrame-level
     # unpersist alone would leave leaf blocks alive and prove nothing). BOTH
-    # caches must survive: content leaves are sidecar reads, the entity leaf
-    # is the staged-mapping parquet (round-6 stage_mapping), so nothing the
-    # caches hold across epochs lives only in executor memory.
+    # caches must survive: content leaves are sidecar reads, the entity
+    # cache is driver rows (over the driver budget, the staged-mapping
+    # parquet), so nothing the caches hold across epochs lives only in
+    # executor memory.
     for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
         jrdd.unpersist(True)
     assert caches.entities is not None and caches.entities_canonical
@@ -693,7 +707,7 @@ def test_entity_dirs_stay_bounded_across_epochs(spark, tmp_path, monkeypatch):
         assert len(ent_dirs()) <= 4, f"epoch {ep}: {len(ent_dirs())} dirs"
         # folding must never LOSE dictionary entries: the surface set is
         # monotone nondecreasing across epochs and folds
-        surfaces = {r.surface for r in store.known_entities(spark).collect()}
+        surfaces = {r.surface for r in store.known_entities(spark).df.collect()}
         assert surfaces >= prev_surfaces, prev_surfaces - surfaces
         prev_surfaces = surfaces
     assert prev_surfaces
@@ -846,11 +860,25 @@ def test_dedup_only_epochs_still_rebase(spark, tmp_path, monkeypatch):
     caches.release()
 
 
-def test_entity_snapshot_adopted_from_staged_mapping(spark, tmp_path):
-    """A mapping-bearing epoch must publish its entity snapshot by ADOPTING
-    the just-staged mapping files (hardlink — same inodes, no second Spark
-    write of the dictionary), and the snapshot must survive the scratch
-    entry's deletion at run end."""
+@pytest.fixture
+def distributed_dictionary(monkeypatch):
+    """Force the entity dictionary's distributed regime (the fallback over
+    the driver budget): with the dictionary's driver cap zeroed the store
+    reads its snapshots with Spark, the mapping runs LSH+CC, and the epoch
+    stages, adopts and persists it. The batch's mention rows are still
+    collected, so a skip epoch runs the broadcast probe."""
+    from kgx import canon
+
+    monkeypatch.setattr(canon, "DRIVER_CANON_MAX_SURFACES", 0)
+
+
+def test_entity_snapshot_adopted_from_staged_mapping(
+    spark, tmp_path, distributed_dictionary
+):
+    """Distributed regime: a mapping-bearing epoch must publish its entity
+    snapshot by ADOPTING the just-staged mapping files (hardlink — same
+    inodes, no second Spark write of the dictionary), and the snapshot must
+    survive the scratch entry's deletion at run end."""
     import pandas as pd
 
     pages = fixtures.gen_pages(5)
@@ -874,17 +902,18 @@ def test_entity_snapshot_adopted_from_staged_mapping(spark, tmp_path):
                    for n in os.listdir(snap_dir)}
     assert snap_inodes == staged_inodes, "snapshot is a re-write, not an adopt"
 
-    expected = {(r.surface, r.rep) for r in caches.entities.collect()}
+    expected = {(r.surface, r.rep) for r in caches.entities.df.collect()}
     caches.release()
     store.clear_mapping_cache()
     got = {(r.surface, r.rep)
-           for r in store.known_entities(spark).collect()}
+           for r in store.known_entities(spark).df.collect()}
     assert got == expected, "snapshot did not survive scratch deletion"
 
 
-def test_run_end_clears_mapping_scratch(spark, tmp_path):
-    """ingest_available_now must clear the run's staged-mapping scratch in
-    its finally block: a store ingested once and then served read-only must
+def test_run_end_clears_mapping_scratch(spark, tmp_path, distributed_dictionary):
+    """Distributed regime: ingest_available_now must clear the run's
+    staged-mapping scratch in its finally block: a store ingested once and
+    then served read-only must
     not keep a dictionary-sized mapping_cache parquet forever (vacuum
     deliberately never sweeps it)."""
     pages = fixtures.gen_pages(6)
@@ -967,10 +996,34 @@ def test_non_dedup_epoch_registers_all_content(spark, tmp_path):
     caches2.release()
 
 
-def _arrival_epoch_jobs(spark, tmp_path):
+def _watch_canon_gap(monkeypatch, store, dag) -> dict:
+    """Record the scheduler's next job id when the batch's mention collect
+    (canon.mention_surfaces) returns and when store.commit is entered: equal
+    ids mean no Spark job ran between the two."""
+    from kgx import canon
+
+    marks: dict = {}
+    collect, commit = canon.mention_surfaces, store.commit
+
+    def mention_surfaces(*a, **k):
+        out = collect(*a, **k)
+        marks["mentions"] = dag.nextJobId()
+        return out
+
+    def watched_commit(*a, **k):
+        marks["commit"] = dag.nextJobId()
+        return commit(*a, **k)
+
+    monkeypatch.setattr(canon, "mention_surfaces", mention_surfaces)
+    store.commit = watched_commit
+    return marks
+
+
+def _arrival_epoch_jobs(spark, tmp_path, monkeypatch):
     """Spark jobs submitted by one warm dedup epoch over a 24-page batch
     (4 of them mirrors of committed content), counted with the scheduler's
-    next-job-id window (perfbench/trace.py's attribution)."""
+    next-job-id window (perfbench/trace.py's attribution), and the marks of
+    _watch_canon_gap."""
     import pandas as pd
 
     pages = fixtures.gen_pages(40)
@@ -990,25 +1043,192 @@ def _arrival_epoch_jobs(spark, tmp_path):
                for i, p in enumerate(pages[:4])]
     batch = spark.createDataFrame(pd.DataFrame(pages[20:] + mirrors))
     dag = spark.sparkContext._jsc.sc().dagScheduler()
+    marks = _watch_canon_gap(monkeypatch, store, dag)
     lo = dag.nextJobId()
     unit = streaming._process_epoch(
         spark, store, batch, 1, True, stream_id="run-j", caches=caches)
     jobs = dag.nextJobId() - lo
+    assert caches.entities.rows is not None, "dictionary left the driver regime"
     caches.release()
     assert unit is not None
-    return jobs
+    return jobs, marks
 
 
-def test_arrival_epoch_job_count(spark, tmp_path):
+def test_arrival_epoch_job_count(spark, tmp_path, monkeypatch):
     """Fixed per-arrival cost, pinned as a job count: a warm
-    _process_epoch(dedup_content=True, caches=...) submits 21 Spark jobs
-    for this batch. The previous implementation submitted 31 for the same
-    batch: it localCheckpointed the rewritten triples and aggregated them
-    (the violation counters) before the commit, persisted and counted the
-    content-cache seed, folded the committed unit into the cache at once
-    (a persisted, counted union the run released right after), and probed
-    and collected a mapping whose rows the driver already held."""
-    assert _arrival_epoch_jobs(spark, tmp_path) == 21
+    _process_epoch(dedup_content=True, caches=...) submits 13 Spark jobs
+    for this batch, 21 before the entity dictionary stayed on the driver.
+    Those 21 were the dedup pin (5), an emptiness take (1), a 6-job path
+    probe over mentions UNION the known dictionary, known.collect() (2),
+    the staged-mapping write (1), the commit write (2), the violation
+    aggregate (2) and the content sidecar's distinct + write (2). Now the
+    pin sizes and collects its shas (1 job, also the emptiness check), the
+    mention collect is a 3-job bounded Arrow limit that first materializes
+    the facts, the dictionary and both sidecars are pyarrow reads/writes,
+    and no job runs between the mention collect and the commit write.
+    (31 before that, for the same batch: the rewritten triples were
+    localCheckpointed and aggregated before the commit, the content-cache
+    seed persisted and counted, the committed unit folded into the cache at
+    once, and a mapping whose rows the driver held probed and collected.)"""
+    jobs, marks = _arrival_epoch_jobs(spark, tmp_path, monkeypatch)
+    assert jobs == 13
+    assert marks["commit"] == marks["mentions"], (
+        f"{marks['commit'] - marks['mentions']} jobs between the mention "
+        "collect and the commit write"
+    )
+
+
+def test_skip_epoch_submits_no_canonicalization_job(spark, tmp_path, monkeypatch):
+    """Driver regime, all-known batch: after the mention collect the skip
+    is a driver set check — canonical_mapping is not called and no Spark
+    job runs before the commit write."""
+    import pandas as pd
+
+    from kgx import canon
+
+    pages = fixtures.gen_pages(6)
+    store = TripleStore(str(tmp_path / "store_skipjobs"), n_buckets=4)
+    store.claim_mode("streaming")
+    caches = streaming._EpochCaches()
+    assert streaming._process_epoch(
+        spark, store, spark.createDataFrame(pd.DataFrame(pages)), 0, False,
+        stream_id="r", caches=caches) is not None
+    calls = {"n": 0}
+    orig = canon.canonical_mapping
+
+    def spy(*a, **k):
+        calls["n"] += 1
+        return orig(*a, **k)
+
+    monkeypatch.setattr(streaming.canon, "canonical_mapping", spy)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    marks = _watch_canon_gap(monkeypatch, store, dag)
+    moved = [{**p, "url": p["url"].replace("/proj/", "/proj/9")} for p in pages]
+    assert streaming._process_epoch(
+        spark, store, spark.createDataFrame(pd.DataFrame(moved)), 1, False,
+        stream_id="r", caches=caches) is not None
+    caches.release()
+    assert calls["n"] == 0, "all-known batch re-ran canonical_mapping"
+    assert marks["commit"] == marks["mentions"]
+
+
+def test_driver_regime_epoch_stages_nothing(spark, tmp_path):
+    """Driver regime: the epoch keeps its mapping as rows, writes the entity
+    snapshot and the dedup content sidecar from driver rows (one pyarrow
+    file each, no Spark output) and never touches the mapping scratch."""
+    import pandas as pd
+
+    pages = fixtures.gen_pages(5)
+    store = TripleStore(str(tmp_path / "store_drv"), n_buckets=4)
+    store.claim_mode("streaming")
+    caches = streaming._EpochCaches()
+    unit = streaming._process_epoch(
+        spark, store, spark.createDataFrame(pd.DataFrame(pages)), 0, True,
+        stream_id="run-d", caches=caches)
+    assert unit is not None
+    rows = caches.entities.rows
+    assert rows
+    caches.release()
+    assert not os.path.exists(os.path.join(store.root, "mapping_cache"))
+    (snap,) = [d for d in os.listdir(store.entities_dir) if not d.startswith("_")]
+    assert os.listdir(os.path.join(store.entities_dir, snap)) == ["part-00000.parquet"]
+    t = pq.read_table(os.path.join(store.entities_dir, snap, "part-00000.parquet"))
+    assert set(zip(t.column("surface").to_pylist(), t.column("rep").to_pylist())) \
+        == set(rows)
+    side = os.path.join(store.content_dir, f"unit={unit}")
+    assert os.listdir(side) == ["part-00000.parquet"]
+    import hashlib
+
+    assert set(pq.read_table(os.path.join(side, "part-00000.parquet"))
+               .column("content_sha").to_pylist()) == {
+        hashlib.sha256(p["html"]).hexdigest() for p in pages
+    }
+
+
+def _stream_files(pages_dir, pages):
+    """Three arrivals: two fresh waves, then the first wave re-crawled at new
+    urls with a changed byte (new content, every mention already known)."""
+    recrawl = [{**p, "url": p["url"].replace("/proj/", "/proj/8"),
+                "html": p["html"] + b"\n"} for p in pages[:4]]
+    _write_pages(pages[:4], f"{pages_dir}/part-0.parquet")
+    _write_pages(pages[4:8], f"{pages_dir}/part-1.parquet")
+    _write_pages(recrawl, f"{pages_dir}/part-2.parquet")
+
+
+def test_forced_fallback_matches_driver_regime(spark, tmp_path, monkeypatch):
+    """A multi-epoch stream commits the same store, entity dictionary and
+    content index in the driver regime and in both forced fallbacks: the
+    dictionary's cap zeroed (distributed dictionary and LSH+CC mapping,
+    broadcast skip probe) and the whole driver budget zeroed (no mention
+    collect either, so every epoch canonicalizes; Spark-written sidecars)."""
+    from kgx import canon, util
+
+    pages_dir = str(tmp_path / "inbox_fb")
+    _stream_files(pages_dir, fixtures.gen_pages(8))
+
+    def run(name):
+        calls = {"n": 0}
+        orig = canon.canonical_mapping
+
+        def spy(*a, **k):
+            calls["n"] += 1
+            return orig(*a, **k)
+
+        with monkeypatch.context() as m:
+            m.setattr(streaming.canon, "canonical_mapping", spy)
+            if name == "dictionary_cap":
+                m.setattr(canon, "DRIVER_CANON_MAX_SURFACES", 0)
+            elif name == "driver_budget":
+                m.setattr(util, "DRIVER_MAX_ROWS", 0)
+                m.setattr(util, "DRIVER_MAX_BYTES", 0)
+            store = TripleStore(str(tmp_path / f"store_{name}"), n_buckets=4)
+            units = streaming.ingest_available_now(
+                spark, pages_dir, store, dedup_content=True,
+                max_files_per_trigger=1)
+        assert len(units) == 3
+        triples = {tuple(r) for r in store.read(spark)
+                   .select("subj", "pred", "obj", "src_url", "content_sha").collect()}
+        entities = {tuple(r) for r in store.known_entities(spark).df.collect()}
+        content = {r.content_sha for r in store.known_content(spark).collect()}
+        return (triples, entities, content), calls["n"]
+
+    driver, n_driver = run("driver")
+    assert n_driver == 2, "the recrawl epoch did not skip canonicalization"
+    cap, n_cap = run("dictionary_cap")
+    assert n_cap == 2, "the broadcast skip probe did not skip the recrawl"
+    budget, n_budget = run("driver_budget")
+    assert n_budget == 3
+    assert cap == driver
+    assert budget == driver
+
+
+@pytest.mark.parametrize("cap", ["rows", "bytes"])
+def test_over_budget_dictionary_is_never_collected(spark, tmp_path, monkeypatch, cap):
+    """A store whose snapshot footers exceed the dictionary's driver cap
+    (rows) or the driver byte budget comes back as a lazy Spark read: no
+    snapshot row is read on the driver, and the mapping over it runs
+    distributed without collecting the known pairs."""
+    from kgx import canon, util
+
+    store = TripleStore(str(tmp_path / "store_big"), n_buckets=2)
+    entries = [(f"Org {i}", "Org 0") for i in range(5)]
+    store.save_entities(spark.createDataFrame(entries, "surface string, rep string"))
+    if cap == "rows":
+        monkeypatch.setattr(canon, "DRIVER_CANON_MAX_SURFACES", 4)
+    else:
+        monkeypatch.setattr(util, "DRIVER_MAX_BYTES", 8)
+
+    def refuse(*a, **k):
+        raise AssertionError("an over-budget snapshot was read on the driver")
+
+    monkeypatch.setattr(pq.ParquetFile, "read", refuse)
+    known = store.known_entities(spark)
+    assert known.rows is None
+    assert {tuple(r) for r in known.df.collect()} == set(entries)
+    mentions = spark.createDataFrame([("Org 9",)], "surface string")
+    mapping = canon.canonical_mapping(mentions, known=known)
+    assert mapping.rows is None
+    assert {r.surface for r in mapping.df.collect()} == {s for s, _ in entries} | {"Org 9"}
 
 
 def test_content_sha_agrees_on_null_html(spark, tmp_path):

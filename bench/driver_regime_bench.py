@@ -169,14 +169,15 @@ OPS = {"g05": _g05, "s04": _s04, "g08": _g08, "t07": _t07}
 
 
 def _lift(monkey, forced_fallback):
-    """Module budgets for one form: all caps lifted, or the shared one zeroed."""
-    from kgx import canon, util
+    """Module budgets for one form: all caps lifted, or the shared one zeroed.
+    Lifting the shared budget lifts every broadcast ceiling with it (g08's
+    sameAs rewrite broadcasts its mapping at any size in the driver form)."""
+    from kgx import util
     from kgx.ops import graph, simsearch
 
     big = 10**12
     for mod, name in [
         (util, "DRIVER_MAX_ROWS"), (util, "DRIVER_MAX_BYTES"),
-        (canon, "DRIVER_CC_MAX_EDGES"), (canon, "DRIVER_CC_MAX_BYTES"),
         (graph, "PR_DRIVER_MAX_ROWS"), (simsearch, "IVF_DRIVER_MAX_VECTORS"),
     ]:
         monkey.setdefault((mod, name), getattr(mod, name))

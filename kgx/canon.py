@@ -45,10 +45,12 @@ class CanonicalMapping:
     entity dictionary (TripleStore.known_entities, where the union of
     snapshots need not be one rep per surface). ``df`` is the frame and
     ``rows`` the same rows as driver-side tuples when the relation lives on
-    the driver (the driver path built it, or the store read its snapshots
-    with pyarrow); None on the distributed path. Consumers holding ``rows``
-    skip the localCheckpoint pin, the executor-side size probe and the collect, all
-    pure latency for a dictionary that already lives on the driver. Carried
+    the driver: the driver path built it, the store read its snapshots with
+    pyarrow, or pipeline._pinned pinned a distributed mapping and collected
+    it within the driver budget (kgx.util.fits_driver). None means over
+    that budget, or not sized yet. Consumers holding ``rows`` skip the
+    localCheckpoint pin, the size measurement and the collect, all pure
+    latency for a dictionary that already lives on the driver. Carried
     as a value, not as an attribute on the DataFrame, which any
     ``.select()`` would silently drop."""
 
@@ -315,7 +317,7 @@ def _keyed_sig_gen(shingle: str, k: int = 3, counters=None):
     ``counters``: optional (row_acc, byte_acc) Spark accumulators filled with
     the emitted row count and payload bytes (id + hash arrays) — the size
     check of dedup_clusters' regime choice rides the signature job itself
-    instead of costing a separate bounded_stats action (round 7). Task
+    instead of costing a separate size-probe action (round 7). Task
     retries can only OVER-count, which fails toward the shuffle fallback —
     safe.
 
@@ -727,14 +729,6 @@ def verified_edges(pairs: DataFrame, threshold: float = JACCARD_THRESHOLD) -> Da
     )
 
 
-# row and byte caps of the union-find fast path (driver CC here and the g08
-# sameAs mapping); kgx.util.driver_rows applies them within the engine-wide
-# driver budget (kgx.util.DRIVER_MAX_*). g08's driver mapping measured
-# against its distributed CC (bench/driver_regime_bench.py g08, chains of 10,
-# local[4]): 3.5 s vs 13.9 s at 100k edges, 27 vs 58 at 1M, 28 vs 119 at 2M,
-# the driver process peaking near 1.2 GB at 2M
-DRIVER_CC_MAX_EDGES = 2_000_000
-DRIVER_CC_MAX_BYTES = 256 * 1024 * 1024
 # the driver regime of the canonical mapping (all-pairs on the driver) and of
 # the store's entity dictionary (TripleStore.known_entities)
 DRIVER_CANON_MAX_SURFACES = 1000
@@ -835,18 +829,15 @@ def mention_surfaces(mentions: DataFrame) -> list[str] | None:
 
 def driver_edge_rows(edges: DataFrame):
     """``(pinned, rows)``: the (a, b) edge frame pinned once, and its rows on
-    the driver when they fit the driver-CC budget (DRIVER_CC_MAX_*, within
-    the engine's driver budget kgx.util.DRIVER_MAX_*), else None. The gate
-    of the driver CC path here and of the sameAs driver mapping; utf-8
-    bytes are counted executor-side, on the pin's own pass, before anything
-    is collected (kgx.util.driver_rows)."""
+    the driver when they fit the engine's driver budget
+    (kgx.util.fits_driver), else None. The gate of the driver CC path here
+    and of the sameAs driver mapping; utf-8 bytes are counted
+    executor-side, on the pin's own pass, before anything is collected
+    (kgx.util.driver_rows)."""
     from kgx.util import driver_rows
 
     return driver_rows(
-        edges.select("a", "b"),
-        F.octet_length("a") + F.octet_length("b"),
-        DRIVER_CC_MAX_EDGES,
-        DRIVER_CC_MAX_BYTES,
+        edges.select("a", "b"), F.octet_length("a") + F.octet_length("b")
     )
 
 
@@ -871,8 +862,8 @@ def connected_components(
       relative to the corpus): collect the edge list and union-find on the
       driver — the iterative version costs ~10s of pure scheduler latency for
       a 40-node graph, which dominates small-corpus runs. The fast path is
-      gated on BOTH a row count and an estimated-bytes budget (a 2M-row limit
-      alone would admit multi-GB collects of long keys — round-1 review);
+      gated by the engine's driver budget, rows AND encoded bytes
+      (kgx.util.fits_driver, measured on the edge pin: driver_edge_rows);
     - large graphs: distributed large-star/small-star contraction with
       localCheckpoint per round to cut lineage (SURVEY.md §7 'What's hard');
       O(log n) rounds independent of component diameter; deterministic labels
@@ -899,11 +890,12 @@ def connected_components(
         comp = distributed_components(edges, max_iter)
     if nodes is None:
         return comp
-    # 's:' namespace (see _driver_cc): never collides with 'h:'+hash labels,
-    # and 's:'+isolated never equals 's:'+driver-label because isolated and
-    # touched surfaces are disjoint (the left join misses only untouched
-    # nodes). Round-7: one left join + coalesce replaces the anti-join +
-    # union — one exchange fewer, identical rows for every in-repo caller
+    # 's:' namespace (see _driver_cc_from_rows): never collides with
+    # 'h:'+hash labels, and 's:'+isolated never equals 's:'+driver-label
+    # because isolated and touched surfaces are disjoint (the left join
+    # misses only untouched nodes). Round-7: one left join + coalesce
+    # replaces the anti-join + union — one exchange fewer, identical rows
+    # for every in-repo caller
     # (their edge endpoints are always a subset of ``nodes``; endpoints
     # outside ``nodes`` would be dropped here where the union kept them,
     # which is the documented contract now).
@@ -948,13 +940,6 @@ def distributed_components(edges: DataFrame, max_iter: int = 40) -> DataFrame:
         .distinct()
     )
     return _distributed_cc(touched, edges, max_iter)
-
-
-def _driver_cc(nodes: DataFrame, edges: DataFrame) -> DataFrame:
-    surfaces = [r[0] for r in nodes.select("surface").distinct().collect()]
-    return _driver_cc_from_rows(
-        nodes.sparkSession, edges.select("a", "b").collect(), surfaces
-    )
 
 
 def _large_star(e: DataFrame) -> DataFrame:

@@ -56,7 +56,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgx.ops import load
-from kgx.util import bounded_stats, driver_rows, local_frame
+from kgx.util import driver_rows, fits_driver, local_frame, sized_pin
 
 # ---------------------------------------------------------------------------
 # shared triple construction (Spark + the mirroring SQL CTE)
@@ -132,15 +132,6 @@ G01_SQL = f"WITH {_TRIPLES_CTE} SELECT subj, pred, obj FROM triples"
 
 # --- g02: seeded 2-hop traversal (SPARQL-BGP-style chain) ------------------- #
 N_SEED_SUPPLIERS = 5
-
-# sameAs rewrite: broadcast the canonical mapping only within BOTH budgets
-# (rows AND encoded bytes — a row cap alone admits multi-GB broadcasts of
-# long surfaces); over budget the rewrite falls back to shuffle joins,
-# which stay correct at any mapping size. ~2M rows / 256 MB mirrors the
-# pipeline's proponent-dictionary budget: an alias population past that is
-# no longer "small dim" territory.
-SAMEAS_BROADCAST_MAX_ROWS = 2_000_000
-SAMEAS_BROADCAST_MAX_BYTES = 256 * 1024 * 1024
 
 
 def g02_two_hop_neighbors(spark: SparkSession, sf: str) -> DataFrame:
@@ -659,22 +650,22 @@ def resolve_sameas(triples: DataFrame, edges: DataFrame) -> DataFrame:
     coalesce below, so the mapping is alias-sized, never corpus-sized.
 
     Two regimes for the mapping, same rows:
-    - Driver (the pinned edge list fits the driver-CC budget,
+    - Driver (the pinned edge list fits the driver budget,
       kgx.canon.driver_edge_rows): union-find on the collected edges
       (kgx.canon.min_components; a component's root is its min surface) and
       the (surface, canon) rows return as a local frame, sized on the
       driver. No distributed CC, no mapping pin, no size probe.
     - Distributed (over budget): large-star CC over the same pinned edges
       (kgx.canon.distributed_components), then a min-surface aggregate and
-      join, pinned so CC runs once for both rewrite sides, and sized by an
-      executor-side probe.
-    Either way SAMEAS_BROADCAST_MAX_* decides the rewrite joins: within the
-    row+byte budget the mapping broadcasts and the corpus side never
-    shuffles for the rewrite (plan = the triple build + one distinct
-    exchange); over it both joins are sort-merge shuffles where only node
-    ids cross, never triple payloads (the hint also keeps a local frame the
-    planner could broadcast on its own from being broadcast past the
-    budget)."""
+      join, pinned so CC runs once for both rewrite sides, and sized on the
+      pin's own pass (kgx.util.sized_pin).
+    Either way the driver budget (kgx.util.fits_driver; a broadcast is held
+    on the driver) decides the rewrite joins: within it the mapping
+    broadcasts and the corpus side never shuffles for the rewrite (plan =
+    the triple build + one distinct exchange); over it both joins are
+    sort-merge shuffles where only node ids cross, never triple payloads
+    (the hint also keeps a local frame the planner could broadcast on its
+    own from being broadcast past the budget)."""
     from kgx.canon import distributed_components, driver_edge_rows, min_components
 
     edges, rows = driver_edge_rows(edges)
@@ -690,19 +681,14 @@ def resolve_sameas(triples: DataFrame, edges: DataFrame) -> DataFrame:
     else:
         comp = distributed_components(edges)
         rep = comp.groupBy("component").agg(F.min("surface").alias("canon"))
-        mapping = (
+        # pin: CC must not re-run per rewrite side
+        mapping, n, nbytes = sized_pin(
             comp.join(rep, "component")
             .filter(F.col("surface") != F.col("canon"))
-            .select("surface", "canon")
-            .localCheckpoint()  # pin: CC must not re-run per rewrite side
-        )
-        stats = bounded_stats(
-            mapping,
-            SAMEAS_BROADCAST_MAX_ROWS,
+            .select("surface", "canon"),
             F.octet_length("surface") + F.octet_length("canon"),
         )
-        n, nbytes = stats["n"], stats["nbytes"]
-    if n <= SAMEAS_BROADCAST_MAX_ROWS and nbytes <= SAMEAS_BROADCAST_MAX_BYTES:
+    if fits_driver(n, nbytes):
         mapping = F.broadcast(mapping)
     else:
         mapping = mapping.hint("merge")

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kgx.ops import load
-from kgx.util import local_frame, spread
+from kgx.util import fits_driver, local_frame, sized_pin, spread
 
 # small English stopword list shared verbatim with the SQL oracles
 STOPWORDS = ["the", "a", "an", "and", "or", "of", "to", "in", "is", "it"]
@@ -785,12 +785,6 @@ FROM m
 
 
 # --- corpus-LM negative log-likelihood (CCNet-style perplexity proxy) ------------------ #
-# row+byte budget for broadcasting the vocabulary frequency table (same
-# guarded-broadcast idiom as graph.SAMEAS_BROADCAST_* / streaming's skip probe)
-FREQ_BROADCAST_MAX_ROWS = 2_000_000
-FREQ_BROADCAST_MAX_BYTES = 64 * 1024 * 1024
-
-
 def t15_unigram_logprob(spark: SparkSession, sf: str) -> DataFrame:
     """Per-document mean negative log-probability under the corpus's own
     unigram LM — the CCNet/CC-100 perplexity-filter shape (Wenzek et al.
@@ -799,9 +793,11 @@ def t15_unigram_logprob(spark: SparkSession, sf: str) -> DataFrame:
     Scale shape: one corpus explode feeds a partially-aggregated
     groupBy(doc_id, tok); the vocabulary frequency table derives from THAT
     (O(vocab) rows, never re-scanning text) and joins back broadcast when it
-    fits a row+byte budget (real webtext vocabulary after this dedup is
-    ~10^7 rows — over budget it falls back to a shuffle join on tok, where
-    AQE's skew split handles the Zipf head). Determinism: each (doc, tok)
+    fits the engine's driver budget (kgx.util.fits_driver, rows AND bytes,
+    sized by the stats row the query already computes; real webtext
+    vocabulary after this dedup is ~10^7 rows — over budget it falls back
+    to a shuffle join on tok, where AQE's skew split handles the Zipf
+    head). Determinism: each (doc, tok)
     contribution is fixed-pointed to integer micro-nats BEFORE the per-doc
     sum, so the sum is exact integer arithmetic and immune to Spark's
     partial-aggregation ordering; the only residual cross-engine hazard is a
@@ -812,7 +808,7 @@ def t15_unigram_logprob(spark: SparkSession, sf: str) -> DataFrame:
     tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     freq = tf.groupBy("tok").agg(F.sum("tf").alias("cnt"))
     # ONE stats job serves both the total-token scalar and the broadcast
-    # budget probe (review round 6: a separate bounded_stats probe was a
+    # budget check (review round 6: a separate limit+count probe was a
     # second full evaluation of the explode+tf+freq pipeline — its limit()
     # cannot push below the aggregations, so it saved nothing). The final
     # join below re-derives freq once more; that recompute is deliberate
@@ -824,10 +820,7 @@ def t15_unigram_logprob(spark: SparkSession, sf: str) -> DataFrame:
         F.sum(F.octet_length("tok") + F.lit(8)).alias("nbytes"),
     ).first()
     total = float(stats["total"])
-    if (
-        stats["n"] <= FREQ_BROADCAST_MAX_ROWS
-        and stats["nbytes"] <= FREQ_BROADCAST_MAX_BYTES
-    ):
+    if fits_driver(stats["n"], stats["nbytes"] or 0):
         freq = F.broadcast(freq)
     contrib = F.round(
         F.col("tf") * F.log(F.col("cnt") / F.lit(total)) * 1_000_000.0, 0
@@ -975,11 +968,6 @@ FROM kept CROSS JOIN cuts
 DECON_GRAM_K = 5
 # deterministic "eval set": every 97th doc stands in for the benchmark corpus
 DECON_EVAL_MOD = 97
-# row+byte budget for broadcasting the eval gram set: a REAL benchmark suite
-# fits easily, but this op's self-contained eval carve is O(corpus/97), so an
-# unguarded broadcast would grow with the corpus (review round 6)
-EVAL_BROADCAST_MAX_ROWS = 2_000_000
-EVAL_BROADCAST_MAX_BYTES = 64 * 1024 * 1024
 
 
 def t18_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
@@ -990,17 +978,18 @@ def t18_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
     data; a real run would substitute the benchmark suite's texts.
 
     Scale shape: eval-side grams are O(eval corpus) — thousands of
-    benchmark docs for a real suite — distinct-ed and broadcast under a
-    row+byte budget (the self-contained doc_id%97 carve grows with the
-    corpus, so over budget the join falls back to a shuffle, pinned
-    identical), making the training-corpus side one map-side pass: tokens
-    behind the
-    evaluate-once barrier, the gram walk over the materialized token
-    attribute (_ngrams — an inline split in the lambda would re-tokenize
-    per gram position), explode, broadcast-hash-join, then one
-    groupBy(doc_id) that carries only (doc_id, gram) survivors. The
-    training corpus is never shuffled by gram; the only exchange is the
-    final per-doc count of O(matches) rows. Output: contaminated non-eval
+    benchmark docs for a real suite — distinct-ed, pinned once and sized on
+    that pass (kgx.util.sized_pin), and broadcast within the engine's
+    driver budget (kgx.util.fits_driver; the self-contained doc_id%97 carve
+    grows with the corpus, so over budget the join falls back to a shuffle
+    over the pin, pinned identical), making the training-corpus side one
+    map-side pass: tokens behind the evaluate-once barrier, the gram walk
+    over the materialized token attribute (_ngrams — an inline split in the
+    lambda would re-tokenize per gram position), explode,
+    broadcast-hash-join, then one groupBy(doc_id) that carries only
+    (doc_id, gram) survivors. The training corpus is never shuffled by
+    gram; past the pin, the only exchange is the final per-doc count of
+    O(matches) rows. Output: contaminated non-eval
     docs with their distinct shared-gram count."""
     d = load(spark, sf, "documents")
 
@@ -1017,15 +1006,8 @@ def t18_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
     train = grams_of(d.filter(F.col("doc_id") % DECON_EVAL_MOD != 0)).select(
         "doc_id", F.explode(F.array_distinct("grams")).alias("gram")
     )
-    from kgx.util import bounded_stats
-
-    probe = bounded_stats(
-        ev, EVAL_BROADCAST_MAX_ROWS, F.octet_length("gram") + F.lit(16)
-    )
-    if (
-        probe["n"] <= EVAL_BROADCAST_MAX_ROWS
-        and probe["nbytes"] <= EVAL_BROADCAST_MAX_BYTES
-    ):
+    ev, n, nbytes = sized_pin(ev, F.octet_length("gram") + F.lit(16))
+    if fits_driver(n, nbytes):
         ev = F.broadcast(ev)
     return (
         train.join(ev, "gram")

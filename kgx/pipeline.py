@@ -46,10 +46,6 @@ _REWRITE_SCHEMA = T.StructType(
 )
 
 
-BROADCAST_MAPPING_MAX = 2_000_000  # dictionary rows broadcastable to workers
-BROADCAST_MAPPING_MAX_BYTES = 256 * 1024 * 1024  # byte budget for the same dict
-
-
 def _rewrite_obj(obj: str, mapping) -> str:
     """Replace proponent organization_name values through ``mapping`` (any
     dict-like with __contains__/__getitem__) and re-emit canonical JSON."""
@@ -169,58 +165,38 @@ def canonicalize_proponents(
     unit-local representatives and drift from the corpus-wide canonicalization
     (caught by verification: 2-unit run disagreed with the one-shot run on
     ~2.6%% of proponent triples until the mapping was hoisted). A plain
-    DataFrame is accepted; a CanonicalMapping carrying driver-side ``rows``
-    (canon.canonical_mapping's driver path, or the store's driver-regime
-    dictionary reused by a streaming epoch that skipped canonicalization)
-    skips the size probe and the collect below.
+    DataFrame is accepted. The mapping passes through _pinned, the regime
+    gate: a CanonicalMapping already carrying driver-side ``rows``
+    (canon.canonical_mapping's driver path, the store's driver-regime
+    dictionary, or a mapping _pinned already sized, as run_checkpointed's
+    shared one) costs no Spark job here.
 
     Two physical regimes, byte-equal output (asserted in tests):
 
-    - dictionary <= BROADCAST_MAPPING_MAX rows (the norm — entity dictionaries
-      are vastly smaller than the corpus): ship it as a broadcast python dict
-      into an Arrow batch pass — zero shuffles (the explode -> join ->
+    - ``rows`` set, i.e. the dictionary fits the driver budget
+      (kgx.util.fits_driver; the norm — entity dictionaries are vastly
+      smaller than the corpus): ship it as a broadcast python dict into an
+      Arrow batch pass — zero shuffles (the explode -> join ->
       groupBy-collect shape shuffles every proponent fact twice and was a
       measurable non-scaling cost when used unconditionally);
-    - above the cap: the relational join rewrite (_rewrite_join) — slower but
-      scales to any dictionary size instead of raising (round-3 review: the
-      engine's one hard scale cliff was an error message)."""
+    - over the budget: the relational join rewrite (_rewrite_join) over the
+      pinned mapping — slower but scales to any dictionary size instead of
+      raising (round-3 review: the engine's one hard scale cliff was an
+      error message)."""
     props = facts.filter(F.col("pred") == "project_proponents")
     others = facts.filter(F.col("pred") != "project_proponents").select(
         "url", "warc_ts", "content_sha", "pred", "obj"
     )
     if mapping is None:
         mentions = props.select(F.explode("surfaces").alias("surface"))
-        mapping = _pinned(canon.canonical_mapping(mentions))
+        mapping = canon.canonical_mapping(mentions)
     elif isinstance(mapping, DataFrame):
         mapping = canon.CanonicalMapping(mapping)
-
-    # regime probe runs EXECUTOR-SIDE before any collect: a dictionary over
-    # either budget must route to the join path WITHOUT first being pulled
-    # onto the driver (see kgx.util.bounded_stats for the idiom's rationale).
-    # Driver-side rows are measured in place: the distributed probe would
-    # only add a job.
-    rows = mapping.rows
-    if rows is not None:
-        nbytes = sum(len(s.encode()) + len(r.encode()) for s, r in rows)
-        over = len(rows) > BROADCAST_MAPPING_MAX or nbytes > BROADCAST_MAPPING_MAX_BYTES
-    else:
-        from kgx.util import bounded_stats
-
-        stats = bounded_stats(
-            mapping.df,
-            BROADCAST_MAPPING_MAX,
-            F.octet_length("surface") + F.octet_length("rep"),
-        )
-        over = (
-            stats["n"] > BROADCAST_MAPPING_MAX
-            or stats["nbytes"] > BROADCAST_MAPPING_MAX_BYTES
-        )
-    if over:
+    mapping = _pinned(mapping)
+    if mapping.rows is None:
         rewritten = _rewrite_join(props, mapping.df)
     else:
-        if rows is None:
-            rows = [(r["surface"], r["rep"]) for r in mapping.df.collect()]
-        mapping_dict = {s: rep for s, rep in rows if s != rep}
+        mapping_dict = {s: rep for s, rep in mapping.rows if s != rep}
         bc = facts.sparkSession.sparkContext.broadcast(mapping_dict)
         rewritten = props.select(
             "url", "warc_ts", "content_sha", "pred", "obj"
@@ -229,13 +205,25 @@ def canonicalize_proponents(
 
 
 def _pinned(mapping: canon.CanonicalMapping) -> canon.CanonicalMapping:
-    """localCheckpoint a distributed mapping: its consumers (size probe,
-    rewrite, entity save) are separate actions that would otherwise each
-    re-run the whole LSH+CC pipeline. A driver-built mapping is returned as
-    is — re-"computing" it is free, so the checkpoint job is pure latency."""
+    """The proponent rewrite's regime gate. A mapping without driver
+    ``rows`` is pinned (localCheckpoint), sized on the pin's own pass and
+    collected when it fits the driver budget (kgx.util.driver_rows): its
+    consumers (rewrite, entity save) would otherwise each re-run the whole
+    LSH+CC pipeline, and the size is measured executor-side before any
+    collect, so a dictionary over the budget never reaches the driver.
+    The result's ``rows`` say which regime applies: set, the broadcast dict;
+    None, the join rewrite over the pin. A mapping already holding rows is
+    returned as is — re-"computing" it is free, so the pin is pure
+    latency."""
+    from kgx.util import driver_rows
+
     if mapping.rows is not None:
         return mapping
-    return canon.CanonicalMapping(mapping.df.localCheckpoint())
+    pinned, rows = driver_rows(
+        mapping.df.select("surface", "rep"),
+        F.octet_length("surface") + F.octet_length("rep"),
+    )
+    return canon.CanonicalMapping(pinned, rows)
 
 
 def extract_stage(
@@ -368,7 +356,9 @@ def run_checkpointed(
         mentions = m if mentions is None else mentions.unionByName(m)
     # a dictionary within the driver budget comes back as driver rows
     # (TripleStore.known_entities), so the mapping's probe collects only the
-    # staged mentions and the snapshot below is written from the rows
+    # staged mentions. The mapping is pinned and, within the driver budget,
+    # collected ONCE here: the snapshot below is written from its rows and
+    # every phase-C rewrite broadcasts them without another job
     known = store.known_entities(spark)
     mapping = _pinned(canon.canonical_mapping(mentions, known=known))
     # persist BEFORE commits: a run killed mid-phase-C resumes with the exact

@@ -7,39 +7,18 @@ from pyspark.sql import functions as F
 
 # The driver budget: how large a relation may get before an operator stops
 # holding it on the driver (rows AND utf-8 bytes; a row cap alone admits
-# multi-GB collects of long keys). The ceiling of every driver regime
-# (fits_driver); each site passes the cap measured for its own driver form
-# against its distributed one (canon.DRIVER_CC_MAX_*, graph.PR_DRIVER_MAX_ROWS,
-# simsearch.IVF_DRIVER_MAX_VECTORS), which may only tighten it, or none where
-# the driver form won up to this budget (canon.dedup_clusters), so zeroing
-# these two sends every driver regime to its distributed fallback at once.
+# multi-GB collects of long keys). Broadcasting a relation holds it on the
+# driver too, so every driver collect AND every broadcast decision asks
+# fits_driver. g08's driver mapping measured against its distributed CC
+# (bench/driver_regime_bench.py g08, chains of 10, local[4]): 3.5 s vs 13.9 s
+# at 100k edges, 27 vs 58 at 1M, 28 vs 119 at 2M, the driver process peaking
+# near 1.2 GB at 2M. Three sites pass a tighter cap measured for their own
+# driver form: graph.PR_DRIVER_MAX_ROWS and simsearch.IVF_DRIVER_MAX_VECTORS
+# (against the distributed form), canon.DRIVER_CANON_MAX_SURFACES (the
+# quadratic all-pairs mapping). Zeroing these two sends every driver and
+# broadcast regime to its distributed fallback at once.
 DRIVER_MAX_ROWS = 2_000_000
 DRIVER_MAX_BYTES = 256 * 1024 * 1024
-
-
-def bounded_stats(df: DataFrame, max_rows: int, nbytes_expr):
-    """Executor-side (count, byte-sum) probe over a ``limit(max_rows + 1)``
-    slice — the safe way to ask "is this frame within a row AND byte budget"
-    BEFORE any collect/broadcast of it.
-
-    The limit bounds the work; ``octet_length``-based ``nbytes_expr`` counts
-    utf-8 ENCODED bytes so multi-byte text can't undercount 2-4x; and doing
-    it as an aggregate keeps the probe off the driver — collecting cap+1
-    rows to measure them is itself the OOM the budget exists to prevent
-    (the collect-as-probe hazard, fixed repeatedly in review rounds 3-5;
-    this helper is the single home for the idiom).
-
-    Returns a Row with fields ``n`` and ``nbytes``. When ``n`` comes back
-    equal to ``max_rows + 1`` the frame is over-budget and the true count is
-    unknown (the slice stopped counting)."""
-    return (
-        df.limit(max_rows + 1)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum(nbytes_expr), F.lit(0)).alias("nbytes"),
-        )
-        .first()
-    )
 
 
 def spread(df: DataFrame) -> DataFrame:
@@ -107,24 +86,17 @@ def local_frame(spark, rows, schema) -> DataFrame:
     return spark.createDataFrame(table, struct)
 
 
-def driver_rows(df: DataFrame, nbytes_expr, max_rows=None, max_bytes=None, cols=None):
-    """The gate of every driver regime: returns ``(pinned, rows)``, where
-    ``pinned`` is ``df`` materialized once (localCheckpoint) and ``rows``
-    are its rows collected to the driver when they fit the driver budget
-    (DRIVER_MAX_ROWS / DRIVER_MAX_BYTES, or the site's tighter caps), else
-    None — the caller then runs its distributed form over ``pinned``.
-    ``nbytes_expr`` sizes one row in utf-8 encoded bytes, as for
-    bounded_stats. ``cols`` collects only those columns of the pin (size
-    them alone in ``nbytes_expr``); an empty frame always fits, so rows
-    of None also mean the frame is not empty.
-
-    The size check costs no pass of its own: the row and byte counts ride
-    on the pin's own execution as an Observation, executor-side, so nothing
-    reaches the driver before both budgets pass, and the collect reads the
-    pin. (A bounded_stats probe is two more jobs per gate, on a path where
-    each job is most of the latency.) The pin is the whole frame, not a
-    ``limit(cap + 1)`` slice: every distributed fallback reads the frame
-    again anyway, so it is materialized once for both.
+def sized_pin(df: DataFrame, nbytes_expr):
+    """``(pinned, n, nbytes)``: ``df`` materialized once (localCheckpoint),
+    with its row count and utf-8 encoded byte size (``nbytes_expr`` sizes
+    one row; ``octet_length`` counts encoded bytes, so multi-byte text
+    cannot undercount). The one executor-side measurement behind
+    fits_driver: the counts ride on the pin's own execution as an
+    Observation, so sizing costs no pass of its own and nothing reaches the
+    driver before the caller's budget check. (A separate ``limit(cap + 1)``
+    count probe is two more jobs per gate, on paths where each job is most
+    of the latency.) The pin is the whole frame, not a slice: every
+    consumer, driver collect or distributed fallback, reads it again.
 
     Should the observed metrics row not reach the driver (an Observation on
     a commit write once failed that way, BENCH/BASELINE.md round 6), the
@@ -142,22 +114,33 @@ def driver_rows(df: DataFrame, nbytes_expr, max_rows=None, max_bytes=None, cols=
     pinned = df.observe(size, *metrics).localCheckpoint()
     try:
         got = size.get
-        n, nbytes = got["n"], got["nbytes"]
+        return pinned, got["n"], got["nbytes"]
     except (KeyError, Py4JJavaError):
-        n, nbytes = pinned.agg(*metrics).first()
-    if fits_driver(n, nbytes, max_rows, max_bytes):
+        return (pinned, *pinned.agg(*metrics).first())
+
+
+def driver_rows(df: DataFrame, nbytes_expr, max_rows=None, cols=None):
+    """The gate of every driver regime: returns ``(pinned, rows)``, where
+    ``pinned`` is ``df`` materialized and sized once (sized_pin) and
+    ``rows`` are its rows collected to the driver when they fit the driver
+    budget (fits_driver, within the site's tighter row cap), else None — the
+    caller then runs its distributed form over ``pinned``. ``cols``
+    collects only those columns of the pin (size them alone in
+    ``nbytes_expr``); an empty frame always fits, so rows of None also mean
+    the frame is not empty."""
+    pinned, n, nbytes = sized_pin(df, nbytes_expr)
+    if fits_driver(n, nbytes, max_rows):
         return pinned, (pinned.select(*cols) if cols else pinned).collect()
     return pinned, None
 
 
-def fits_driver(n: int, nbytes: int, max_rows=None, max_bytes=None) -> bool:
+def fits_driver(n: int, nbytes: int, max_rows=None) -> bool:
     """Whether ``n`` rows of ``nbytes`` utf-8 encoded bytes may be held on
-    the driver: within DRIVER_MAX_ROWS / DRIVER_MAX_BYTES and the site's own
-    caps, which may only tighten the shared budget. The one budget check of
-    every driver regime, for sizes measured executor-side (driver_rows'
-    observed pin, canon.dedup_clusters' signature-pass accumulators)."""
+    the driver, as collected rows or as a broadcast: within DRIVER_MAX_ROWS
+    / DRIVER_MAX_BYTES and the site's own row cap, which may only tighten
+    the shared budget. The one budget check of every driver regime and every
+    broadcast decision, for sizes measured executor-side (sized_pin, an
+    aggregate the site already runs, canon.dedup_clusters' signature-pass
+    accumulators) or on rows already on the driver."""
     cap_rows = DRIVER_MAX_ROWS if max_rows is None else min(max_rows, DRIVER_MAX_ROWS)
-    cap_bytes = (
-        DRIVER_MAX_BYTES if max_bytes is None else min(max_bytes, DRIVER_MAX_BYTES)
-    )
-    return n <= cap_rows and nbytes <= cap_bytes
+    return n <= cap_rows and nbytes <= DRIVER_MAX_BYTES

@@ -7,7 +7,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from kgx import canon, fixtures, kernel
+from kgx import canon, fixtures, kernel, util
 
 
 def test_normalize_and_shingles_jvm_parity(spark):
@@ -92,7 +92,7 @@ def test_connected_components_chain(spark, impl):
 def test_cc_byte_guard_forces_distributed_path(spark, monkeypatch):
     """Edge lists under the row cap but over the byte budget must take the
     distributed path (driver collect is gated on BOTH)."""
-    monkeypatch.setattr(canon, "DRIVER_CC_MAX_BYTES", 0)
+    monkeypatch.setattr(util, "DRIVER_MAX_BYTES", 0)
     nodes = spark.createDataFrame([(s,) for s in "abcdef"], "surface string")
     edges = spark.createDataFrame([("a", "b"), ("c", "d")], "a string, b string")
     comp = canon.connected_components(nodes, edges)
@@ -200,7 +200,8 @@ def test_distributed_cc_long_chain_converges(spark, monkeypatch):
     labels = {r.surface: r.component for r in canon._distributed_cc(nodes, edges).collect()}
     assert len(set(labels.values())) == 1
     # and through the public entry point with the driver path disabled
-    monkeypatch.setattr(canon, "DRIVER_CC_MAX_EDGES", 0)
+    monkeypatch.setattr(util, "DRIVER_MAX_ROWS", 0)
+    monkeypatch.setattr(util, "DRIVER_MAX_BYTES", 0)
     labels2 = {
         r.surface: r.component
         for r in canon.connected_components(nodes, edges).collect()
@@ -227,7 +228,7 @@ def test_driver_and_distributed_cc_agree(spark, seed):
              for _ in range(80)]
     ndf = spark.createDataFrame(nodes, "surface string")
     edf = spark.createDataFrame(edges, "a string, b string").filter("a <> b")
-    g1 = canon._driver_cc(ndf, edf).collect()
+    g1 = canon.connected_components(ndf, edf).collect()  # driver regime
     g2 = canon._distributed_cc(ndf, edf).collect()
 
     def grouping(rows):

@@ -112,7 +112,8 @@ def test_driver_rows_counts_the_pin_without_observed_metrics(spark, monkeypatch)
     df = spark.range(5).select(F.col("id").cast("string").alias("a"))
     _, rows = util.driver_rows(df, F.octet_length("a"))
     assert sorted(r["a"] for r in rows) == ["0", "1", "2", "3", "4"]
-    _, rows = util.driver_rows(df, F.octet_length("a"), max_bytes=4)
+    monkeypatch.setattr(util, "DRIVER_MAX_BYTES", 4)
+    _, rows = util.driver_rows(df, F.octet_length("a"))
     assert rows is None
     _, rows = util.driver_rows(_empty_after_exchange(spark), F.octet_length("a"))
     assert rows == []

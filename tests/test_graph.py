@@ -444,10 +444,10 @@ def test_bgp_empty_pattern_raises(spark):
 
 def test_resolve_sameas_distributed_cc_path_identical(spark, monkeypatch):
     """Force the large-star/small-star CC path (the 100 TB regime) by zeroing
-    the driver-CC budget: the resolution must be identical to the fast path
+    the shared driver budget: the resolution must be identical to the fast path
     — component labels differ between strategies, but the canonical rewrite
     depends only on grouping + min(surface)."""
-    from kgx import canon
+    from kgx import util
 
     triples = spark.createDataFrame(
         [("x2", "likes", "y"), ("x3", "likes", "y"), ("q", "likes", "x3")],
@@ -455,7 +455,8 @@ def test_resolve_sameas_distributed_cc_path_identical(spark, monkeypatch):
     )
     edges = _edges(spark, [("x1", "x2"), ("x2", "x3")])
     want = {tuple(r) for r in graph.resolve_sameas(triples, edges).collect()}
-    monkeypatch.setattr(canon, "DRIVER_CC_MAX_EDGES", 0)
+    monkeypatch.setattr(util, "DRIVER_MAX_ROWS", 0)
+    monkeypatch.setattr(util, "DRIVER_MAX_BYTES", 0)
     got = {tuple(r) for r in graph.resolve_sameas(triples, edges).collect()}
     assert got == want == {("x1", "likes", "y"), ("q", "likes", "x1")}
 

@@ -10,7 +10,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from kgx import extract, fixtures, kernel, pipeline, sections, textextract
+from kgx import extract, fixtures, kernel, pipeline, sections, textextract, util
 
 N_PAGES = 200
 
@@ -176,11 +176,12 @@ def test_triples_pr_vs_golden(spark, pages_df, pages_rows):
 
 
 def test_join_rewrite_byte_equal_to_broadcast(spark, pages_df, monkeypatch):
-    """Entity dictionaries above BROADCAST_MAPPING_MAX take the relational
+    """Entity dictionaries over the driver budget take the relational
     join rewrite; its triples must be byte-equal to the broadcast path (the
     cap is a physical-strategy switch, never a semantics switch)."""
     expected = sorted(tuple(r) for r in pipeline.build_triples(spark, pages_df).collect())
-    monkeypatch.setattr(pipeline, "BROADCAST_MAPPING_MAX", 0)
+    monkeypatch.setattr(util, "DRIVER_MAX_ROWS", 0)
+    monkeypatch.setattr(util, "DRIVER_MAX_BYTES", 0)
     got = sorted(tuple(r) for r in pipeline.build_triples(spark, pages_df).collect())
     assert got == expected
     # the corpus genuinely exercises the rewrite: canonicalization changed
@@ -373,7 +374,8 @@ def test_join_rewrite_edge_shapes(spark, monkeypatch):
     expected = sorted(
         tuple(r) for r in pipeline.canonicalize_proponents(facts, mapping).collect()
     )
-    monkeypatch.setattr(pipeline, "BROADCAST_MAPPING_MAX", 0)
+    monkeypatch.setattr(util, "DRIVER_MAX_ROWS", 0)
+    monkeypatch.setattr(util, "DRIVER_MAX_BYTES", 0)
     got = sorted(
         tuple(r) for r in pipeline.canonicalize_proponents(facts, mapping).collect()
     )
@@ -419,7 +421,8 @@ def test_join_rewrite_duplicate_natural_key_rows(spark, monkeypatch):
     expected = sorted(
         tuple(r) for r in pipeline.canonicalize_proponents(facts, mapping).collect()
     )
-    monkeypatch.setattr(pipeline, "BROADCAST_MAPPING_MAX", 0)
+    monkeypatch.setattr(util, "DRIVER_MAX_ROWS", 0)
+    monkeypatch.setattr(util, "DRIVER_MAX_BYTES", 0)
     got = sorted(
         tuple(r) for r in pipeline.canonicalize_proponents(facts, mapping).collect()
     )
@@ -443,7 +446,7 @@ def test_broadcast_byte_budget_routes_to_join_path(spark, monkeypatch):
     mapping = spark.createDataFrame(
         [("Acme Corp", "ACME")], "surface string, rep string"
     )
-    monkeypatch.setattr(pipeline, "BROADCAST_MAPPING_MAX_BYTES", 0)
+    monkeypatch.setattr(util, "DRIVER_MAX_BYTES", 0)
     out = {t["obj"] for t in
            pipeline.canonicalize_proponents(facts, mapping).collect()}
     assert out == {kernel.canonical_json([{"organization_name": "ACME"}])}

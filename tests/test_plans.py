@@ -140,30 +140,6 @@ def test_ivf_training_assignment_plan_is_map_only(spark):
     assert plan.index("HashAggregate") < plan.index("Exchange"), plan[:1200]
 
 
-def test_salted_join_partitions_by_salt(spark):
-    """The salted join's exchange must hash-partition on (key, _salt) so a hot
-    key spreads across `salt` reducer partitions (the helper's entire point —
-    see kgx/ops/skew.py for when to actually use it)."""
-    from kgx.ops.skew import salted_join
-
-    fact = spark.range(0, 10_000, 1, 8).selectExpr(
-        "'hot' AS domain", "id", "CAST(id AS STRING) AS payload"
-    )
-    dim = spark.createDataFrame([("hot", "m")], "domain string, meta string")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = _plan(salted_join(fact, dim, "domain", salt=8))
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    # the exchange must hash-partition on _salt (a constant hot key is even
-    # constant-folded out of the key list, leaving _salt as the ONLY
-    # distribution column — the strongest form of the property)
-    import re
-
-    exchanges = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
-    assert exchanges and all("_salt" in e for e in exchanges), plan[:1500]
-
-
 def test_triangle_plan_reuses_pinned_edges(spark):
     """count_triangles fans the slim edge list into four plan branches
     (degree, orientation, wedge x2, closing x2); without the edge/ranked
@@ -276,10 +252,13 @@ def test_sameas_rewrite_shuffle_fallback_over_budget(spark, monkeypatch):
     expected = {
         tuple(r) for r in graph.g08_sameas_resolution(spark, SF).collect()
     }
-    monkeypatch.setattr(graph, "SAMEAS_BROADCAST_MAX_ROWS", 1)
+    from kgx import util
+
+    monkeypatch.setattr(util, "DRIVER_MAX_ROWS", 0)
+    monkeypatch.setattr(util, "DRIVER_MAX_BYTES", 0)
     df = graph.g08_sameas_resolution(spark, SF)
     plan = _plan(df)
-    assert "BroadcastHashJoin" not in plan or "SortMergeJoin" in plan
+    assert "SortMergeJoin" in plan, plan[:1500]
     assert {tuple(r) for r in df.collect()} == expected
 
 
@@ -321,7 +300,10 @@ def test_unigram_freq_broadcasts_within_budget(spark, monkeypatch):
     assert "BroadcastHashJoin" in plan, plan[:1500]
     assert "SortMergeJoin" not in plan
     expected = {tuple(r) for r in df.collect()}
-    monkeypatch.setattr(textops, "FREQ_BROADCAST_MAX_ROWS", 0)
+    from kgx import util
+
+    monkeypatch.setattr(util, "DRIVER_MAX_ROWS", 0)
+    monkeypatch.setattr(util, "DRIVER_MAX_BYTES", 0)
     df2 = textops.t15_unigram_logprob(spark, SF)
     assert {tuple(r) for r in df2.collect()} == expected
 

@@ -10,7 +10,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from kgx import fixtures, pipeline
+from kgx import fixtures, pipeline, util
 from kgx.checkpoint import TripleStore
 
 
@@ -67,15 +67,16 @@ def test_join_rewrite_kill_and_resume_identical(
     spark, small_pages, tmp_path, monkeypatch, kill_after
 ):
     """Mid-phase-C crash recovery on the >cap JOIN rewrite path (VERDICT r5
-    #6): force the natural-key relational rewrite by zeroing the broadcast
-    cap, kill after the 1st and after the 2nd commit, resume, and assert the
+    #6): force the natural-key relational rewrite by zeroing the driver
+    budget, kill after the 1st and after the 2nd commit, resume, and assert the
     store matches the plain one-shot (broadcast-path) triples exactly — the
     round-5 claim that _rewrite_join is fully lineage-recoverable with no
     non-replicated state, pinned through the real crash seam at two
     different phase-C progress points."""
     oneshot = _triple_set(pipeline.build_triples(spark, small_pages))
 
-    monkeypatch.setattr(pipeline, "BROADCAST_MAPPING_MAX", 0)
+    monkeypatch.setattr(util, "DRIVER_MAX_ROWS", 0)
+    monkeypatch.setattr(util, "DRIVER_MAX_BYTES", 0)
     root = str(tmp_path / f"jk{kill_after}")
     crashing = _KillAfterNCommits(root, n_buckets=8)
     crashing.kill_after = kill_after
@@ -505,3 +506,50 @@ def test_empty_entity_snapshot_readable(spark, tmp_path):
     store.save_entities(m)
     assert {(r.surface, r.rep) for r in store.known_entities(spark).df.collect()} \
         == {("a", "a")}
+
+
+def test_shared_mapping_collected_once_across_units(
+    spark, small_pages, tmp_path, monkeypatch
+):
+    """An LSH-built mapping within the driver budget (the all-pairs driver
+    regime zeroed through DRIVER_CANON_MAX_SURFACES) is pinned, sized and
+    collected ONCE, in phase B: every staged unit's phase-C rewrite then
+    broadcasts its rows without a Spark job of its own, where each unit
+    used to probe and collect it again. The store — triples and entity
+    dictionary — equals the zeroed-budget run's, where every regime takes
+    its distributed fallback."""
+    from kgx import canon
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    rewrite, pin = pipeline.canonicalize_proponents, pipeline._pinned
+    rewrite_jobs, collected = [], []
+
+    def counted_rewrite(facts, mapping=None):
+        lo = dag.nextJobId()
+        out = rewrite(facts, mapping)
+        rewrite_jobs.append(dag.nextJobId() - lo)
+        return out
+
+    def watched_pin(mapping):
+        out = pin(mapping)
+        if mapping.rows is None:
+            collected.append(out.rows is not None)
+        return out
+
+    def run(name):
+        store = TripleStore(str(tmp_path / name), n_buckets=8)
+        assert len(pipeline.run_checkpointed(spark, small_pages, store, groups=3)) >= 2
+        entities = {tuple(r) for r in store.known_entities(spark).df.collect()}
+        return _triple_set(store.read(spark)), entities
+
+    with monkeypatch.context() as m:
+        m.setattr(canon, "DRIVER_CANON_MAX_SURFACES", 0)
+        m.setattr(pipeline, "canonicalize_proponents", counted_rewrite)
+        m.setattr(pipeline, "_pinned", watched_pin)
+        lsh = run("lsh")
+    assert len(rewrite_jobs) >= 2 and rewrite_jobs == [0] * len(rewrite_jobs)
+    assert collected == [True]
+
+    monkeypatch.setattr(util, "DRIVER_MAX_ROWS", 0)
+    monkeypatch.setattr(util, "DRIVER_MAX_BYTES", 0)
+    assert run("zeroed") == lsh

@@ -324,6 +324,9 @@ def test_decontaminate_shuffle_fallback_identical(spark, monkeypatch):
     """Over the eval-gram broadcast budget t18 falls back to a shuffle join
     with identical rows."""
     expected = {tuple(r) for r in textops.t18_decontaminate(spark, SF).collect()}
-    monkeypatch.setattr(textops, "EVAL_BROADCAST_MAX_ROWS", 0)
+    from kgx import util
+
+    monkeypatch.setattr(util, "DRIVER_MAX_ROWS", 0)
+    monkeypatch.setattr(util, "DRIVER_MAX_BYTES", 0)
     got = {tuple(r) for r in textops.t18_decontaminate(spark, SF).collect()}
     assert got == expected

@@ -1,7 +1,7 @@
 """Driver regime vs distributed fallback, per operator, at growing sizes.
 
-pagerank (g05), the IVF index (s04), resolve_sameas (g08) and
-dedup_clusters (t07) run small relations on the driver and fall back to
+pagerank (g05), LSH ANN (s03), the IVF index (s04), resolve_sameas (g08)
+and dedup_clusters (t07) run small relations on the driver and fall back to
 Spark passes over the driver budget (kgx.util.fits_driver). This times both
 forms of one operator on the same synthetic input at each size and checks
 they return the same rows, so each operator's driver cap can be set where
@@ -9,6 +9,8 @@ the driver form stops winning or its memory stops being small:
 
 - g05: N = size / 10 nodes, ``size`` weighted edges (hash-drawn src/dst,
   grouped like g05's trade flows); the size is nodes + edges rows.
+- s03: ``size`` corpus vectors of dim 64 plus 10 queries through
+  ``simsearch.ann_lsh`` (s03's banding, top 3).
 - s04: ``size`` corpus vectors of dim 64 plus 10 queries, default index
   (8 cells, 2 Lloyd rounds, 2 probes).
 - g08: ``size`` sameAs edges in chains of 10 plus 2 x size triples.
@@ -23,7 +25,7 @@ cap lifted, the fallback with the shared budget zeroed. ``rss_mb`` is the
 driver process's peak resident set after the size's driver runs (it only
 grows, so sizes run ascending).
 
-Usage: python bench/driver_regime_bench.py g05|s04|g08|t07 SIZE [SIZE ...]
+Usage: python bench/driver_regime_bench.py g05|s03|s04|g08|t07 SIZE [SIZE ...]
        [--cpus 4] [--reps 3]
 Prints one JSON line per size.
 """
@@ -68,25 +70,37 @@ def _g05(spark, size):
     return lambda: sorted(tuple(r) for r in graph.pagerank(nodes, edges).collect())
 
 
-def _s04(spark, size):
+def _vecs(spark, n, offset, id_name, v_name):
+    """``n`` pinned dim-64 vectors with ids from ``offset``."""
     from pyspark.sql import functions as F
 
+    return (
+        spark.range(n)
+        .select(
+            (F.col("id") + offset).alias(id_name),
+            F.array(*[_hash_unit("id", offset * 100 + j) for j in range(64)]).alias(
+                v_name
+            ),
+        )
+        .localCheckpoint()
+    )
+
+
+def _s03(spark, size):
     from kgx.ops import simsearch
 
-    def vecs(n, offset, id_name, v_name):
-        return (
-            spark.range(n)
-            .select(
-                (F.col("id") + offset).alias(id_name),
-                F.array(*[_hash_unit("id", offset * 100 + j) for j in range(64)]).alias(
-                    v_name
-                ),
-            )
-            .localCheckpoint()
-        )
+    n = simsearch.N_QUERIES
+    e = _vecs(spark, n, 0, "vec_id", "v").unionByName(
+        _vecs(spark, size, n, "vec_id", "v")
+    ).localCheckpoint()
+    return lambda: sorted(tuple(r) for r in simsearch.ann_lsh(e).collect())
 
-    q = vecs(simsearch.N_QUERIES, 0, "query_id", "qv")
-    c = vecs(size, simsearch.N_QUERIES, "cand_id", "cv")
+
+def _s04(spark, size):
+    from kgx.ops import simsearch
+
+    q = _vecs(spark, simsearch.N_QUERIES, 0, "query_id", "qv")
+    c = _vecs(spark, size, simsearch.N_QUERIES, "cand_id", "cv")
     return lambda: sorted(
         tuple(r) for r in simsearch.ivf_query(q, simsearch.ivf_build(c)).collect()
     )
@@ -165,7 +179,7 @@ def _t07(spark, size):
     return run
 
 
-OPS = {"g05": _g05, "s04": _s04, "g08": _g08, "t07": _t07}
+OPS = {"g05": _g05, "s03": _s03, "s04": _s04, "g08": _g08, "t07": _t07}
 
 
 def _lift(monkey, forced_fallback):

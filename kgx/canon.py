@@ -315,7 +315,8 @@ def _keyed_sig_gen(shingle: str, k: int = 3, counters=None):
     (surface=id, _text) -> (surface, h=sha256(text), sh_hash, sig).
 
     ``counters``: optional (row_acc, byte_acc) Spark accumulators filled with
-    the emitted row count and payload bytes (id + hash arrays) — the size
+    the emitted row count and payload bytes (id, content hash and hash
+    arrays: the driver regime collects all four columns) — the size
     check of dedup_clusters' regime choice rides the signature job itself
     instead of costing a separate size-probe action (round 7). Task
     retries can only OVER-count, which fails toward the shuffle fallback —
@@ -394,6 +395,7 @@ def _keyed_sig_gen(shingle: str, k: int = 3, counters=None):
                     counters[0].add(n)
                     counters[1].add(
                         sum(len(key.encode()) for key in keys if key)
+                        + 64 * n  # the hex sha256
                         + 8 * (int(len(flat)) + n * N_HASHES)
                     )
                 yield pa.RecordBatch.from_arrays(
@@ -420,34 +422,43 @@ def dedup_clusters(
 
     The corpus-scale variant of canonical_mapping, keyed by document id:
 
-    1. one Arrow pass computes (id, sha256(text), shingle ids, MinHash sig) —
-       the document text NEVER enters a keyed shuffle, a join key, or a
-       driver collect (the round-1 t07 carried full text through all three);
-       the only text movement is the round-robin ``spread`` guard in front of
-       the pass, which fires only for under-split sources (one-row-group
-       parquet) and is a no-op on well-split 100 TB inputs;
-    2. exact-duplicate prepass keys rows by content hash (one h-window) and
-       keeps one representative per distinct text, so boilerplate dup-groups
-       can't blow an LSH band bucket past ``bucket_cap``;
+    1. one Arrow pass computes (id, sha256(text) as ``h``, shingle ids,
+       MinHash sig), pinned once — the document text NEVER enters a keyed
+       shuffle, a join key, or a driver collect (the round-1 t07 carried full
+       text through all three); the only text movement is the round-robin
+       ``spread`` guard in front of the pass, which fires only for
+       under-split sources (one-row-group parquet) and is a no-op on
+       well-split 100 TB inputs;
+    2. exact duplicates: each distinct text's representative is the min id
+       per ``h``, and only representatives enter LSH, so boilerplate
+       dup-groups can't blow an LSH band bucket past ``bucket_cap``;
     3. LSH banding + exact-Jaccard verification over representatives only;
     4. connected components over ids;
-    5. every doc maps to its exact-rep's component; docs whose text is unique
-       and un-clustered are their own singleton component.
+    5. every doc is labeled ``"s:" + root`` of its rep's component, or
+       ``"s:" + rep`` when its rep touched no edge (a doc whose text is
+       unique and un-clustered is its own singleton component).
 
-    Two regimes for steps 3-4, same groups, chosen by the reps' (id,
-    shingle ids, sig) payload as the signature pass's accumulators measured
-    it (rows and encoded bytes of all docs, an upper bound), against the
+    Two regimes for steps 2-5, same rows and labels, chosen by the pinned
+    signature rows' payload (id, ``h``, shingle ids, sig) as the signature
+    pass's accumulators measured it (retries only inflate it), against the
     engine's driver budget (kgx.util.fits_driver):
-    - driver (within the budget): the reps are collected from the pinned
-      signature frame as one Arrow table and _lsh_on_driver does the
-      banding, the sig gate and the exact Jaccard in numpy; the driver
-      union-find (min_components) labels the touched reps and the labels
-      come back as one broadcast local frame joined to the members (t07
-      on 500 docs: 7 Spark jobs a call, where the joins took 14).
-    - distributed (over it): the band self-join carries the id string
-      through the band shuffle, the sig/shingle payloads are joined to the
-      candidates, and the verified edges go to connected_components (whose
-      own gate still picks the driver union-find for a small edge set).
+    - driver (within the budget): one Arrow collect of the pin, and steps
+      2-5 in _clusters_on_driver: the min id per ``h``, the reps taken from
+      the table into _lsh_on_driver (banding, sig gate and exact Jaccard in
+      numpy), the driver union-find (min_components) over the verified
+      edges, and every doc's label, returned as one local frame (a
+      ``LocalTableScan``). t07 on 500 docs: 5 Spark jobs a call (the spread
+      exchange, the pin, its collect, and t07's own cluster window), where
+      an ``h``-window over the signature rows and a members join to the
+      driver labels took 7, and distributed blocking, verification and CC
+      joins took 14.
+    - distributed (over it): an ``h``-keyed window over the pin gives each
+      row its rep (pinned again: the members and the reps both read it),
+      the band self-join carries the id string through the band shuffle,
+      the sig/shingle payloads are joined to the candidates, the verified
+      edges go to connected_components (whose own gate still picks the
+      driver union-find for a small edge set), and the members join the
+      component labels with the ``"s:" + rep`` fallback.
     The budget is also the measured cap: no site cap tightens it. Timed
     with ``bench/driver_regime_bench.py t07`` (t07's settings, 5% planted
     near-dups, ``local[4]``, medians of 3 or 2 runs) against the
@@ -457,7 +468,9 @@ def dedup_clusters(
     next to the 256 MB byte budget; driver peak RSS 1.1 GB); and on 10k
     docs in 100 families of near-variants (460k gated candidates, 430k
     edges) 7.0 s vs 101 s. Since that form won nowhere inside the budget
-    it was deleted; past the budget the joins shuffle.
+    it was deleted; past the budget the joins shuffle. The present driver
+    form against the present fallback, same bench (medians of 3): 500 docs
+    0.46 s vs 2.19 s, 10k 0.74 vs 2.74.
 
     Exact equality and near-dup merging compose transitively: members of an
     exact group share the rep's shingle set, so Jaccard against the rep equals
@@ -487,7 +500,9 @@ def dedup_clusters(
     edges are slim (a, b) rows and ARE pinned so the count and connected
     components read one execution.
     """
-    from kgx.util import fits_driver, spread
+    from pyspark.sql import types as T
+
+    from kgx.util import fits_driver, local_frame, spread
 
     keyed = docs.select(
         F.col(id_col).cast("string").alias("surface"), F.col(text_col).alias("_text")
@@ -496,55 +511,58 @@ def dedup_clusters(
     # corpus file would feed the signature pass near-serially; one narrow
     # (id, text) shuffle buys full width for the one genuinely
     # O(corpus-bytes) compute here (no-op for well-split 100 TB inputs).
-    # Exact-dup prepass: min id per distinct content hash via ONE h-keyed
-    # window over the signature rows (round-7: replaces a groupBy +
-    # equi-join + semi-join chain — three shuffles and two extra
-    # checkpoints deriving the same columns). The single checkpoint pins the
-    # one wide corpus copy that both consumers (members at the end, reps
-    # through LSH) read; the un-checkpointed surf has exactly one consumer,
-    # so the signature UDF still runs once.
+    # The pin is the one wide corpus copy every later step reads, so the
+    # signature UDF runs once.
     sc = docs.sparkSession.sparkContext
     n_acc, b_acc = sc.accumulator(0), sc.accumulator(0)
-    surf = spread(keyed).mapInArrow(
-        _keyed_sig_gen(shingle, shingle_k, counters=(n_acc, b_acc)),
-        schema=_KEYED_SCHEMA,
+    sigs = (
+        spread(keyed)
+        .mapInArrow(
+            _keyed_sig_gen(shingle, shingle_k, counters=(n_acc, b_acc)),
+            schema=_KEYED_SCHEMA,
+        )
+        .localCheckpoint()
     )
-    wh = Window.partitionBy("h")
-    surf2 = surf.withColumn("erep", F.min("surface").over(wh)).localCheckpoint()
-    members = surf2.select("surface", "erep")
-    reps = surf2.filter(F.col("surface") == F.col("erep")).select(
-        "surface", "sh_hash", "sig"
-    )
-    # regime decision, against the accumulator totals the signature job
-    # just filled: an upper bound on the reps' payload (reps <= all docs;
-    # retries only inflate it), so no separate probe action runs. Within
-    # the driver budget the reps are collected from the pin and blocking,
-    # verification and CC run on the driver; past it the joins shuffle.
     # est_gate: 4 sigma under the exact-verify threshold, so weak candidates
     # die on the 512B sigs and true pairs reach the exact check
     est_gate = max(0.0, threshold - 0.25)
+    # regime decision, against the accumulator totals the pin just filled:
+    # no separate probe action runs
     if fits_driver(n_acc.value, b_acc.value):
-        edges, counts = _lsh_on_driver(
-            reps.toArrow(), bucket_cap, n_bands, est_gate, threshold
+        rows, counts = _clusters_on_driver(
+            sigs.toArrow(), bucket_cap, n_bands, est_gate, threshold
         )
         if metrics is not None:
             metrics.update(counts)
-        comp = F.broadcast(_driver_cc_from_rows(docs.sparkSession, edges))
-    else:
-        cand = candidate_pairs(
-            reps, bucket_cap=bucket_cap, n_bands=n_bands, est_gate=est_gate
+        schema = T.StructType(
+            [T.StructField(id_col, T.StringType()),
+             T.StructField("component", T.StringType())]
         )
-        edges = verified_edges(cand, threshold=threshold)
-        if metrics is not None:
-            metrics["n_reps"] = reps.count()
-            # distinct pairs: the candidate STREAM carries one row per
-            # colliding band, so the diagnostic dedups explicitly
-            metrics["candidate_pairs"] = (
-                cand.select("a", "b").dropDuplicates(["a", "b"]).count()
-            )
-            edges = edges.localCheckpoint()
-            metrics["verified_pairs"] = edges.count()
-        comp = connected_components(None, edges)
+        return local_frame(docs.sparkSession, rows, schema)
+
+    # exact-dup prepass: min id per distinct content hash via ONE h-keyed
+    # window (round-7: replaces a groupBy + equi-join + semi-join chain)
+    surf = sigs.withColumn(
+        "erep", F.min("surface").over(Window.partitionBy("h"))
+    ).localCheckpoint()
+    members = surf.select("surface", "erep")
+    reps = surf.filter(F.col("surface") == F.col("erep")).select(
+        "surface", "sh_hash", "sig"
+    )
+    cand = candidate_pairs(
+        reps, bucket_cap=bucket_cap, n_bands=n_bands, est_gate=est_gate
+    )
+    edges = verified_edges(cand, threshold=threshold)
+    if metrics is not None:
+        metrics["n_reps"] = reps.count()
+        # distinct pairs: the candidate STREAM carries one row per
+        # colliding band, so the diagnostic dedups explicitly
+        metrics["candidate_pairs"] = (
+            cand.select("a", "b").dropDuplicates(["a", "b"]).count()
+        )
+        edges = edges.localCheckpoint()
+        metrics["verified_pairs"] = edges.count()
+    comp = connected_components(None, edges)
     # docs whose rep never touched an edge are their own singleton
     # component ('s:' namespace) via the coalesce fallback
     return members.join(
@@ -557,15 +575,53 @@ def dedup_clusters(
     )
 
 
+def _clusters_on_driver(sigs, bucket_cap, n_bands, est_gate, threshold):
+    """dedup_clusters' steps 2-5 over the pin's collected (surface, h,
+    sh_hash, sig) Arrow table: ``(rows, counts)``, one (id, component) row
+    per pinned row, and _lsh_on_driver's counts. The rows are the
+    distributed form's, label for label: a row's rep is the min non-null
+    id of its ``h`` (as Spark's ``min`` over the window; Python orders
+    strings by code point, Spark by utf-8 bytes, which agree), the reps are
+    the rows equal to their rep (a repeated id with the same text repeats
+    its rep row, as the filter keeps it), and a row whose rep is null gets
+    a null label (the coalesce of two nulls)."""
+    import pyarrow as pa
+
+    surf = sigs.column("surface").to_pylist()
+    hs = sigs.column("h").to_pylist()
+    erep: dict[str, str] = {}
+    for s, h in zip(surf, hs):
+        if s is not None and (h not in erep or s < erep[h]):
+            erep[h] = s
+    reps = [
+        i for i, (s, h) in enumerate(zip(surf, hs))
+        if s is not None and s == erep[h]
+    ]
+    edges, counts = _lsh_on_driver(
+        sigs.take(pa.array(reps, pa.int64())), bucket_cap, n_bands, est_gate, threshold
+    )
+    roots = min_components(edges)
+    rows = []
+    for s, h in zip(surf, hs):
+        rep = erep.get(h)
+        rows.append((s, None if rep is None else "s:" + roots.get(rep, rep)))
+    return rows, counts
+
+
 def _lsh_on_driver(reps, bucket_cap, n_bands, est_gate, threshold):
-    """dedup_clusters' blocking and verification over the reps' collected
-    (surface, sh_hash, sig) Arrow table, in numpy: the same banding (a band
-    is ``N_HASHES // n_bands`` consecutive sig slots; buckets over
-    ``bucket_cap`` members are dropped), the same 64-slot agreement gate
-    (skipped when ``est_gate`` is 0) and the same exact Jaccard on the
-    shingle-hash sets as candidate_pairs + verified_edges. Buckets group by
-    the band's slot values themselves, where the distributed form groups by
-    their xxhash64; the two differ only on a 64-bit hash collision.
+    """dedup_clusters' blocking and verification over the reps' rows,
+    taken from the collected signature pin (an Arrow table with surface,
+    sh_hash and sig columns; _clusters_on_driver takes them), in numpy: the
+    same banding (a band is ``N_HASHES // n_bands`` consecutive sig slots;
+    buckets over ``bucket_cap`` members are dropped), the same 64-slot
+    agreement gate (skipped when ``est_gate`` is 0) and the same exact
+    Jaccard on the shingle-hash sets as candidate_pairs + verified_edges.
+    Buckets group by the band's slot values themselves, where the
+    distributed form groups by their xxhash64, and a colliding pair is
+    checked on its two rows' payloads, where the distributed form joins the
+    payloads back by id; the two differ only on a 64-bit hash collision, or
+    when one id is the rep of two different texts and the pair collides
+    through one text but verifies only through the other.
 
     Returns ``(edges, counts)``: the distinct verified (a, b) surface pairs
     and the metrics dedup_clusters reports (``n_reps``, distinct gated

@@ -5,10 +5,11 @@
   streams without a shuffle. (The interpreted zip_with/aggregate HOF this
   replaced measured 8.6s vs 2.6s at 100k vectors — SURVEY §8.3.)
 - s02: embedding-cosine near-duplicate pairs above a threshold (label-blocked).
-- s03: LSH-bucketed ANN (random hyperplane signatures, Hamming-band blocking) —
-  candidates come from equi-joined signature bands instead of a full cross
-  product; exact cosine re-ranks candidates. Exact DuckDB oracle via an
-  engine-portable integer scheme.
+- s03 / ann_lsh: LSH-bucketed ANN (random hyperplane signatures, Hamming-band
+  blocking) — candidates come from equi-joined signature bands instead of a
+  full cross product; exact cosine re-ranks candidates. Within the driver
+  budget the whole query runs in numpy on the driver over one collect.
+  Exact DuckDB oracle via an engine-portable integer scheme.
 - s04 / ivf_build + ivf_query: IVF index — train the coarse quantizer once,
   materialize cell membership, amortize per-query probe + re-rank. Within
   the driver budget the whole index runs in numpy on the driver over one
@@ -188,19 +189,19 @@ def _plane_weights(n_planes: int, dim: int):
     return (h % 256 - 128).astype(np.int64)  # (planes, dim) in [-128, 127]
 
 
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def _rh_bands_udf(vec: pd.Series) -> pd.Series:
-    """Hyperplane-LSH band signatures, numpy-vectorized per Arrow batch.
+def _rh_bands_np(V):
+    """Hyperplane-LSH band signatures of the rows of ``V`` (n, dim) float64,
+    as an (n, N_BANDS_ANN) array of '0'/'1' strings. The one home of the
+    banding: the Spark UDF and s03's driver regime both call it, so every
+    regime blocks a vector identically.
 
     Deterministic across runs/parallelism AND engines (see the portable
     scheme above). Interpreted HOF expressions for this were the s03
     bottleneck — same finding as the canon MinHash."""
     import numpy as np
 
-    dim = len(vec.iloc[0]) if len(vec) else 0
-    W = _plane_weights(N_PLANES, dim)
+    W = _plane_weights(N_PLANES, V.shape[1])
     r = N_PLANES // N_BANDS_ANN
-    V = np.stack(vec.to_numpy()) if len(vec) else np.zeros((0, dim))
     Vq = np.floor(V * _QUANT + 0.5).astype(np.int64)
     bits = (Vq @ W.T >= 0).astype(np.uint8)  # (n, planes)
     # band signature strings built column-wise in numpy (round 7): the
@@ -213,8 +214,16 @@ def _rh_bands_udf(vec: pd.Series) -> pd.Series:
         for k in range(1, r):
             s = np.char.add(s, B[:, b * r + k])
         bands.append(s)
-    out = np.stack(bands, axis=1).tolist() if len(bands) else [[]] * len(V)
-    return pd.Series(out)
+    return np.stack(bands, axis=1)
+
+
+@F.pandas_udf(T.ArrayType(T.StringType()))
+def _rh_bands_udf(vec: pd.Series) -> pd.Series:
+    """_rh_bands_np per Arrow batch."""
+    import numpy as np
+
+    V = np.stack(vec.to_numpy()) if len(vec) else np.zeros((0, 0))
+    return pd.Series(_rh_bands_np(V).tolist())
 
 
 def _cos_np(A, B):
@@ -240,18 +249,58 @@ def _cos_np_udf(a: pd.Series, b: pd.Series) -> pd.Series:
 
 
 def s03_ann_lsh(spark: SparkSession, sf: str) -> DataFrame:
-    """ANN top-k: hyperplane-LSH band blocking -> exact cosine re-rank.
+    """ANN top-k over the embeddings: ann_lsh, queries vec_id < N_QUERIES."""
+    e = load(spark, sf, "embeddings")
+    return ann_lsh(e.select("vec_id", _dvec(F.col("embedding")).alias("v")))
 
-    The band join carries only (id, band) — vectors join back per surviving
-    candidate; scoring is numpy per Arrow batch. At corpus scale the band join
-    replaces the q x c cross product (on THIS test corpus the vectors are
-    weakly correlated, so wide-recall banding admits most pairs — real
-    embedding corpora with near-dup structure prune hard at the same
-    geometry); recall vs s01 is asserted in tests.
+
+def ann_lsh(e: DataFrame) -> DataFrame:
+    """(vec_id, v) -> (query_id, cand_id, rank, cos): hyperplane-LSH band
+    blocking -> exact cosine re-rank -> top-K by (-cos, cand_id), with the
+    rows vec_id < N_QUERIES as the queries and the rest as the corpus. Two
+    regimes, same rows and schema:
+    - Driver (the vectors fit the driver budget and IVF_DRIVER_MAX_VECTORS,
+      kgx.util.driver_rows, as s04's index): one collect, then the band
+      signatures (_rh_bands_np), the blocking into distinct (query, cand)
+      pairs, the _cos_np scores and the top-K in numpy, returned as a
+      local frame. s03 on sf0.001: 2 Spark jobs a call (the pin and its
+      collect), where the distributed form takes 6.
+    - Distributed (over budget), over the pinned vectors: the band join
+      carries only (id, band) — vectors join back per surviving candidate;
+      scoring is numpy per Arrow batch. At corpus scale the band join
+      replaces the q x c cross product (on THIS test corpus the vectors
+      are weakly correlated, so wide-recall banding admits most pairs —
+      real embedding corpora with near-dup structure prune hard at the
+      same geometry); recall vs s01 is asserted in tests.
+
+    The site cap is s04's: ``bench/driver_regime_bench.py s03`` (dim 64,
+    10 queries, ``local[4]``, medians of 3) measured the driver form ahead
+    at every size, 500 vectors 0.14 s vs 1.11 s, 5k 0.19 vs 0.93, 20k 0.45
+    vs 1.05, 50k 0.90 vs 1.38 (driver peak RSS 370 MB), so the crossover
+    lies past 50k and the 20k cap bounds the driver's memory.
     """
     import numpy as np
 
-    q, c = _split(spark, sf)
+    from kgx.util import driver_rows, local_frame
+
+    e, rows = driver_rows(e, _vec_bytes("v"), max_rows=IVF_DRIVER_MAX_VECTORS)
+    q = e.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+    )
+    c = e.filter(F.col("vec_id") >= N_QUERIES).select(
+        F.col("vec_id").alias("cand_id"), F.col("v").alias("cv")
+    )
+    if rows is not None:
+        schema = T.StructType(
+            [
+                q.schema["query_id"],
+                c.schema["cand_id"],
+                T.StructField("rank", T.IntegerType(), False),
+                T.StructField("cos", T.DoubleType()),
+            ]
+        )
+        return local_frame(e.sparkSession, _ann_lsh_on_driver(rows), schema)
+
     qb = q.select(
         "query_id", F.posexplode(_rh_bands_udf("qv")).alias("band_id", "band_sig")
     )
@@ -278,7 +327,7 @@ def s03_ann_lsh(spark: SparkSession, sf: str) -> DataFrame:
         A = Q[[qindex[int(x)] for x in qid]]
         return pd.Series(_cos_np(A, np.stack(cv.to_numpy())))
 
-    scored = cand.join(c.select("cand_id", "cv"), "cand_id").withColumn(
+    scored = cand.join(c, "cand_id").withColumn(
         "cos", _cos_vs_query("query_id", "cv")
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("cand_id"))
@@ -287,6 +336,41 @@ def s03_ann_lsh(spark: SparkSession, sf: str) -> DataFrame:
         .filter(F.col("rank") <= K)
         .select("query_id", "cand_id", "rank", "cos")
     )
+
+
+def _ann_lsh_on_driver(rows):
+    """ann_lsh's blocking, scoring and top-k over collected (vec_id, v)
+    rows: [(query_id, cand_id, rank, cos)]. Mirrors the distributed form
+    row for row: a query pairs with every candidate sharing one of its
+    (band_id, band_sig) keys, every corpus row of a paired cand_id is
+    scored against the query's vector (the last of a repeated query_id,
+    as the closure's index keeps it), and a NaN cosine (a zero vector)
+    is null and ranks last, as the UDF's NaN reaches Spark."""
+    import numpy as np
+
+    if not rows:
+        return []
+    ids = np.array([r[0] for r in rows], dtype=np.int64)
+    V = np.array([r[1] for r in rows], dtype=np.float64)
+    S = _rh_bands_np(V)
+    qi = np.flatnonzero(ids < N_QUERIES)
+    ci = np.flatnonzero(ids >= N_QUERIES)
+    cand = ids[ci]
+    hit = (S[qi][:, None, :] == S[ci][None, :, :]).any(axis=2)  # (queries, corpus)
+    out = []
+    for qid in np.unique(ids[qi]).tolist():
+        mine = ids[qi] == qid
+        sel = np.flatnonzero(np.isin(cand, cand[hit[mine].any(axis=0)]))
+        if not sel.size:
+            continue
+        qv = V[qi[np.flatnonzero(mine)[-1]]]
+        cos = _cos_np(np.repeat(qv[None, :], sel.size, axis=0), V[ci[sel]])
+        top = np.lexsort((cand[sel], -cos))[:K]
+        out.extend(
+            (qid, int(cand[sel[j]]), r + 1, None if np.isnan(cos[j]) else float(cos[j]))
+            for r, j in enumerate(top)
+        )
+    return out
 
 
 _DIM = 64  # embeddings table dim (all sfs); _plane_weights derives from data,
@@ -591,7 +675,7 @@ def _ivf_query_on_driver(qrows, cents, cell_rows, n_probe: int, k: int):
         probed = np.argsort(d, kind="stable")[:n_probe]
         sel = np.flatnonzero(np.isin(cidx, probed))
         cos = _cos_np(np.repeat(qv[None, :], len(sel), axis=0), CV[sel])
-        top = np.lexsort((cand[sel], -cos))[:k]
+        top = np.lexsort((cand[sel], -cos))[:K]
         out.extend(
             (qid, int(cand[sel][j]), r + 1, float(cos[j])) for r, j in enumerate(top)
         )

@@ -264,6 +264,11 @@ def t07_minhash_clusters(spark: SparkSession, sf: str) -> DataFrame:
     MinHash-LSH banding + exact-Jaccard verification + connected components.
     Document text never enters a shuffle — only doc_id, sha256(text), and
     fixed-width hash arrays (round-1 carried full text as the join key).
+    Within the driver budget dedup_clusters returns its labels as a local
+    frame, so the cluster window below is the only exchange after the
+    signature pin: 5 Spark jobs a call on sf0.001 (the spread exchange,
+    the pin, its collect, the window's map stage and its result), where
+    an exact-duplicate window and a members join made it 7.
 
     cluster_key = md5(min doc_id of the cluster): independent of the CC
     label scheme, so the driver/distributed CC paths and the SQL oracle all

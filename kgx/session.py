@@ -87,6 +87,14 @@ def get_spark(
         b = b.config(
             "spark.sql.streaming.stateStore.providerClass", ROCKSDB_STATE_PROVIDER
         )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    # the Python workers import kgx to run its UDFs, but they inherit the
+    # environment, not the driver's sys.path: without the package's parent
+    # on their PYTHONPATH an entry point works only from the repository root
+    key = "spark.executorEnv.PYTHONPATH"
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [root, *conf.get(key, "").split(os.pathsep)]
+    conf[key] = os.pathsep.join(dict.fromkeys(p for p in paths if p))
+    for k, v in conf.items():
         b = b.config(k, v)
     return b.getOrCreate()

@@ -1,5 +1,5 @@
 """Small relations on the driver: local_frame, and the driver regimes of g05,
-s04, g08 and t07 against their distributed fallbacks."""
+s03, s04, g08 and t07 against their distributed fallbacks."""
 
 from __future__ import annotations
 
@@ -12,6 +12,7 @@ from kgx.ops import graph, simsearch, textops
 
 REGIME_QUERIES = {
     "g05_nation_pagerank": graph.g05_nation_pagerank,
+    "s03_ann_lsh": simsearch.s03_ann_lsh,
     "s04_ann_ivf": simsearch.s04_ann_ivf,
     "g08_sameas_resolution": graph.g08_sameas_resolution,
     "t07_minhash_clusters": textops.t07_minhash_clusters,
@@ -138,24 +139,28 @@ def test_driver_regime_matches_forced_fallback(spark, monkeypatch, name):
 def test_driver_regime_job_counts(spark):
     """Fixed cost of the driver regimes and of t13, pinned as Spark jobs
     per call on sf0.001 (the second call; the first warms the session):
-    s04 3, g05 7, g08 5, t07 7, t13 5.
+    s03 2, s04 3, g05 7, g08 5, t07 5, t13 5.
 
-    Before the tables were read with declared schemas (kgx.ops.TABLES)
-    every load submitted one parquet schema-inference job, and the same
-    calls took s04 4, g05 12, g08 8 (one, five and three table loads
-    more); t07 took 14 jobs with its blocking, verification and CC as
-    distributed joins, and t13 13 with a separate corpus count, an avgdl
-    aggregate and df/doclen joins. Before the driver regimes the
-    distributed forms took s04 13, g05 30, g08 15: s04 pinned the
-    quantized corpus, ran two Lloyd rounds as UDF passes plus
-    centroid-sum aggregates and a final assignment pass, then probed and
-    re-ranked under two windows; g05 ran three unrolled join+sum rounds, a
-    node count and a final pin; g08 ran CC with a separate size probe,
-    then the mapping aggregate, its pin and a second size probe. What is
-    left is the edge build's stages, one pin per gate and one collect (t07:
-    the signature pin, the reps' collect and the cluster window; t13: the
-    corpus-scalar aggregate, the tf aggregate and the shared window
-    exchange)."""
+    t07 took 7 jobs while its exact duplicates were an h-window over the
+    signature rows and its members a join to the driver labels; it now
+    finishes on the driver from one collect of the signature pin. s03 took
+    6 as band joins, a query collect and a re-rank window, against 2 now
+    (the pin and its collect). Before the tables were read with declared
+    schemas (kgx.ops.TABLES) every load submitted one parquet
+    schema-inference job, and the same calls took s04 4, g05 12, g08 8
+    (one, five and three table loads more); t07 took 14 jobs with its
+    blocking, verification and CC as distributed joins, and t13 13 with a
+    separate corpus count, an avgdl aggregate and df/doclen joins. Before
+    the driver regimes the distributed forms took s04 13, g05 30, g08 15:
+    s04 pinned the quantized corpus, ran two Lloyd rounds as UDF passes
+    plus centroid-sum aggregates and a final assignment pass, then probed
+    and re-ranked under two windows; g05 ran three unrolled join+sum
+    rounds, a node count and a final pin; g08 ran CC with a separate size
+    probe, then the mapping aggregate, its pin and a second size probe.
+    What is left is the edge build's stages, one pin per gate and one
+    collect (t07: the spread exchange, the signature pin, its collect and
+    t07's own cluster window; t13: the corpus-scalar aggregate, the tf
+    aggregate and the shared window exchange)."""
     queries = {**REGIME_QUERIES, "t13_bm25_topk": textops.t13_bm25_topk}
     counts = {}
     for name, fn in queries.items():
@@ -163,12 +168,78 @@ def test_driver_regime_job_counts(spark):
         _, counts[name] = _jobs(spark, lambda: fn(spark, SF).collect())
         spark.catalog.clearCache()
     assert counts == {
+        "s03_ann_lsh": 2,
         "s04_ann_ivf": 3,
         "g05_nation_pagerank": 7,
         "g08_sameas_resolution": 5,
-        "t07_minhash_clusters": 7,
+        "t07_minhash_clusters": 5,
         "t13_bm25_topk": 5,
     }
+
+
+def _dedup_corpus(spark):
+    """Exact-duplicate groups, a near-duplicate, an id repeated with the
+    same text and with a second text, and docs with no grams (empty,
+    punctuation-only and null text)."""
+    base = "the quick brown fox jumps over the lazy dog again and again today"
+    other = "completely different content about spark shuffles and parquet files"
+    rows = [
+        ("1", base), ("2", base), ("3", base),
+        ("4", other), ("5", other),
+        ("6", base + " tomorrow"),
+        ("7", "a lone document on arrow batches"),
+        ("7", "a lone document on arrow batches"),
+        ("8", "windows and watermarks in structured streaming"),
+        ("8", other + " again"),
+        ("9", ""), ("10", "!!!"), ("11", None),
+        ("12", "yet another unrelated text about hash joins"),
+    ]
+    return spark.createDataFrame(rows, "doc_id string, text string")
+
+
+def test_dedup_clusters_driver_rows_match_forced_fallback(spark, monkeypatch):
+    """dedup_clusters' driver regime gives the distributed form's rows,
+    label for label, on a corpus with the shapes its exact-duplicate step
+    must resolve the same way. A row cap under the corpus's 14 signature
+    rows but over its 3 verified edges forces the distributed form and
+    leaves connected_components on its driver union-find, whose labels
+    are the driver regime's; with the budget zeroed the distributed CC
+    labels differ ('h:' hashes) but the groups are the same."""
+    from kgx import canon
+
+    def groups(rows):
+        out: dict = {}
+        for doc, comp in rows:
+            out.setdefault(comp, set()).add(doc)
+        return sorted(map(sorted, out.values()))
+
+    docs = _dedup_corpus(spark)
+    driver = sorted(tuple(r) for r in canon.dedup_clusters(docs).collect())
+    assert len(driver) == 14
+    assert groups(driver) == sorted(
+        [["1", "2", "3", "6"], ["4", "5", "8"], ["7"], ["10", "11", "9"], ["12"]]
+    )
+    monkeypatch.setattr(util, "DRIVER_MAX_ROWS", 10)
+    members = canon.dedup_clusters(docs)
+    assert "Join" in members._jdf.queryExecution().executedPlan().toString()
+    assert sorted(tuple(r) for r in members.collect()) == driver
+    monkeypatch.setattr(util, "DRIVER_MAX_ROWS", 0)
+    monkeypatch.setattr(util, "DRIVER_MAX_BYTES", 0)
+    fallback = sorted(tuple(r) for r in canon.dedup_clusters(docs).collect())
+    assert [d for d, _ in fallback] == [d for d, _ in driver]
+    assert groups(fallback) == groups(driver)
+
+
+def test_dedup_clusters_driver_regime_is_a_local_scan(spark):
+    """Within the budget dedup_clusters returns its labels as a local
+    frame: the output plans as a LocalTableScan and collects with no job."""
+    from kgx import canon
+
+    out = canon.dedup_clusters(_dedup_corpus(spark))
+    assert "LocalTableScan" in out._jdf.queryExecution().executedPlan().toString()
+    rows, jobs = _jobs(spark, out.collect)
+    assert len(rows) == 14
+    assert jobs == 0
 
 
 @pytest.mark.parametrize("zero_budget", [False, True])

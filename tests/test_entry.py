@@ -36,3 +36,29 @@ def test_entry_runs_and_has_stable_schema(spark):
 def test_spot_queries_return_rows(spark, name):
     fn = entry_mod.queries()[name]
     assert fn(spark, SF).count() > 0
+
+
+def test_entry_point_runs_outside_the_repository(tmp_path):
+    """get_spark puts kgx's parent directory on the Python workers'
+    PYTHONPATH, so an entry point runs from any working directory with no
+    PYTHONPATH set: t07's signature pass imports kgx on a worker."""
+    import subprocess
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "import __spark_entry__ as entry\n"
+        "from kgx.session import get_spark\n"
+        "spark = get_spark('local[2]')\n"
+        "spark.sparkContext.setLogLevel('ERROR')\n"
+        f"print(entry.queries()['t07_minhash_clusters'](spark, {SF!r}).count())\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["KGX_DRIVER_MEM"] = "1g"
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert int(out.stdout.split()[-1]) > 0

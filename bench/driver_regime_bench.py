@@ -17,7 +17,10 @@ the driver form stops winning or its memory stops being small:
 - t07: ``size`` documents for dedup_clusters (t07's settings: token
   3-grams, 32 bands, bucket cap 1000), 10-100 tokens drawn from a 31-word
   vocabulary, 5% of them near-duplicates (an earlier text plus " dup"), the
-  shape of perfbench's generated corpus.
+  shape of perfbench's generated corpus. t07 has a third form,
+  ``driver_clusters``: the signatures on the executors and the clustering
+  on the driver (canon.DEDUP_DRIVER_MAX_BYTES zeroed), between its
+  driver-signature form and the fallback.
 
 Inputs are pinned before timing. Each form runs ``reps`` times (after one
 untimed warm-up call at the smallest size); the driver form runs with every
@@ -166,7 +169,9 @@ def _t07(spark, size):
     ).localCheckpoint()
 
     def run():
-        comp = canon.dedup_clusters(docs, shingle="token", bucket_cap=1000, n_bands=32)
+        comp = canon.dedup_clusters(
+            docs, shingle="token", bucket_cap=1000, n_bands=32
+        ).df
         doc = F.col("doc_id").cast("long")
         first = F.min(doc).over(Window.partitionBy("component"))
         row = comp.select(doc.alias("doc_id"), first.alias("first")).agg(
@@ -182,21 +187,26 @@ def _t07(spark, size):
 OPS = {"g05": _g05, "s03": _s03, "s04": _s04, "g08": _g08, "t07": _t07}
 
 
-def _lift(monkey, forced_fallback):
-    """Module budgets for one form: all caps lifted, or the shared one zeroed.
-    Lifting the shared budget lifts every broadcast ceiling with it (g08's
-    sameAs rewrite broadcasts its mapping at any size in the driver form)."""
-    from kgx import util
+def _lift(monkey, form):
+    """Module budgets for one form: all caps lifted (``driver``), t07's
+    driver-signature cap zeroed (``driver_clusters``), or the shared budget
+    zeroed (``fallback``). Lifting the shared budget lifts every broadcast
+    ceiling with it (g08's sameAs rewrite broadcasts its mapping at any size
+    in the driver form)."""
+    from kgx import canon, util
     from kgx.ops import graph, simsearch
 
-    big = 10**12
+    big = 2**31 - 2  # lifted, and still a valid limit() row count
     for mod, name in [
         (util, "DRIVER_MAX_ROWS"), (util, "DRIVER_MAX_BYTES"),
         (graph, "PR_DRIVER_MAX_ROWS"), (simsearch, "IVF_DRIVER_MAX_VECTORS"),
+        (canon, "DEDUP_DRIVER_MAX_BYTES"),
     ]:
         monkey.setdefault((mod, name), getattr(mod, name))
         setattr(mod, name, big)
-    if forced_fallback:
+    if form == "driver_clusters":
+        canon.DEDUP_DRIVER_MAX_BYTES = 0
+    if form == "fallback":
         util.DRIVER_MAX_ROWS = 0
         util.DRIVER_MAX_BYTES = 0
 
@@ -213,30 +223,29 @@ def main() -> None:
 
     spark = get_spark(master=f"local[{a.cpus}]", app_name="kgx-driver-regime-bench")
     spark.sparkContext.setLogLevel("ERROR")
+    forms = ("fallback", "driver_clusters", "driver") if a.op == "t07" else (
+        "fallback", "driver")
     saved: dict = {}
-    _lift(saved, False)
+    _lift(saved, "driver")
     OPS[a.op](spark, min(a.sizes))()  # warm-up
     for size in sorted(a.sizes):
         run = OPS[a.op](spark, size)
-        walls = {"driver": [], "fallback": []}
+        walls = {form: [] for form in forms}
         results = {}
         for _ in range(a.reps):
-            for form in ("fallback", "driver"):
-                _lift(saved, form == "fallback")
+            for form in forms:
+                _lift(saved, form)
                 t0 = time.perf_counter()
                 results[form] = run()
                 walls[form].append(time.perf_counter() - t0)
                 spark.catalog.clearCache()
         rss = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
-        print(json.dumps({
-            "op": a.op, "size": size,
-            "driver_s": round(statistics.median(walls["driver"]), 3),
-            "fallback_s": round(statistics.median(walls["fallback"]), 3),
-            "driver_all_s": [round(x, 3) for x in walls["driver"]],
-            "fallback_all_s": [round(x, 3) for x in walls["fallback"]],
-            "same_rows": results["driver"] == results["fallback"],
-            "rss_mb": round(rss),
-        }), flush=True)
+        line = {"op": a.op, "size": size}
+        line.update({f"{f}_s": round(statistics.median(walls[f]), 3) for f in forms})
+        line.update({f"{f}_all_s": [round(x, 3) for x in walls[f]] for f in forms})
+        line["same_rows"] = all(results[f] == results["fallback"] for f in forms)
+        line["rss_mb"] = round(rss)
+        print(json.dumps(line), flush=True)
     for (mod, name), v in saved.items():
         setattr(mod, name, v)
     spark.stop()

@@ -310,101 +310,147 @@ def _token_gram_hashes(norm: str, k: int, memo: dict):
     return np.unique(_splitmix64(h))
 
 
+def _keyed_sigs(keys, texts, shingle: str, k: int, memo: dict):
+    """The signature kernel of dedup_clusters: (ids, texts) -> one Arrow
+    RecordBatch of (surface=id, h=sha256(text), sh_hash, sig), row for row.
+    The executor pass (_keyed_sig_gen) runs it per Arrow batch and the
+    driver-signature regime over the collected corpus, so both regimes
+    compute the same bytes. ``memo`` is the token-hash memo, reused across
+    the calls of one batch iterator.
+
+    The output list columns are Arrow ListArrays over one flattened int64
+    buffer + offsets (zero-copy), where a pandas frame boxed every
+    per-document numpy array into object cells: measured ~5 ms/doc of pure
+    conversion overhead vs ~0.6 ms/doc of actual signature compute on 3 KB
+    documents."""
+    import hashlib
+
+    import numpy as np
+    import pyarrow as pa
+
+    from kgx import kernel
+
+    seeds = _minhash_seeds()
+    n = len(keys)
+    hs: list[str] = []
+    hh_list: list = []
+    lens = np.empty(n, dtype=np.int32)  # offsets are Arrow int32
+    sig_flat = np.empty((n, N_HASHES), dtype=np.uint64)
+    with np.errstate(over="ignore"):
+        for i, text in enumerate(texts):
+            text = text or ""
+            norm = kernel.normalize_surface(text)
+            if shingle == "token":
+                hh = _token_gram_hashes(norm, k, memo)
+                sig_flat[i] = _splitmix64(hh[None, :] ^ seeds[:, None]).min(axis=1)
+            else:
+                grams = _py_grams_of_norm(norm, shingle, k) or [norm]
+                hh, sig_flat[i] = _hash_and_sig(grams, seeds)
+            hh_list.append(hh)
+            lens[i] = len(hh)
+            hs.append(hashlib.sha256(text.encode()).hexdigest())
+    flat = np.concatenate(hh_list) if hh_list else np.array([], dtype=np.uint64)
+    offs = np.zeros(n + 1, dtype=np.int32)
+    np.cumsum(lens, out=offs[1:])
+    sh_arr = pa.ListArray.from_arrays(pa.array(offs), pa.array(flat.view(np.int64)))
+    sig_offs = np.arange(0, (n + 1) * N_HASHES, N_HASHES, dtype=np.int32)
+    sig_arr = pa.ListArray.from_arrays(
+        pa.array(sig_offs), pa.array(sig_flat.reshape(-1).view(np.int64))
+    )
+    return pa.RecordBatch.from_arrays(
+        [pa.array(keys, pa.string()), pa.array(hs, pa.string()), sh_arr, sig_arr],
+        names=["surface", "h", "sh_hash", "sig"],
+    )
+
+
 def _keyed_sig_gen(shingle: str, k: int = 3, counters=None):
-    """mapInArrow generator for id-keyed corpora:
-    (surface=id, _text) -> (surface, h=sha256(text), sh_hash, sig).
+    """mapInArrow generator for id-keyed corpora over the executors:
+    (surface=id, _text) batches -> _keyed_sigs' (surface, h, sh_hash, sig).
 
     ``counters``: optional (row_acc, byte_acc) Spark accumulators filled with
     the emitted row count and payload bytes (id, content hash and hash
-    arrays: the driver regime collects all four columns) — the size
-    check of dedup_clusters' regime choice rides the signature job itself
-    instead of costing a separate size-probe action (round 7). Task
+    arrays: the driver clustering collects all four columns) — the size
+    check of dedup_clusters' clustering regime rides the signature job
+    itself instead of costing a separate size-probe action (round 7). Task
     retries can only OVER-count, which fails toward the shuffle fallback —
     safe.
 
-    The text itself never leaves the Arrow batch — only the id, a 64-char
-    content hash, and fixed-width hash arrays, so no downstream shuffle or
-    join ever carries document bytes (round-1 review finding).
-
-    mapInArrow, not mapInPandas: the output list columns are built as Arrow
-    ListArrays from one flattened int64 buffer + offsets (zero-copy), where
-    the pandas path boxed every per-document numpy array into object cells —
-    measured ~5 ms/doc of pure conversion overhead vs ~0.6 ms/doc of actual
-    signature compute on 3 KB documents."""
+    On this path the text never leaves the Arrow batch — only the id, a
+    64-char content hash, and fixed-width hash arrays, so no downstream
+    shuffle, join or collect ever carries document bytes (round-1 review
+    finding). A corpus small enough for the driver-signature regime
+    reaches the driver as (id, text) instead and never runs this pass
+    (dedup_clusters)."""
 
     def gen(batches):
-        import hashlib
-
-        import numpy as np
-        import pyarrow as pa
-
-        from kgx import kernel
-
-        seeds = _minhash_seeds()
         memo: dict = {}
-        out_schema = pa.schema(
-            [
-                ("surface", pa.string()),
-                ("h", pa.string()),
-                ("sh_hash", pa.list_(pa.int64())),
-                ("sig", pa.list_(pa.int64())),
-            ]
-        )
-        with np.errstate(over="ignore"):
-            for b in batches:
-                names = b.schema.names
-                keys = b.column(names.index("surface")).to_pylist()
-                texts = b.column(names.index("_text")).to_pylist()
-                n = len(keys)
-                hs: list[str] = []
-                hh_list: list = []
-                lens = np.empty(n, dtype=np.int32)  # offsets are Arrow int32
-                sig_flat = np.empty((n, N_HASHES), dtype=np.uint64)
-                for i, text in enumerate(texts):
-                    text = text or ""
-                    norm = kernel.normalize_surface(text)
-                    if shingle == "token":
-                        hh = _token_gram_hashes(norm, k, memo)
-                        sig_flat[i] = _splitmix64(
-                            hh[None, :] ^ seeds[:, None]
-                        ).min(axis=1)
-                    else:
-                        grams = _py_grams_of_norm(norm, shingle, k) or [norm]
-                        hh, sig_flat[i] = _hash_and_sig(grams, seeds)
-                    hh_list.append(hh)
-                    lens[i] = len(hh)
-                    hs.append(hashlib.sha256(text.encode()).hexdigest())
-                flat = (
-                    np.concatenate(hh_list)
-                    if hh_list
-                    else np.array([], dtype=np.uint64)
+        for b in batches:
+            names = b.schema.names
+            keys = b.column(names.index("surface")).to_pylist()
+            out = _keyed_sigs(
+                keys, b.column(names.index("_text")).to_pylist(), shingle, k, memo
+            )
+            if counters is not None:
+                n = out.num_rows
+                counters[0].add(n)
+                counters[1].add(
+                    sum(len(key.encode()) for key in keys if key)
+                    + 64 * n  # the hex sha256
+                    + 8 * (len(out.column(2).values) + n * N_HASHES)
                 )
-                offs = np.zeros(n + 1, dtype=np.int32)
-                np.cumsum(lens, out=offs[1:])
-                sh_arr = pa.ListArray.from_arrays(
-                    pa.array(offs), pa.array(flat.view(np.int64))
-                )
-                sig_offs = np.arange(
-                    0, (n + 1) * N_HASHES, N_HASHES, dtype=np.int32
-                )
-                sig_arr = pa.ListArray.from_arrays(
-                    pa.array(sig_offs),
-                    pa.array(sig_flat.reshape(-1).view(np.int64)),
-                )
-                if counters is not None:
-                    counters[0].add(n)
-                    counters[1].add(
-                        sum(len(key.encode()) for key in keys if key)
-                        + 64 * n  # the hex sha256
-                        + 8 * (int(len(flat)) + n * N_HASHES)
-                    )
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(keys, pa.string()), pa.array(hs, pa.string()),
-                     sh_arr, sig_arr],
-                    schema=out_schema,
-                )
+            yield out
 
     return gen
+
+
+# dedup_clusters' driver-signature regime: the most (id, text) bytes it
+# collects and signs on the driver (utf-8, plus 8 bytes of Arrow offsets a
+# row), set between the measured 1.7 MB win and 2.3 MB tie in its docstring
+DEDUP_DRIVER_MAX_BYTES = 2 * 1024 * 1024
+
+
+@dataclass(frozen=True)
+class DocClusters:
+    """dedup_clusters' result: ``df`` is the (id, component) frame and
+    ``rows`` the same rows as driver-side tuples when the clustering ran on
+    the driver, else None. A caller that aggregates the labels further
+    (t07's cluster window) reads ``rows`` and never submits a job for
+    them. Carried as a value, as CanonicalMapping carries its rows."""
+
+    df: DataFrame
+    rows: list[tuple[str, str]] | None = None
+
+    def count(self) -> int:
+        """Row count; free when the rows are driver-side."""
+        return len(self.rows) if self.rows is not None else self.df.count()
+
+
+def _corpus_fits_driver(keyed: DataFrame) -> bool:
+    """Whether the (surface, _text) corpus fits DEDUP_DRIVER_MAX_BYTES and
+    the engine's driver budget. One bounded probe job: a one-task prefix
+    of at most ``DEDUP_DRIVER_MAX_BYTES // 8 + 1`` rows (every row counts
+    at least its 8 offset bytes, so a longer prefix is over the cap
+    already), of which only the row sizes reach the driver. Over the cap
+    the probe stops at that prefix; nothing holding the text is pinned or
+    collected."""
+    import pyarrow.compute as pc
+
+    from kgx import util
+
+    nbytes = (
+        F.coalesce(F.octet_length("surface"), F.lit(0))
+        + F.coalesce(F.octet_length("_text"), F.lit(0))
+        + F.lit(8)
+    )
+    sizes = (
+        keyed.select(nbytes.alias("nb"))
+        .coalesce(1)
+        .limit(min(DEDUP_DRIVER_MAX_BYTES // 8, util.DRIVER_MAX_ROWS) + 1)
+        .toArrow()
+        .column(0)
+    )
+    total = pc.sum(sizes).as_py() or 0
+    return total <= DEDUP_DRIVER_MAX_BYTES and util.fits_driver(len(sizes), total)
 
 
 def dedup_clusters(
@@ -417,18 +463,14 @@ def dedup_clusters(
     n_bands: int = N_BANDS,
     threshold: float = JACCARD_THRESHOLD,
     metrics: dict | None = None,
-) -> DataFrame:
-    """(id, text) -> (id string, component): near-duplicate document clustering.
+) -> DocClusters:
+    """(id, text) -> DocClusters of (id string, component): near-duplicate
+    document clustering.
 
     The corpus-scale variant of canonical_mapping, keyed by document id:
 
-    1. one Arrow pass computes (id, sha256(text) as ``h``, shingle ids,
-       MinHash sig), pinned once — the document text NEVER enters a keyed
-       shuffle, a join key, or a driver collect (the round-1 t07 carried full
-       text through all three); the only text movement is the round-robin
-       ``spread`` guard in front of the pass, which fires only for
-       under-split sources (one-row-group parquet) and is a no-op on
-       well-split 100 TB inputs;
+    1. signatures: (id, sha256(text) as ``h``, shingle ids, MinHash sig)
+       per doc, one kernel (_keyed_sigs) wherever it runs;
     2. exact duplicates: each distinct text's representative is the min id
        per ``h``, and only representatives enter LSH, so boilerplate
        dup-groups can't blow an LSH band bucket past ``bucket_cap``;
@@ -438,20 +480,35 @@ def dedup_clusters(
        ``"s:" + rep`` when its rep touched no edge (a doc whose text is
        unique and un-clustered is its own singleton component).
 
-    Two regimes for steps 2-5, same rows and labels, chosen by the pinned
-    signature rows' payload (id, ``h``, shingle ids, sig) as the signature
-    pass's accumulators measured it (retries only inflate it), against the
-    engine's driver budget (kgx.util.fits_driver):
-    - driver (within the budget): one Arrow collect of the pin, and steps
-      2-5 in _clusters_on_driver: the min id per ``h``, the reps taken from
-      the table into _lsh_on_driver (banding, sig gate and exact Jaccard in
-      numpy), the driver union-find (min_components) over the verified
-      edges, and every doc's label, returned as one local frame (a
-      ``LocalTableScan``). t07 on 500 docs: 5 Spark jobs a call (the spread
-      exchange, the pin, its collect, and t07's own cluster window), where
-      an ``h``-window over the signature rows and a members join to the
-      driver labels took 7, and distributed blocking, verification and CC
-      joins took 14.
+    Document text enters no keyed shuffle and no join key in any regime
+    (the round-1 t07 carried full text through both). It reaches the
+    driver only within DEDUP_DRIVER_MAX_BYTES, as the one (id, text)
+    collect of the driver-signature regime; over that cap nothing holding
+    the text is pinned or collected, and the only text movement is the
+    round-robin ``spread`` guard in front of the signature pass, which
+    fires only for under-split sources (one-row-group parquet) and is a
+    no-op on well-split 100 TB inputs. Three regimes, same rows and labels:
+
+    - driver signatures (the corpus within DEDUP_DRIVER_MAX_BYTES and the
+      driver budget, sized by _corpus_fits_driver's bounded probe): one
+      Arrow collect of (id, text), _keyed_sigs over it on the driver, then
+      steps 2-5 in _clusters_on_driver. No Python worker runs: every
+      Python task pays a fixed worker cost (215-350 ms on ``local[4]``,
+      most of it pyspark's per-task ``importlib.invalidate_caches()``)
+      that a small corpus never earns back. t07 on 500 docs: 2 Spark jobs
+      a call (the probe and the collect).
+    - driver clustering (within the driver budget, kgx.util.fits_driver,
+      against the pinned signature rows' payload as the signature pass's
+      accumulators measured it; retries only inflate it): a ``mapInArrow``
+      signature pass over the executors (_keyed_sig_gen) pinned once, one
+      Arrow collect of the pin, and steps 2-5 in _clusters_on_driver: the
+      min id per ``h``, the reps taken from the table into _lsh_on_driver
+      (banding, sig gate and exact Jaccard in numpy), the driver
+      union-find (min_components) over the verified edges, and every
+      doc's label. t07 on 500 docs in this regime: 5 jobs (the probe, the
+      spread exchange, the pin, its collect and t07's own cluster window;
+      4 before the probe existed, 7 with an ``h``-window and a members
+      join, 14 with distributed blocking, verification and CC).
     - distributed (over it): an ``h``-keyed window over the pin gives each
       row its rep (pinned again: the members and the reps both read it),
       the band self-join carries the id string through the band shuffle,
@@ -459,18 +516,28 @@ def dedup_clusters(
       edges go to connected_components (whose own gate still picks the
       driver union-find for a small edge set), and the members join the
       component labels with the ``"s:" + rep`` fallback.
-    The budget is also the measured cap: no site cap tightens it. Timed
-    with ``bench/driver_regime_bench.py t07`` (t07's settings, 5% planted
-    near-dups, ``local[4]``, medians of 3 or 2 runs) against the
-    broadcast-payload form of the joins with the driver CC: 500 docs
-    1.36 s vs 2.37 s, 10k 1.53 vs 3.18, 50k 3.96 vs 7.69, 100k 7.98 vs
-    15.06, 200k 16.6 vs 38.6, 270k 24.9 vs 61.2 (about 254 MB of payload,
-    next to the 256 MB byte budget; driver peak RSS 1.1 GB); and on 10k
-    docs in 100 families of near-variants (460k gated candidates, 430k
-    edges) 7.0 s vs 101 s. Since that form won nowhere inside the budget
-    it was deleted; past the budget the joins shuffle. The present driver
-    form against the present fallback, same bench (medians of 3): 500 docs
-    0.46 s vs 2.19 s, 10k 0.74 vs 2.74.
+    Both driver regimes return the labels as ``rows`` next to a local frame
+    (a ``LocalTableScan``); the distributed one returns only the frame.
+
+    DEDUP_DRIVER_MAX_BYTES is measured with ``bench/driver_regime_bench.py
+    t07`` (t07's settings; 10-100 tokens of a 31-word vocabulary, about
+    220 B of text a doc, 5% planted near-dups; ``local[4]``, medians of 3;
+    driver signatures / driver clustering / distributed, in s; the gate's
+    bytes in brackets): 500 docs [117 KB] 0.36 / 1.04 / 4.63, 2k [457 KB]
+    0.48 / 0.93 / 3.88, 5k [1.14 MB] 0.89 / 1.05 / 4.34, 7.5k [1.72 MB]
+    1.13 / 1.64 / 6.75, 10k [2.28 MB] 1.66 / 1.63 / 4.89 (a second run
+    1.86 / 1.46 / 5.17), 20k [4.60 MB] 3.19 / 2.40 / 6.88, 50k [11.6 MB]
+    7.68 / 3.97 / 11.27; same rows at every size. The driver signs on one
+    core, so its time grows with the text while the executor pass spreads
+    it over four; the cap sits where the driver stops winning.
+    The shared budget is the driver clustering's measured cap: against the
+    broadcast-payload form of the joins with the driver CC, same bench,
+    500 docs 1.36 s vs 2.37 s, 10k 1.53 vs 3.18, 50k 3.96 vs 7.69, 100k
+    7.98 vs 15.06, 200k 16.6 vs 38.6, 270k 24.9 vs 61.2 (about 254 MB of
+    payload, next to the 256 MB byte budget; driver peak RSS 1.1 GB); and
+    on 10k docs in 100 families of near-variants (460k gated candidates,
+    430k edges) 7.0 s vs 101 s. Since that form won nowhere inside the
+    budget it was deleted; past the budget the joins shuffle.
 
     Exact equality and near-dup merging compose transitively: members of an
     exact group share the rep's shingle set, so Jaccard against the rep equals
@@ -491,7 +558,7 @@ def dedup_clusters(
     the exact Jaccard check) and ``verified_pairs`` (edges surviving it).
     Diagnostics mode for scale attribution: wall time should track
     candidate/verified pair counts, and these counts make that checkable
-    instead of argued. The driver regime counts them as it goes, at no
+    instead of argued. The driver regimes count them as they go, at no
     cost. The distributed one re-executes the band join once from the
     checkpointed reps to count candidates (NOT pinned: the gated candidate
     rows carry two shingle arrays each, and checkpointing a corpus-scale
@@ -500,6 +567,7 @@ def dedup_clusters(
     edges are slim (a, b) rows and ARE pinned so the count and connected
     components read one execution.
     """
+    import pyarrow as pa
     from pyspark.sql import types as T
 
     from kgx.util import fits_driver, local_frame, spread
@@ -507,30 +575,38 @@ def dedup_clusters(
     keyed = docs.select(
         F.col(id_col).cast("string").alias("surface"), F.col(text_col).alias("_text")
     )
-    # parquet scans split only at row-group boundaries, so a one-row-group
-    # corpus file would feed the signature pass near-serially; one narrow
-    # (id, text) shuffle buys full width for the one genuinely
-    # O(corpus-bytes) compute here (no-op for well-split 100 TB inputs).
-    # The pin is the one wide corpus copy every later step reads, so the
-    # signature UDF runs once.
-    sc = docs.sparkSession.sparkContext
-    n_acc, b_acc = sc.accumulator(0), sc.accumulator(0)
-    sigs = (
-        spread(keyed)
-        .mapInArrow(
-            _keyed_sig_gen(shingle, shingle_k, counters=(n_acc, b_acc)),
-            schema=_KEYED_SCHEMA,
-        )
-        .localCheckpoint()
-    )
     # est_gate: 4 sigma under the exact-verify threshold, so weak candidates
     # die on the 512B sigs and true pairs reach the exact check
     est_gate = max(0.0, threshold - 0.25)
-    # regime decision, against the accumulator totals the pin just filled:
-    # no separate probe action runs
-    if fits_driver(n_acc.value, b_acc.value):
+    if _corpus_fits_driver(keyed):
+        corpus = keyed.toArrow()
+        sigs = pa.Table.from_batches([_keyed_sigs(
+            corpus.column("surface").to_pylist(), corpus.column("_text").to_pylist(),
+            shingle, shingle_k, {},
+        )])
+    else:
+        # parquet scans split only at row-group boundaries, so a
+        # one-row-group corpus file would feed the signature pass
+        # near-serially; one narrow (id, text) shuffle buys full width for
+        # the one genuinely O(corpus-bytes) compute here (no-op for
+        # well-split 100 TB inputs). The pin is the one wide corpus copy
+        # every later step reads, so the signature UDF runs once.
+        sc = docs.sparkSession.sparkContext
+        n_acc, b_acc = sc.accumulator(0), sc.accumulator(0)
+        pin = (
+            spread(keyed)
+            .mapInArrow(
+                _keyed_sig_gen(shingle, shingle_k, counters=(n_acc, b_acc)),
+                schema=_KEYED_SCHEMA,
+            )
+            .localCheckpoint()
+        )
+        # regime decision, against the accumulator totals the pin just
+        # filled: no separate probe action runs
+        sigs = pin.toArrow() if fits_driver(n_acc.value, b_acc.value) else None
+    if sigs is not None:
         rows, counts = _clusters_on_driver(
-            sigs.toArrow(), bucket_cap, n_bands, est_gate, threshold
+            sigs, bucket_cap, n_bands, est_gate, threshold
         )
         if metrics is not None:
             metrics.update(counts)
@@ -538,11 +614,11 @@ def dedup_clusters(
             [T.StructField(id_col, T.StringType()),
              T.StructField("component", T.StringType())]
         )
-        return local_frame(docs.sparkSession, rows, schema)
+        return DocClusters(local_frame(docs.sparkSession, rows, schema), rows)
 
     # exact-dup prepass: min id per distinct content hash via ONE h-keyed
     # window (round-7: replaces a groupBy + equi-join + semi-join chain)
-    surf = sigs.withColumn(
+    surf = pin.withColumn(
         "erep", F.min("surface").over(Window.partitionBy("h"))
     ).localCheckpoint()
     members = surf.select("surface", "erep")
@@ -565,20 +641,21 @@ def dedup_clusters(
     comp = connected_components(None, edges)
     # docs whose rep never touched an edge are their own singleton
     # component ('s:' namespace) via the coalesce fallback
-    return members.join(
+    return DocClusters(members.join(
         comp.select(F.col("surface").alias("erep"), F.col("component").alias("_c")),
         "erep",
         "left",
     ).select(
         F.col("surface").alias(id_col),
         F.coalesce("_c", F.concat(F.lit("s:"), F.col("erep"))).alias("component"),
-    )
+    ))
 
 
 def _clusters_on_driver(sigs, bucket_cap, n_bands, est_gate, threshold):
-    """dedup_clusters' steps 2-5 over the pin's collected (surface, h,
-    sh_hash, sig) Arrow table: ``(rows, counts)``, one (id, component) row
-    per pinned row, and _lsh_on_driver's counts. The rows are the
+    """dedup_clusters' steps 2-5 over the (surface, h, sh_hash, sig) Arrow
+    table of either driver regime (signed on the driver, or the collected
+    pin): ``(rows, counts)``, one (id, component) row per signature row,
+    and _lsh_on_driver's counts. The rows are the
     distributed form's, label for label: a row's rep is the min non-null
     id of its ``h`` (as Spark's ``min`` over the window; Python orders
     strings by code point, Spark by utf-8 bytes, which agree), the reps are

@@ -142,23 +142,33 @@ FROM y95 FULL OUTER JOIN y96 ON y95.o_custkey = y96.o_custkey
 
 # --- §2.3 composite-key inner join ------------------------------------------- #
 def q07_composite_join(spark: SparkSession, sf: str) -> DataFrame:
+    """Revenue and item count per order priority over 1996's orders.
+
+    The revenue is summed in DECIMAL and cast back to double after the
+    cent rounding, here and in Q07_SQL. Summed as doubles, a group whose
+    exact sum ends in half a cent lands a few ulps above or below it
+    depending on the addition order, and Spark and DuckDB rounded such sums
+    to opposite cents (perfbench/gen.write_tables sf0.01 seeds 87, 111, 145
+    and 147). The money columns hold cents, so DECIMAL(15, 2) takes them
+    exactly and the sum has one answer.
+
+    The join carries no broadcast hint: one year of (key, priority) pairs
+    is small at bench scales, but a hint would hold it on the driver at
+    any scale; AQE broadcasts it from its measured size when it fits the
+    session's threshold."""
     li, o = load(spark, sf, "lineitem"), load(spark, sf, "orders")
-    # Round 7: the year filter is applied before the join (Catalyst pushed it
-    # down anyway) and the filtered two-column orders slice is broadcast —
-    # the planner kept a sort-merge join that shuffled all of lineitem to
-    # attach a dimension slice a fraction its size (guide §3.1: hint when
-    # you know the side is small; one year of (key, priority) pairs stays
-    # megabytes at bench scales). Dropping the hint degrades to the shuffled
-    # join, never to an error.
     o96 = o.filter(F.year("o_orderdate") == 1996).select(
         "o_orderkey", "o_orderpriority"
     )
+    money = "decimal(15,2)"
+    revenue = F.sum(
+        F.col("l_extendedprice").cast(money) * (1 - F.col("l_discount").cast(money))
+    )
     return (
-        li.join(F.broadcast(o96), li.l_orderkey == o96.o_orderkey)
+        li.join(o96, li.l_orderkey == o96.o_orderkey)
         .groupBy("o_orderpriority")
         .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2)
-            .alias("revenue"),
+            F.round(revenue, 2).cast("double").alias("revenue"),
             F.count("*").alias("n_items"),
         )
     )
@@ -166,7 +176,8 @@ def q07_composite_join(spark: SparkSession, sf: str) -> DataFrame:
 
 Q07_SQL = """
 SELECT o_orderpriority,
-       ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+       ROUND(SUM(CAST(l_extendedprice AS DECIMAL(15, 2))
+                 * (1 - CAST(l_discount AS DECIMAL(15, 2)))), 2)::DOUBLE AS revenue,
        COUNT(*) AS n_items
 FROM lineitem JOIN orders ON l_orderkey = o_orderkey
 WHERE EXTRACT(year FROM o_orderdate) = 1996

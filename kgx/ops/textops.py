@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kgx.ops import load
 from kgx.util import fits_driver, local_frame, sized_pin, spread
@@ -264,11 +265,15 @@ def t07_minhash_clusters(spark: SparkSession, sf: str) -> DataFrame:
     MinHash-LSH banding + exact-Jaccard verification + connected components.
     Document text never enters a shuffle — only doc_id, sha256(text), and
     fixed-width hash arrays (round-1 carried full text as the join key).
-    Within the driver budget dedup_clusters returns its labels as a local
-    frame, so the cluster window below is the only exchange after the
-    signature pin: 5 Spark jobs a call on sf0.001 (the spread exchange,
-    the pin, its collect, the window's map stage and its result), where
-    an exact-duplicate window and a members join made it 7.
+    When dedup_clusters holds its labels on the driver (DocClusters.rows),
+    cluster_key and cluster_size are computed from those rows here and
+    returned as one local frame with the window form's schema, so a corpus
+    within canon.DEDUP_DRIVER_MAX_BYTES costs 2 Spark jobs a call on
+    sf0.001 (dedup_clusters' size probe and its (id, text) collect) and
+    runs no Python worker; it took 5 with the signatures on the executors
+    and this window over the driver labels, 7 with an exact-duplicate
+    window and a members join. Otherwise the window below runs over the
+    distributed labels.
 
     cluster_key = md5(min doc_id of the cluster): independent of the CC
     label scheme, so the driver/distributed CC paths and the SQL oracle all
@@ -294,6 +299,8 @@ def t07_minhash_clusters(spark: SparkSession, sf: str) -> DataFrame:
         d, id_col="doc_id", text_col="text", shingle="token",
         bucket_cap=1000, n_bands=32,
     )
+    if comp.rows is not None:
+        return local_frame(spark, _cluster_window_rows(comp.rows), _T07_SCHEMA)
     # ONE window pass: cluster_key = md5(min doc_id over the component) is
     # injective over components (each doc lives in exactly one component, so
     # distinct components have distinct min ids; md5 of distinct 64-bit
@@ -305,13 +312,39 @@ def t07_minhash_clusters(spark: SparkSession, sf: str) -> DataFrame:
     wc = Window.partitionBy("component").rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
-    return comp.select(
+    return comp.df.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.md5(
             F.min(F.col("doc_id").cast("long")).over(wc).cast("string")
         ).alias("cluster_key"),
         F.count("*").over(wc).alias("cluster_size"),
     )
+
+
+# the schema of t07's window form: count(*) over a window is never null
+_T07_SCHEMA = T.StructType([
+    T.StructField("doc_id", T.LongType()),
+    T.StructField("cluster_key", T.StringType()),
+    T.StructField("cluster_size", T.LongType(), nullable=False),
+])
+
+
+def _cluster_window_rows(rows):
+    """t07's cluster window over driver-held (doc_id string, component)
+    rows: (doc_id, md5 of the component's min doc_id, component size) per
+    row, as the window computes them (a null component is one group, and a
+    component whose ids are all null has a null key)."""
+    import hashlib
+
+    ids = [None if d is None else int(d) for d, _ in rows]
+    first: dict = {}
+    size: dict = {}
+    for i, (_, c) in zip(ids, rows):
+        size[c] = size.get(c, 0) + 1
+        if i is not None and (c not in first or i < first[c]):
+            first[c] = i
+    keys = {c: hashlib.md5(str(i).encode()).hexdigest() for c, i in first.items()}
+    return [(i, keys.get(c), size[c]) for i, (_, c) in zip(ids, rows)]
 
 
 from kgx.canon import JACCARD_THRESHOLD as _J_THRESH  # noqa: E402

@@ -131,7 +131,7 @@ def test_dedup_clusters_exact_and_near(spark, shingle_k):
         (6, "!!!"),  # normalizes to empty -> clusters with 5
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    comp = canon.dedup_clusters(docs, shingle_k=shingle_k, bucket_cap=100)
+    comp = canon.dedup_clusters(docs, shingle_k=shingle_k, bucket_cap=100).df
     labels = {int(r.doc_id): r.component for r in comp.collect()}
     assert len(labels) == 6
     assert labels[1] == labels[2] == labels[3]
@@ -154,8 +154,8 @@ def test_dedup_clusters_metrics_seam(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     m: dict = {}
-    with_m = canon.dedup_clusters(docs, bucket_cap=100, metrics=m)
-    plain = canon.dedup_clusters(docs, bucket_cap=100)
+    with_m = canon.dedup_clusters(docs, bucket_cap=100, metrics=m).df
+    plain = canon.dedup_clusters(docs, bucket_cap=100).df
     assert with_m.exceptAll(plain).count() == 0
     assert plain.exceptAll(with_m).count() == 0
     assert set(m) == {"n_reps", "candidate_pairs", "verified_pairs"}
@@ -303,7 +303,7 @@ def test_dedup_driver_budget_falls_back_to_shuffle(spark, monkeypatch):
 
     def groups():
         comps: dict = {}
-        for r in canon.dedup_clusters(docs).collect():
+        for r in canon.dedup_clusters(docs).df.collect():
             comps.setdefault(r.component, set()).add(int(r.doc_id))
         return {frozenset(g) for g in comps.values()}
 

@@ -92,7 +92,7 @@ def test_driver_rows_sizes_a_frame_empty_only_at_runtime(spark):
     docs = spark.createDataFrame(
         [(str(i), t) for i, t in enumerate(texts)], "doc_id string, text string"
     )
-    comp = canon.dedup_clusters(docs).collect()
+    comp = canon.dedup_clusters(docs).df.collect()
     assert len(comp) == 12
     assert len({r["component"] for r in comp}) == 12
 
@@ -139,28 +139,32 @@ def test_driver_regime_matches_forced_fallback(spark, monkeypatch, name):
 def test_driver_regime_job_counts(spark):
     """Fixed cost of the driver regimes and of t13, pinned as Spark jobs
     per call on sf0.001 (the second call; the first warms the session):
-    s03 2, s04 3, g05 7, g08 5, t07 5, t13 5.
+    s03 2, s04 3, g05 7, g08 5, t07 2, t13 5.
 
-    t07 took 7 jobs while its exact duplicates were an h-window over the
-    signature rows and its members a join to the driver labels; it now
-    finishes on the driver from one collect of the signature pin. s03 took
-    6 as band joins, a query collect and a re-rank window, against 2 now
-    (the pin and its collect). Before the tables were read with declared
-    schemas (kgx.ops.TABLES) every load submitted one parquet
-    schema-inference job, and the same calls took s04 4, g05 12, g08 8
-    (one, five and three table loads more); t07 took 14 jobs with its
-    blocking, verification and CC as distributed joins, and t13 13 with a
-    separate corpus count, an avgdl aggregate and df/doclen joins. Before
-    the driver regimes the distributed forms took s04 13, g05 30, g08 15:
-    s04 pinned the quantized corpus, ran two Lloyd rounds as UDF passes
-    plus centroid-sum aggregates and a final assignment pass, then probed
-    and re-ranked under two windows; g05 ran three unrolled join+sum
-    rounds, a node count and a final pin; g08 ran CC with a separate size
-    probe, then the mapping aggregate, its pin and a second size probe.
-    What is left is the edge build's stages, one pin per gate and one
-    collect (t07: the spread exchange, the signature pin, its collect and
-    t07's own cluster window; t13: the corpus-scalar aggregate, the tf
-    aggregate and the shared window exchange)."""
+    t07 took 5 jobs while its signatures ran as a mapInArrow pass over the
+    executors (the spread exchange, the signature pin and its collect, and
+    t07's own two-stage cluster window over the driver labels); it now
+    signs a corpus within canon.DEDUP_DRIVER_MAX_BYTES on the driver from
+    one collect of (id, text), after one bounded size probe, and computes
+    its cluster window from the driver rows. It took 7 while its exact
+    duplicates were an h-window over the signature rows and its members a
+    join to the driver labels. s03 took 6 as band joins, a query collect
+    and a re-rank window, against 2 now (the pin and its collect). Before
+    the tables were read with declared schemas (kgx.ops.TABLES) every load
+    submitted one parquet schema-inference job, and the same calls took
+    s04 4, g05 12, g08 8 (one, five and three table loads more); t07 took
+    14 jobs with its blocking, verification and CC as distributed joins,
+    and t13 13 with a separate corpus count, an avgdl aggregate and
+    df/doclen joins. Before the driver regimes the distributed forms took
+    s04 13, g05 30, g08 15: s04 pinned the quantized corpus, ran two Lloyd
+    rounds as UDF passes plus centroid-sum aggregates and a final
+    assignment pass, then probed and re-ranked under two windows; g05 ran
+    three unrolled join+sum rounds, a node count and a final pin; g08 ran
+    CC with a separate size probe, then the mapping aggregate, its pin and
+    a second size probe. What is left is the edge build's stages, one pin
+    per gate and one collect (t07: the size probe and the collect; t13:
+    the corpus-scalar aggregate, the tf aggregate and the shared window
+    exchange)."""
     queries = {**REGIME_QUERIES, "t13_bm25_topk": textops.t13_bm25_topk}
     counts = {}
     for name, fn in queries.items():
@@ -172,7 +176,7 @@ def test_driver_regime_job_counts(spark):
         "s04_ann_ivf": 3,
         "g05_nation_pagerank": 7,
         "g08_sameas_resolution": 5,
-        "t07_minhash_clusters": 5,
+        "t07_minhash_clusters": 2,
         "t13_bm25_topk": 5,
     }
 
@@ -197,6 +201,13 @@ def _dedup_corpus(spark):
     return spark.createDataFrame(rows, "doc_id string, text string")
 
 
+def _groups(rows):
+    out: dict = {}
+    for doc, comp in rows:
+        out.setdefault(comp, set()).add(doc)
+    return sorted(map(sorted, out.values()))
+
+
 def test_dedup_clusters_driver_rows_match_forced_fallback(spark, monkeypatch):
     """dedup_clusters' driver regime gives the distributed form's rows,
     label for label, on a corpus with the shapes its exact-duplicate step
@@ -207,27 +218,21 @@ def test_dedup_clusters_driver_rows_match_forced_fallback(spark, monkeypatch):
     labels differ ('h:' hashes) but the groups are the same."""
     from kgx import canon
 
-    def groups(rows):
-        out: dict = {}
-        for doc, comp in rows:
-            out.setdefault(comp, set()).add(doc)
-        return sorted(map(sorted, out.values()))
-
     docs = _dedup_corpus(spark)
-    driver = sorted(tuple(r) for r in canon.dedup_clusters(docs).collect())
+    driver = sorted(tuple(r) for r in canon.dedup_clusters(docs).df.collect())
     assert len(driver) == 14
-    assert groups(driver) == sorted(
+    assert _groups(driver) == sorted(
         [["1", "2", "3", "6"], ["4", "5", "8"], ["7"], ["10", "11", "9"], ["12"]]
     )
     monkeypatch.setattr(util, "DRIVER_MAX_ROWS", 10)
-    members = canon.dedup_clusters(docs)
+    members = canon.dedup_clusters(docs).df
     assert "Join" in members._jdf.queryExecution().executedPlan().toString()
     assert sorted(tuple(r) for r in members.collect()) == driver
     monkeypatch.setattr(util, "DRIVER_MAX_ROWS", 0)
     monkeypatch.setattr(util, "DRIVER_MAX_BYTES", 0)
-    fallback = sorted(tuple(r) for r in canon.dedup_clusters(docs).collect())
+    fallback = sorted(tuple(r) for r in canon.dedup_clusters(docs).df.collect())
     assert [d for d, _ in fallback] == [d for d, _ in driver]
-    assert groups(fallback) == groups(driver)
+    assert _groups(fallback) == _groups(driver)
 
 
 def test_dedup_clusters_driver_regime_is_a_local_scan(spark):
@@ -235,11 +240,118 @@ def test_dedup_clusters_driver_regime_is_a_local_scan(spark):
     frame: the output plans as a LocalTableScan and collects with no job."""
     from kgx import canon
 
-    out = canon.dedup_clusters(_dedup_corpus(spark))
+    out = canon.dedup_clusters(_dedup_corpus(spark)).df
     assert "LocalTableScan" in out._jdf.queryExecution().executedPlan().toString()
     rows, jobs = _jobs(spark, out.collect)
     assert len(rows) == 14
     assert jobs == 0
+
+
+def test_dedup_clusters_three_regimes_same_rows(spark, monkeypatch):
+    """The corpus through dedup_clusters' three regimes: driver
+    signatures, executor signatures with the driver clustering
+    (canon.DEDUP_DRIVER_MAX_BYTES zeroed) and the distributed form (the
+    shared budget zeroed). Both driver regimes return the same rows, label
+    for label, as a frame and as driver rows; the distributed CC labels
+    differ ('h:' hashes), so there the id groups are compared."""
+    from kgx import canon
+
+    docs = _dedup_corpus(spark)
+    signed = canon.dedup_clusters(docs)
+    want = sorted(signed.rows, key=str)
+    assert sorted(tuple(r) for r in signed.df.collect()) == sorted(want)
+    assert len(want) == 14
+    monkeypatch.setattr(canon, "DEDUP_DRIVER_MAX_BYTES", 0)
+    pinned = canon.dedup_clusters(docs)
+    assert sorted(pinned.rows, key=str) == want
+    assert sorted(tuple(r) for r in pinned.df.collect()) == sorted(want)
+    monkeypatch.setattr(util, "DRIVER_MAX_ROWS", 0)
+    monkeypatch.setattr(util, "DRIVER_MAX_BYTES", 0)
+    distributed = canon.dedup_clusters(docs)
+    assert distributed.rows is None
+    got = sorted(tuple(r) for r in distributed.df.collect())
+    assert [d for d, _ in got] == [d for d, _ in sorted(want)]
+    assert _groups(got) == _groups(want)
+
+
+def test_dedup_clusters_over_cap_pins_and_collects_no_text(spark, monkeypatch):
+    """Over canon.DEDUP_DRIVER_MAX_BYTES the corpus text is neither pinned
+    nor collected: the size probe brings only row sizes to the driver, and
+    the signature pin holds ids and hashes. Within the cap the one frame
+    holding the text that reaches the driver is the (id, text) collect."""
+    from kgx import canon
+
+    docs = _dedup_corpus(spark)
+    cls = type(docs)
+    seen: list = []
+
+    def record(name):
+        orig = getattr(cls, name)
+
+        def wrapper(self, *args, **kwargs):
+            seen.append((name, tuple(self.columns)))
+            return orig(self, *args, **kwargs)
+
+        monkeypatch.setattr(cls, name, wrapper)
+
+    for name in ("localCheckpoint", "checkpoint", "persist", "cache", "collect",
+                 "toArrow", "toPandas", "toLocalIterator", "take", "head", "first"):
+        record(name)
+    holds_text = lambda: [s for s in seen if "_text" in s[1] or "text" in s[1]]  # noqa: E731
+    canon.dedup_clusters(docs)
+    assert holds_text() == [("toArrow", ("surface", "_text"))]
+    seen.clear()
+    monkeypatch.setattr(canon, "DEDUP_DRIVER_MAX_BYTES", 0)
+    out = canon.dedup_clusters(docs)
+    assert out.rows is not None
+    assert ("toArrow", ("nb",)) in seen
+    assert ("localCheckpoint", ("surface", "h", "sh_hash", "sig")) in seen
+    assert holds_text() == []
+
+
+def _python_plans(spark, lo, hi):
+    """(jobs in the id window [lo, hi) that no SQL execution ran, physical
+    plans of the SQL executions that ran the others and name a Python
+    operator)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    jobs, python = set(range(lo, hi)), []
+    # the window's executions are among the latest
+    execs = store.executionsList(max(0, store.executionsCount() - 100), 100)
+    for i in range(execs.size()):
+        ex = execs.apply(i)
+        ids = {int(j) for j in ex.jobs().keys().mkString(",").split(",") if j}
+        if not ids & jobs:
+            continue
+        jobs -= ids
+        plan = ex.physicalPlanDescription()
+        if any(op in plan for op in ("Python", "InArrow", "InPandas")):
+            python.append(plan)
+    return sorted(jobs), python
+
+
+def test_t07_within_cap_runs_no_python_task(spark, monkeypatch):
+    """A warm t07 call within canon.DEDUP_DRIVER_MAX_BYTES signs the
+    corpus on the driver: every job it submits belongs to a SQL execution
+    whose physical plan holds no Python operator (mapInArrow, Arrow or
+    pandas UDFs), so no Python worker task runs. The executor signature
+    pass does show up as one."""
+    from kgx import canon
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    listener = spark.sparkContext._jsc.sc().listenerBus()
+
+    def window(fn):
+        lo = dag.nextJobId()
+        fn()
+        listener.waitUntilEmpty()
+        return _python_plans(spark, lo, dag.nextJobId())
+
+    run = lambda: textops.t07_minhash_clusters(spark, SF).collect()  # noqa: E731
+    run()
+    assert window(run) == ([], [])
+    monkeypatch.setattr(canon, "DEDUP_DRIVER_MAX_BYTES", 0)
+    stray, python = window(run)
+    assert stray == [] and len(python) == 1 and "MapInArrow" in python[0]
 
 
 @pytest.mark.parametrize("zero_budget", [False, True])

@@ -98,7 +98,7 @@ def test_dedup_clusters_degenerate_corpora(spark):
 
     def run(rows):
         df = spark.createDataFrame(rows, "doc_id string, text string")
-        out = canon.dedup_clusters(df, id_col="doc_id", text_col="text").collect()
+        out = canon.dedup_clusters(df, id_col="doc_id", text_col="text").df.collect()
         comps = {}
         for r in out:
             comps.setdefault(r.component, set()).add(r.doc_id)

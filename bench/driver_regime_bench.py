@@ -21,6 +21,13 @@ the driver form stops winning or its memory stops being small:
   ``driver_clusters``: the signatures on the executors and the clustering
   on the driver (canon.DEDUP_DRIVER_MAX_BYTES zeroed), between its
   driver-signature form and the fallback.
+- mapping: a dictionary of ``size`` distinct surfaces for
+  canon.canonical_mapping: noisy variants (0-3 random character edits)
+  of about size / 4 two-to-three-word org names with a legal suffix, and
+  5% punctuation-only surfaces. ``gate_bytes`` is what the mapping's
+  driver regime counts against canon.DEDUP_DRIVER_MAX_BYTES and
+  ``band_pairs`` what its driver LSH counts against the shared budget's
+  rows (a pair once per band it collides in).
 
 Inputs are pinned before timing. Each form runs ``reps`` times (after one
 untimed warm-up call at the smallest size); the driver form runs with every
@@ -28,7 +35,7 @@ cap lifted, the fallback with the shared budget zeroed. ``rss_mb`` is the
 driver process's peak resident set after the size's driver runs (it only
 grows, so sizes run ascending).
 
-Usage: python bench/driver_regime_bench.py g05|s03|s04|g08|t07 SIZE [SIZE ...]
+Usage: python bench/driver_regime_bench.py g05|s03|s04|g08|t07|mapping SIZE [SIZE ...]
        [--cpus 4] [--reps 3]
 Prints one JSON line per size.
 """
@@ -184,7 +191,58 @@ def _t07(spark, size):
     return run
 
 
-OPS = {"g05": _g05, "s03": _s03, "s04": _s04, "g08": _g08, "t07": _t07}
+def _mapping(spark, size):
+    import random
+
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    from kgx import canon, kernel
+    from kgx.util import local_frame
+
+    rng = random.Random(size)
+    letters = "abcdefghijklmnopqrstuvwxyz"
+    words = ["".join(rng.choice(letters) for _ in range(rng.randint(4, 9))).title()
+             for _ in range(400)]
+    suffixes = ["Ltd", "Ltd.", "Inc", "Group", "S.A.", "LLC", "Co.", "Holdings"]
+    names: set[str] = set()
+    while len(names) < size:
+        if rng.random() < 0.05:
+            names.add("".join(rng.choice("-.!*# ") for _ in range(rng.randint(1, 12))))
+            continue
+        base = " ".join(rng.sample(words, rng.randint(2, 3))) + " " + rng.choice(suffixes)
+        for _ in range(4):
+            v = base
+            for _ in range(rng.randint(0, 3)):
+                i = rng.randrange(len(v))
+                c = rng.choice(letters + " .")
+                v = rng.choice([v[:i] + c + v[i + 1:], v[:i] + c + v[i:], v[:i] + v[i + 1:]])
+            names.add(v)
+    names = sorted(names)[:size]
+    mentions = local_frame(spark, [(s,) for s in names], "surface string").localCheckpoint()
+
+    def run():
+        m = canon.canonical_mapping(mentions).df
+        return tuple(m.agg(
+            F.count(F.lit(1)),
+            F.sum((F.col("surface") != F.col("rep")).cast("long")),
+            F.sum(F.pmod(F.xxhash64("surface", "rep"), F.lit(2**31))),
+        ).first())
+
+    banded = [s for s in names if kernel.normalize_surface(s)]
+    counted = []
+    canon._lsh_on_driver(
+        pa.Table.from_batches([canon._keyed_sigs(banded, banded, "char", 3, {})]),
+        None, canon.N_BANDS, 0.0, canon.JACCARD_THRESHOLD,
+        fits=lambda n_pairs, _: counted.append(n_pairs) or True,
+    )
+    run.info = {"gate_bytes": sum(2 * len(s.encode()) + 8 for s in names),
+                "band_pairs": counted[-1]}
+    return run
+
+
+OPS = {"g05": _g05, "s03": _s03, "s04": _s04, "g08": _g08, "t07": _t07,
+       "mapping": _mapping}
 
 
 def _lift(monkey, form):
@@ -240,7 +298,7 @@ def main() -> None:
                 walls[form].append(time.perf_counter() - t0)
                 spark.catalog.clearCache()
         rss = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
-        line = {"op": a.op, "size": size}
+        line = {"op": a.op, "size": size, **getattr(run, "info", {})}
         line.update({f"{f}_s": round(statistics.median(walls[f]), 3) for f in forms})
         line.update({f"{f}_all_s": [round(x, 3) for x in walls[f]] for f in forms})
         line["same_rows"] = all(results[f] == results["fallback"] for f in forms)

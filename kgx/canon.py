@@ -1,29 +1,45 @@
-"""Entity canonicalization: MinHash-LSH blocking + connected components.
+"""Entity canonicalization and near-duplicate clustering: MinHash-LSH
+blocking, exact-Jaccard matching, connected components.
 
 Replaces the reference's O(n^2) pairwise similarity loop + networkx
 connected_components (scripts/analysis/PDD_categorization.py:46-74) with the
-scale path mandated by BASELINE.json:north_rule:
+scale path mandated by BASELINE.json:north_rule. One pipeline serves both
+of its callers, keyed by surface or by document id: canonical_mapping
+(entity surfaces, character 3-grams, no exact-duplicate step since the
+surfaces are distinct) and dedup_clusters (documents, token k-grams).
 
-1. normalize surface + character-3-gram shingles — pure JVM expressions
-   (lower/regexp_replace/substring via transform over a sequence), no Python;
-2. MinHash signature: 64 hashes = array_min over xxhash64(shingle, seed_i)
-   (deterministic across any parallelism — critical for N-vs-4N reproducibility,
-   SURVEY.md §7 "LSH determinism");
-3. banding b=32 x r=2: P(miss | Jaccard 0.5) = (1 - 0.25)^32 ≈ 1e-4, so
-   candidate recall is effectively total at the similarity levels that matter,
-   while candidate count stays near-linear;
-4. candidate pairs = self-equi-join on (band_id, band_hash) — a hash-partitioned
-   shuffle join on the band key, NEVER an all-pairs product;
-5. exact-Jaccard verification on the full shingle sets (array_intersect /
-   array_union) >= threshold — LSH is only a blocker, correctness comes from the
-   exact check, so output is deterministic given the input set;
-6. connected components via alternating large-star/small-star contraction
-   over the edge list (GraphFrames is not on this classpath; Kiveris et al.,
-   'Connected Components in MapReduce and Beyond'), localCheckpoint per round
-   to cut lineage — O(log n) rounds to a star fixpoint regardless of component
-   diameter, and a non-converged exit raises instead of splitting components;
-7. representative per component = min (normalized, raw) surface, matching the
-   golden rule in kgx.fixtures._canon_groups.
+1. signatures, one kernel (_keyed_sigs): normalize (kernel.normalize_surface,
+   mirrored JVM-side by normalize_col), hash each k-gram shingle to a
+   stable 64-bit id (a crc32 pair), and take a 64-slot MinHash as the min of
+   splitmix64(id ^ seed_i) — numpy over Arrow batches, on the driver for a
+   small input and as a ``mapInArrow`` pass (_keyed_sig_gen) over the
+   executors otherwise. An earlier all-JVM signature (nested
+   transform()/xxhash64 expressions) ran ~9 ms a row: higher-order lambdas
+   are interpreted, not whole-stage-codegen'd. Deterministic across any
+   parallelism, critical for N-vs-4N reproducibility (SURVEY.md §7 "LSH
+   determinism");
+2. banding b=32 x r=2: P(miss | Jaccard 0.5) = (1 - 0.25)^32 ≈ 1e-4 and
+   (1 - 0.16)^32 ≈ 0.004 at the 0.4 threshold, while the candidate count
+   stays near-linear;
+3. candidate pairs = rows colliding in a band: numpy buckets on the driver
+   (_lsh_on_driver) or a hash-partitioned self-equi-join on (band_id,
+   band_hash) (candidate_pairs), NEVER an all-pairs product;
+4. exact-Jaccard verification on the shingle-id sets >= threshold — LSH is
+   only a blocker, correctness comes from the exact check, so output is
+   deterministic given the input set;
+5. connected components: the driver union-find (min_components) within the
+   driver budget, else alternating large-star/small-star contraction over
+   the edge list (GraphFrames is not on this classpath; Kiveris et al.,
+   'Connected Components in MapReduce and Beyond'), localCheckpoint per
+   round to cut lineage — O(log n) rounds to a star fixpoint regardless of
+   component diameter, and a non-converged exit raises instead of
+   splitting components;
+6. canonical_mapping's representative per component = min (normalized,
+   raw) surface, matching the golden rule in kgx.fixtures._canon_groups.
+
+Steps 3-5 run on the driver or on the executors under the engine's driver
+budget (kgx.util.fits_driver); both forms give the same rows up to a 64-bit
+hash collision.
 """
 
 from __future__ import annotations
@@ -60,55 +76,6 @@ class CanonicalMapping:
     def count(self) -> int:
         """Mapping row count; free when the rows are driver-side."""
         return len(self.rows) if self.rows is not None else self.df.count()
-
-
-def banding_recall(j: float, n_bands: int, rows_per_band: int) -> float:
-    """P(a pair at Jaccard ``j`` collides in at least one band):
-    1 - (1 - j^r)^b — the closed-form LSH blocking recall."""
-    return 1.0 - (1.0 - j**rows_per_band) ** n_bands
-
-
-def banding_for(
-    target_j: float, miss_rate: float, max_hashes: int = 256
-) -> tuple[int, int]:
-    """Pick (n_bands, rows_per_band) so that a pair at Jaccard >= ``target_j``
-    misses LSH blocking with probability <= ``miss_rate``, using at most
-    ``max_hashes`` MinHash slots (n_bands * rows_per_band <= max_hashes).
-
-    Among feasible settings, rows_per_band is maximized: more rows per band is
-    the precision knob — it suppresses candidates from the below-threshold mass
-    (the r=2 candidate explosion on templated corpora, BENCH/BASELINE.md) while
-    the band count b >= log(miss)/log(1 - j^r) keeps recall at the target.
-    The returned miss bound holds for every j' >= target_j because recall is
-    monotone in j. Raises when no setting within max_hashes achieves the miss
-    rate (target_j too low for the hash budget — raise the budget or the
-    threshold).
-    """
-    import math
-
-    if not 0.0 < target_j < 1.0:
-        raise ValueError(f"target_j must be in (0,1), got {target_j}")
-    if not 0.0 < miss_rate < 1.0:
-        raise ValueError(f"miss_rate must be in (0,1), got {miss_rate}")
-    best: tuple[int, int] | None = None
-    for r in range(1, max_hashes + 1):
-        p_band = target_j**r
-        if p_band >= 1.0:  # float rounding edge: j ~ 1
-            b = 1
-        elif p_band == 0.0:  # underflow: no band count can ever collide
-            continue
-        else:
-            # log1p(-p), not log(1-p): 1-p rounds to 1.0 once p < ~1e-17 and
-            # log(1.0) == 0 divides by zero; log1p stays exact for tiny p
-            b = math.ceil(math.log(miss_rate) / math.log1p(-p_band))
-        if b >= 1 and b * r <= max_hashes:
-            best = (b, r)  # keep scanning: larger r that still fits wins
-    if best is None:
-        raise ValueError(
-            f"no (bands, rows) within {max_hashes} hashes reaches "
-            f"miss<={miss_rate} at J>={target_j}"
-        )
-    return best
 
 
 def normalize_col(col):
@@ -204,63 +171,6 @@ def _hash_and_sig(grams: list[str], seeds):
     return h, sig
 
 
-def _sig_gen(shingle: str):
-    """mapInPandas generator: surface -> (surface, norm, sh_hash, sig).
-
-    Shingle hashing + the 64-slot MinHash run in numpy inside Arrow batches.
-    An earlier all-JVM version (nested transform()/xxhash64 higher-order
-    expressions) was ~9 ms/doc: HOF lambdas are interpreted, not
-    whole-stage-codegen'd, so each hash call pays boxed expression-eval — the
-    'UDFs are the slow path' rule inverts here.
-    """
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        from kgx import kernel
-
-        seeds = _minhash_seeds()
-        with np.errstate(over="ignore"):
-            for pdf in batches:
-                out = {"surface": [], "norm": [], "sh_hash": [], "sig": []}
-                for s in pdf["surface"]:
-                    norm = kernel.normalize_surface(s)
-                    grams = _py_grams_of_norm(norm, shingle)
-                    if not grams or grams == [""]:
-                        continue  # entity path: nothing to canonicalize
-                    h, sig = _hash_and_sig(grams, seeds)
-                    out["surface"].append(s)
-                    out["norm"].append(norm)
-                    out["sh_hash"].append(h.view(np.int64))
-                    out["sig"].append(sig.view(np.int64))
-                yield pd.DataFrame(out)
-
-    return gen
-
-
-_SURF_SCHEMA = (
-    "surface string, norm string, sh_hash array<long>, sig array<long>"
-)
-
-
-def surfaces_with_shingles(mentions: DataFrame, shingle: str = "char") -> DataFrame:
-    """distinct surface -> (surface, norm, sh_hash, sig).
-
-    sh_hash = distinct stable 64-bit shingle ids; Jaccard verification runs on
-    these long arrays (same set semantics as the strings, far cheaper). The
-    result is localCheckpoint'ed: downstream band hashing indexes sig ~64
-    times, and on an unmaterialized column each access would recompute the
-    whole signature.
-    """
-    df = (
-        mentions.select("surface")
-        .distinct()
-        .mapInPandas(_sig_gen(shingle), schema=_SURF_SCHEMA)
-    )
-    return df.localCheckpoint()
-
-
 _KEYED_SCHEMA = "surface string, h string, sh_hash array<long>, sig array<long>"
 
 
@@ -311,11 +221,14 @@ def _token_gram_hashes(norm: str, k: int, memo: dict):
 
 
 def _keyed_sigs(keys, texts, shingle: str, k: int, memo: dict):
-    """The signature kernel of dedup_clusters: (ids, texts) -> one Arrow
-    RecordBatch of (surface=id, h=sha256(text), sh_hash, sig), row for row.
-    The executor pass (_keyed_sig_gen) runs it per Arrow batch and the
-    driver-signature regime over the collected corpus, so both regimes
-    compute the same bytes. ``memo`` is the token-hash memo, reused across
+    """The one signature kernel, of canonical_mapping and dedup_clusters:
+    (ids, texts) -> one Arrow RecordBatch of (surface=id, h=sha256(text),
+    sh_hash, sig), row for row. The executor pass (_keyed_sig_gen) runs it
+    per Arrow batch and the driver-signature regimes over the names or the
+    collected corpus, so every regime computes the same bytes. In char
+    mode a text with an empty normalized form signs as the one shingle
+    ``""``, so all such texts share a shingle set (canonical_mapping keeps
+    them out of its bands). ``memo`` is the token-hash memo, reused across
     the calls of one batch iterator.
 
     The output list columns are Arrow ListArrays over one flattened int64
@@ -379,8 +292,8 @@ def _keyed_sig_gen(shingle: str, k: int = 3, counters=None):
     64-char content hash, and fixed-width hash arrays, so no downstream
     shuffle, join or collect ever carries document bytes (round-1 review
     finding). A corpus small enough for the driver-signature regime
-    reaches the driver as (id, text) instead and never runs this pass
-    (dedup_clusters)."""
+    reaches the driver as (id, text) instead, and names already on the
+    driver are signed there: neither runs this pass."""
 
     def gen(batches):
         memo: dict = {}
@@ -467,7 +380,7 @@ def dedup_clusters(
     """(id, text) -> DocClusters of (id string, component): near-duplicate
     document clustering.
 
-    The corpus-scale variant of canonical_mapping, keyed by document id:
+    The same pipeline as canonical_mapping, keyed by document id:
 
     1. signatures: (id, sha256(text) as ``h``, shingle ids, MinHash sig)
        per doc, one kernel (_keyed_sigs) wherever it runs;
@@ -685,10 +598,11 @@ def _clusters_on_driver(sigs, bucket_cap, n_bands, est_gate, threshold):
     return rows, counts
 
 
-def _lsh_on_driver(reps, bucket_cap, n_bands, est_gate, threshold):
-    """dedup_clusters' blocking and verification over the reps' rows,
-    taken from the collected signature pin (an Arrow table with surface,
-    sh_hash and sig columns; _clusters_on_driver takes them), in numpy: the
+def _lsh_on_driver(reps, bucket_cap, n_bands, est_gate, threshold, fits=None):
+    """The driver blocking and verification of dedup_clusters and
+    canonical_mapping over signature rows (an Arrow table with surface,
+    sh_hash and sig columns; _clusters_on_driver or _mapping_on_driver
+    takes them), in numpy: the
     same banding (a band is ``N_HASHES // n_bands`` consecutive sig slots;
     buckets over ``bucket_cap`` members are dropped), the same 64-slot
     agreement gate (skipped when ``est_gate`` is 0) and the same exact
@@ -702,7 +616,11 @@ def _lsh_on_driver(reps, bucket_cap, n_bands, est_gate, threshold):
 
     Returns ``(edges, counts)``: the distinct verified (a, b) surface pairs
     and the metrics dedup_clusters reports (``n_reps``, distinct gated
-    ``candidate_pairs``, ``verified_pairs``), counted as they are made."""
+    ``candidate_pairs``, ``verified_pairs``), counted as they are made.
+    With ``fits`` (kgx.util.fits_driver) the bands' pairs, one int64 code
+    each and a pair once per band it collides in, are held on the driver
+    only while ``fits(pairs, 8 * pairs)``: past that it returns None, each
+    band's pairs counted before they are built."""
     import numpy as np
 
     surf = reps.column("surface").to_pylist()
@@ -714,6 +632,7 @@ def _lsh_on_driver(reps, bucket_cap, n_bands, est_gate, threshold):
     r = N_HASHES // n_bands
     cap = n if bucket_cap is None else bucket_cap
     codes = [np.empty(0, dtype=np.int64)]
+    n_pairs = 0
     for b in range(n_bands):
         keys = sig[:, b * r : (b + 1) * r]
         # stable sort by the band's slots: a bucket is a run of equal keys,
@@ -729,6 +648,9 @@ def _lsh_on_driver(reps, bucket_cap, n_bands, est_gate, threshold):
         # every row pairs with each later member of its bucket: offset k
         # at a time, over the rows that still have a k-th later member
         live = np.flatnonzero((size <= cap) & (after > 0))
+        n_pairs += int(after[live].sum())
+        if fits is not None and not fits(n_pairs, 8 * n_pairs):
+            return None
         k = 1
         while live.size:
             codes.append(order[live] * n + order[live + k])
@@ -862,22 +784,6 @@ def verified_edges(pairs: DataFrame, threshold: float = JACCARD_THRESHOLD) -> Da
     )
 
 
-# the driver regime of the canonical mapping (all-pairs on the driver) and of
-# the store's entity dictionary (TripleStore.known_entities)
-DRIVER_CANON_MAX_SURFACES = 1000
-
-
-def _py_shingles(surface: str, shingle: str, k: int = 3) -> frozenset[str]:
-    from kgx import kernel
-
-    norm = kernel.normalize_surface(surface)
-    if shingle == "char":
-        return frozenset(kernel.shingles(surface))
-    if not norm.split():
-        return frozenset()
-    return frozenset(_py_grams_of_norm(norm, "token", k))
-
-
 def min_components(pairs, nodes=()) -> dict[str, str]:
     """Union-find on the driver: every node (the endpoints of ``pairs`` plus
     ``nodes``) -> the minimum node of its connected component. Union keeps
@@ -901,44 +807,6 @@ def min_components(pairs, nodes=()) -> dict[str, str]:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
     return {s: find(s) for s in parent}
-
-
-def _driver_canonical_mapping(spark, names, known_pairs, shingle, threshold):
-    """Pure-driver exact mapping for small dictionaries (same semantics as the
-    distributed path: exact-Jaccard >= threshold edges, known-group edges,
-    sticky known reps, min-(norm,surface) representative). ``names`` is the
-    sorted node list (the batch's surfaces plus every known surface and rep)
-    and ``known_pairs`` the known (surface, rep) rows, both already on the
-    driver: canonical_mapping collected them once, or the store read them."""
-    from kgx import kernel
-    from kgx.util import local_frame
-
-    shs = {s: _py_shingles(s, shingle) for s in names}
-    edges = list(known_pairs)
-    for i, a in enumerate(names):
-        sa = shs[a]
-        if not sa:
-            continue
-        for b in names[i + 1 :]:
-            sb = shs[b]
-            if not sb:
-                continue
-            inter = len(sa & sb)
-            if inter and inter / len(sa | sb) >= threshold:
-                edges.append((a, b))
-
-    comps: dict[str, list[str]] = {}
-    for s, root in min_components(edges, names).items():
-        comps.setdefault(root, []).append(s)
-    known_reps = {rep for _, rep in known_pairs}
-    rows = []
-    for members in comps.values():
-        cands = [m for m in members if m in known_reps] or members
-        rep = min(cands, key=lambda v: (kernel.normalize_surface(v), v))
-        rows.extend((m, rep) for m in members)
-    return CanonicalMapping(
-        local_frame(spark, rows, "surface string, rep string"), rows
-    )
 
 
 def mention_surfaces(mentions: DataFrame) -> list[str] | None:
@@ -1202,6 +1070,43 @@ def _distributed_cc(nodes: DataFrame, edges: DataFrame, max_iter: int = 40) -> D
     )
 
 
+def _mapping_on_driver(names, known_pairs, shingle, bucket_cap, n_bands):
+    """canonical_mapping's driver regime over the node list ``names``: one
+    (surface, rep) row per name, and no Spark job; or None when the bands'
+    pairs do not fit the driver budget. A name whose normalized form is
+    empty is not signed and enters no band (char mode would sign every
+    such name as the shingle ``""`` and merge them all), so only a known
+    pair can link it. The others are signed by _keyed_sigs and blocked and
+    verified by _lsh_on_driver, ungated, as the distributed form's band
+    join is; the known pairs join the verified edges in the union-find,
+    and a component holding known reps keeps the min (norm, surface) of
+    them, else of all its members."""
+    import pyarrow as pa
+
+    from kgx import kernel
+    from kgx.util import fits_driver
+
+    norm = {s: kernel.normalize_surface(s) for s in names}
+    banded = [s for s in names if norm[s]]
+    sigs = pa.Table.from_batches([_keyed_sigs(banded, banded, shingle, 3, {})])
+    lsh = _lsh_on_driver(
+        sigs, bucket_cap, n_bands, 0.0, JACCARD_THRESHOLD, fits=fits_driver
+    )
+    if lsh is None:
+        return None
+    edges, _ = lsh
+    comps: dict[str, list[str]] = {}
+    for s, root in min_components([*edges, *known_pairs], names).items():
+        comps.setdefault(root, []).append(s)
+    known_reps = {rep for _, rep in known_pairs}
+    rows = []
+    for members in comps.values():
+        cands = [m for m in members if m in known_reps] or members
+        rep = min(cands, key=lambda v: (norm[v], v))
+        rows.extend((m, rep) for m in members)
+    return rows
+
+
 def canonical_mapping(
     mentions: DataFrame,
     known: CanonicalMapping | DataFrame | None = None,
@@ -1212,82 +1117,98 @@ def canonical_mapping(
 ) -> CanonicalMapping:
     """mentions(surface,...) -> (surface, rep): representative per component.
 
-    rep = surface of the min (norm, surface) struct in the component — struct
-    min gives lexicographic ordering, identical to the golden rule.
+    The node set is the batch's distinct surfaces plus every known surface
+    and rep, and the mapping is dedup_clusters' pipeline with the surface
+    as both key and text (char 3-grams): _keyed_sigs signatures, LSH
+    banding and exact Jaccard >= JACCARD_THRESHOLD, then connected
+    components over the verified edges plus the known pairs. The node set
+    is distinct, so there is no exact-duplicate step. A surface with an
+    empty normalized form (``""``, ``"---"``) enters no band and maps to
+    itself unless a known pair links it.
 
-    ``known`` is an optional persisted (surface, rep) dictionary from earlier
-    snapshot commits (the cross-run stickiness dimension): known surfaces join
-    the node set, known groupings are injected as edges, and a component that
-    contains previously-assigned reps keeps the smallest of them, so triples
-    committed in earlier runs stay consistent with new ones.
+    rep = surface of the min (norm, surface) in the component — the golden
+    rule (kgx.fixtures._canon_groups). ``known`` is an optional persisted
+    (surface, rep) dictionary from earlier snapshot commits (the cross-run
+    stickiness dimension): its groupings are injected as edges, and a
+    component that contains previously-assigned reps keeps the smallest of
+    them, so triples committed in earlier runs stay consistent with new
+    ones.
 
-    Two regimes, same mapping:
+    Two regimes, same rows (up to a 64-bit hash collision: the driver
+    buckets a band by its slot values, the join by their xxhash64):
 
-    - driver: the node set (the batch's distinct mentions plus every known
-      surface and rep) fits DRIVER_CANON_MAX_SURFACES and the driver budget
-      (kgx.util.fits_driver), and the exact all-pairs mapping runs on the
-      driver. When ``known`` carries driver ``rows`` (the store's
-      driver-regime dictionary, a streaming run's cached mapping) the probe
-      collects only the batch's mentions (mention_surfaces) — or nothing
-      when the caller already holds them and passes them as ``surfaces`` —
-      and the known pairs are read from the rows, never collected.
-    - distributed: MinHash-LSH blocking + connected components, for a node
-      set over the cap. A ``known`` held only as a frame (the store's
-      dictionary over its driver budget) is probed first: one bounded
-      ``limit(cap + 1)`` collect of its distinct union with the mentions
-      decides the regime and, under the cap, already holds the node list.
+    - driver: the node set is on the driver (the batch's mentions from one
+      bounded collect, mention_surfaces, or the caller's ``surfaces``,
+      plus a ``known`` held as ``rows``) and, counted as the (id, text)
+      corpus dedup_clusters sizes (twice the utf-8 bytes plus 8 a name),
+      within DEDUP_DRIVER_MAX_BYTES and the driver budget
+      (kgx.util.fits_driver); and the bands' pairs, which the driver LSH
+      holds as one int64 code each, fit that budget as rows:
+      _mapping_on_driver, no Spark job beyond the mention collect.
+    - distributed: otherwise, including a ``known`` held only as a frame
+      (the store's dictionary over its driver budget, by construction over
+      this cap): the distinct node set is signed by a ``mapInArrow`` pass
+      (_keyed_sig_gen, one task per core) and pinned, then the band
+      self-join and verification (candidate_pairs, verified_edges),
+      connected_components, and the rep rule as aggregates with the norm
+      from normalize_col.
 
-    Returns a CanonicalMapping; its ``rows`` are set only on the driver path.
+    Time follows the band pairs, not the names: with r = 2 rows a band,
+    names that share words collide often, and the driver checks every
+    distinct pair one at a time. Measured with
+    ``bench/driver_regime_bench.py mapping`` (variants with 0-3 character
+    edits of size / 4 two-to-three-word org names from a 400-word
+    vocabulary, 5% punctuation-only surfaces; ``local[4]``, 4 vCPU,
+    medians of 3; driver / distributed in s, the gate's bytes and band
+    pairs in brackets): 1k names [53 KB, 24k] 0.42 / 6.64, 5k [268 KB,
+    361k] 1.81 / 7.36, 10k [532 KB, 1.39M] 7.01 / 9.92, 12.5k [665 KB,
+    2.06M] 9.17 / 11.15, 15k [799 KB, 3.35M] 14.6 / 14.2, 20k [1.07 MB,
+    5.31M] 21.6 / 16.0 (driver peak RSS 643 MB); same rows at every size.
+    The budget's 2M rows bound the band pairs where the driver stops
+    winning, and on such names binds long before the byte cap.
+
+    Returns a CanonicalMapping; its ``rows`` are set by the driver regime.
     """
-    from kgx.util import fits_driver
+    from kgx.util import fits_driver, local_frame
 
+    spark = mentions.sparkSession
     if isinstance(known, DataFrame):
         known = CanonicalMapping(known)
-    nodes = mentions.select("surface").distinct()
+    # the known pairs on the driver; None for a known held only as a frame
+    pairs = [] if known is None else known.rows
+    if pairs is not None:
+        if surfaces is None:
+            surfaces = mention_surfaces(mentions)
+        if surfaces is not None:
+            names = sorted({*surfaces, *(x for pair in pairs for x in pair)})
+            nbytes = sum(2 * len(s.encode()) + 8 for s in names)
+            if nbytes <= DEDUP_DRIVER_MAX_BYTES and fits_driver(len(names), nbytes):
+                rows = _mapping_on_driver(names, pairs, shingle, bucket_cap, n_bands)
+                if rows is not None:
+                    return CanonicalMapping(
+                        local_frame(spark, rows, "surface string, rep string"), rows
+                    )
+
+    nodes = mentions.select("surface")
     if known is not None:
         nodes = nodes.unionByName(known.df.select("surface")).unionByName(
             known.df.select(F.col("rep").alias("surface"))
-        ).distinct()
-    pairs = None
-    if known is None or known.rows is not None:
-        pairs = known.rows if known is not None else []
-        if surfaces is None:
-            surfaces = mention_surfaces(mentions)
-        names = None if surfaces is None else sorted(
-            {*surfaces, *(x for pair in pairs for x in pair)}
         )
-    else:
-        # one limit(cap+1) collect both decides the path and holds the node
-        # list (count() then collect() would run the upstream twice)
-        names = sorted(
-            r[0] for r in nodes.limit(DRIVER_CANON_MAX_SURFACES + 1).collect()
-        )
-    if names is not None and fits_driver(
-        len(names), sum(len(s.encode()) for s in names), DRIVER_CANON_MAX_SURFACES
-    ):
-        # tiny dictionary: ~10 near-empty distributed jobs cost more scheduler
-        # latency than the whole computation — do exact all-pairs on the driver
-        # (strictly more candidate recall than LSH blocking, same exact-Jaccard
-        # gate, same rep rule; the all-pairs Jaccard is quadratic, hence the
-        # site cap)
-        if pairs is None:
-            pairs = [(r["surface"], r["rep"]) for r in known.df.collect()]
-        return _driver_canonical_mapping(
-            mentions.sparkSession, names, pairs, shingle, JACCARD_THRESHOLD
-        )
-    # size the stage to the dictionary, not the session: a few-thousand-surface
-    # dictionary on 64 shuffle partitions means every downstream stage pays for
-    # dozens of empty tasks (measured: the whole mapping phase was SLOWER on 32
-    # cores than 8 before this)
-    n = nodes.count()
-    # ~250 surfaces per task: signature computation is ~ms per surface for
-    # document-sized strings, so tasks stay in the 0.1-1s sweet spot; capped at
-    # 4x parallelism so a billion-surface dictionary doesn't over-split
-    par = mentions.sparkSession.sparkContext.defaultParallelism
-    parts = max(1, min(4 * par, n // 250 + 1))
-    nodes = nodes.repartition(parts)
-    surf = surfaces_with_shingles(nodes, shingle=shingle)
-    edges = verified_edges(candidate_pairs(surf, bucket_cap=bucket_cap, n_bands=n_bands))
+    # one task per core (util.spread's rule): the distinct's partition
+    # count says nothing about the Python pass's width once AQE has
+    # coalesced it. The pin is read by the band join, the components and
+    # the rep rule, so the signature pass runs once.
+    surf = (
+        nodes.distinct()
+        .repartition(spark.sparkContext.defaultParallelism)
+        .select("surface", F.col("surface").alias("_text"))
+        .mapInArrow(_keyed_sig_gen(shingle, 3), schema=_KEYED_SCHEMA)
+        .select("surface", "sh_hash", "sig", normalize_col("surface").alias("norm"))
+        .localCheckpoint()
+    )
+    edges = verified_edges(candidate_pairs(
+        surf.filter(F.col("norm") != ""), bucket_cap=bucket_cap, n_bands=n_bands
+    ))
     if known is not None:
         known_edges = (
             known.df.filter(F.col("surface") != F.col("rep"))

@@ -709,9 +709,8 @@ class TripleStore:
 
     def _entity_rows(self, dirs: list[str]) -> list[tuple[str, str]] | None:
         """The distinct (surface, rep) rows of the snapshot ``dirs``, read
-        with pyarrow, when the snapshots fit the dictionary's driver budget
-        (canon.DRIVER_CANON_MAX_SURFACES rows and kgx.util.fits_driver); else
-        None. The size comes from the parquet footers (row counts and
+        with pyarrow, when the snapshots fit the driver budget
+        (kgx.util.fits_driver); else None. The size comes from the parquet footers (row counts and
         uncompressed row-group bytes), so an over-budget dictionary is never
         read: zero Spark jobs either way. The footer rows sum over the
         snapshots, an upper bound on the distinct union."""
@@ -730,7 +729,7 @@ class TripleStore:
             for m in metas
             for i in range(m.num_row_groups)
         )
-        if not fits_driver(n, nbytes, canon.DRIVER_CANON_MAX_SURFACES):
+        if not fits_driver(n, nbytes):
             return None
         rows: dict[tuple[str, str], None] = {}
         for f in files:
@@ -748,7 +747,8 @@ class TripleStore:
           back as ``rows`` with a ``local_frame`` over them — no Spark job,
           and canonical_mapping reads the known pairs from the rows;
         - distributed: over the budget, a lazy parquet read of every
-          snapshot dir with a distinct, as before.
+          snapshot dir with a distinct, which canonical_mapping takes
+          straight to its distributed form.
 
         The union is not necessarily a function: a surface whose cluster a
         later mapping merged appears with its old and its new rep."""

@@ -285,8 +285,8 @@ def t07_minhash_clusters(spark: SparkSession, sf: str) -> DataFrame:
 
     Scope of the parity claim: LSH blocking is probabilistic, so exact oracle
     agreement is a per-corpus fact, not a theorem — at r=2/b=32 a borderline
-    J~0.4 pair misses blocking with ~0.4% probability (banding_recall(0.4, 32,
-    2) ~ 0.996), and the 512B sig gate adds a small deterministic tail. On a
+    J~0.4 pair misses blocking with ~0.4% probability (recall
+    1 - (1 - 0.4^2)^32 ~ 0.996), and the 512B sig gate adds a small deterministic tail. On a
     NEW corpus/sf, a legitimate blocking miss would surface as a hash
     mismatch here even though the operator is behaving exactly as designed;
     the claim is pinned to the sfs above, and cluster-recall-floor assertions
@@ -963,9 +963,13 @@ def t17_curated_corpus(spark: SparkSession, sf: str) -> DataFrame:
         .filter((F.col("keep") == 1) & (F.col("is_dup") == 0))
         .select("doc_id", "n_words", "nll")
     )
+    # cut points rounded to the NLL's stored 4 decimals, as T17_SQL rounds
+    # them: interpolation leaves float noise (DuckDB's p67 on one sf0.01
+    # corpus is 3.4029999999999996 where Spark's is 3.403), and an
+    # unrounded cut sends the docs AT it to different buckets per engine
     cuts = kept.agg(
-        F.expr(f"percentile(nll, {CCNET_P33})").alias("p33"),
-        F.expr(f"percentile(nll, {CCNET_P67})").alias("p67"),
+        F.round(F.expr(f"percentile(nll, {CCNET_P33})"), 4).alias("p33"),
+        F.round(F.expr(f"percentile(nll, {CCNET_P67})"), 4).alias("p67"),
     ).first()
     if cuts["p33"] is None:  # nothing survived the gates: percentile of ∅
         return kept.select(
@@ -988,8 +992,8 @@ WITH kept AS (
   WHERE g.keep = 1 AND d.is_dup = 0
 ),
 cuts AS (
-  SELECT quantile_cont(nll, {CCNET_P33}) AS p33,
-         quantile_cont(nll, {CCNET_P67}) AS p67
+  SELECT round(quantile_cont(nll, {CCNET_P33}), 4) AS p33,
+         round(quantile_cont(nll, {CCNET_P67}), 4) AS p67
   FROM kept
 )
 SELECT doc_id, n_words, nll,

@@ -163,7 +163,9 @@ class _EpochCaches:
     def set_entities(self, mapping: canon.CanonicalMapping) -> None:
         """The epoch's freshly-computed mapping supersedes the cache whole:
         canonical_mapping(known=...) carries every known surface AND rep into
-        its node set, so its output is a superset of the prior dictionary.
+        its node set and emits a row for every node in every regime (a
+        surface with an empty normalized form maps to itself), so its
+        output is a superset of the prior dictionary.
 
         A distributed mapping (the staged read-back) is persisted
         MEMORY_AND_DISK: the skip probe, broadcast build and

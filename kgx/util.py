@@ -12,12 +12,12 @@ from pyspark.sql import functions as F
 # fits_driver. g08's driver mapping measured against its distributed CC
 # (bench/driver_regime_bench.py g08, chains of 10, local[4]): 3.5 s vs 13.9 s
 # at 100k edges, 27 vs 58 at 1M, 28 vs 119 at 2M, the driver process peaking
-# near 1.2 GB at 2M. Four sites check a tighter cap measured for their own
+# near 1.2 GB at 2M. Three sites check a tighter cap measured for their own
 # driver form: graph.PR_DRIVER_MAX_ROWS and simsearch.IVF_DRIVER_MAX_VECTORS
-# (against the distributed form), canon.DRIVER_CANON_MAX_SURFACES (the
-# quadratic all-pairs mapping) and canon.DEDUP_DRIVER_MAX_BYTES (t07's
-# signatures on the driver, in bytes). Zeroing these two sends every driver
-# and broadcast regime to its distributed fallback at once.
+# (against the distributed form) and canon.DEDUP_DRIVER_MAX_BYTES (t07's
+# and the canonical mapping's signatures on the driver, in bytes). Zeroing
+# these two sends every driver and broadcast regime to its distributed
+# fallback at once.
 DRIVER_MAX_ROWS = 2_000_000
 DRIVER_MAX_BYTES = 256 * 1024 * 1024
 

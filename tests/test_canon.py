@@ -11,8 +11,14 @@ from kgx import canon, fixtures, kernel, util
 
 
 def test_normalize_and_shingles_jvm_parity(spark):
+    """normalize_col is the distributed mapping's rep-rule norm, so it must
+    equal kernel.normalize_surface on non-ASCII case mappings too: dotted
+    capital I, the Kelvin sign, full-width letters, sharp s, a titlecase
+    digraph and a final sigma."""
     surfaces = [v for o in fixtures.ORGS for v in o["variants"]] + [
-        "  Weird--Name!! (X) ", "ab", "", "A.B.C. Holdings, S.A."
+        "  Weird--Name!! (X) ", "ab", "", "A.B.C. Holdings, S.A.",
+        "\u0130stanbul Enerji", "\u212a Solar", "\uff21\uff23\uff2d\uff25 Corp",
+        "STRASSE Stra\u00dfe \u1e9e", "\u01c4ivo Hydro", "\u039f\u0394\u039f\u03a3 \u03a3",
     ]
     df = spark.createDataFrame([(s,) for s in surfaces], "surface string")
     got = {
@@ -33,7 +39,9 @@ def test_normalize_and_shingles_jvm_parity(spark):
 def test_lsh_blocking_finds_variant_pairs(spark):
     surfaces = [v for o in fixtures.ORGS for v in o["variants"]]
     mentions = spark.createDataFrame([(s,) for s in surfaces], "surface string")
-    surf = canon.surfaces_with_shingles(mentions)
+    surf = mentions.select("surface", F.col("surface").alias("_text")).mapInArrow(
+        canon._keyed_sig_gen("char", 3), schema=canon._KEYED_SCHEMA
+    )
     edges = canon.verified_edges(canon.candidate_pairs(surf)).collect()
     edge_set = {(e.a, e.b) for e in edges}
     # every intra-org pair with exact Jaccard >= threshold must be blocked+kept
@@ -65,8 +73,9 @@ def test_canonical_mapping_matches_golden(spark):
 
 
 def test_canonical_mapping_distributed_matches_golden(spark, monkeypatch):
-    """Force the distributed LSH path (driver short-circuit disabled)."""
-    monkeypatch.setattr(canon, "DRIVER_CANON_MAX_SURFACES", 0)
+    """Force the distributed LSH path (the driver budget zeroed)."""
+    monkeypatch.setattr(util, "DRIVER_MAX_ROWS", 0)
+    monkeypatch.setattr(util, "DRIVER_MAX_BYTES", 0)
     pages = fixtures.gen_pages(200)
     gold = {e["surface"]: e["canonical"] for e in fixtures.golden_entities(pages)}
     mentions = spark.createDataFrame([(s,) for s in gold], "surface string")
@@ -74,6 +83,73 @@ def test_canonical_mapping_distributed_matches_golden(spark, monkeypatch):
     assert m.rows is None
     got = {r.surface: r.rep for r in m.df.collect()}
     assert got == gold
+
+
+def _noisy_dictionary(seed):
+    """The fixture's 12 orgs, every variant with 0-3 random character edits
+    (substitute, insert or delete), next to surfaces whose normalized form
+    is empty and one known (surface, rep) pair: a near-variant dictionary
+    on which blocking is not trivially total."""
+    import random
+
+    rng = random.Random(seed)
+    alphabet = "abcdefghijklmnopqrstuvwxyz .-"
+    surfaces = set()
+    for o in fixtures.ORGS:
+        for v in o["variants"]:
+            for _ in range(rng.randint(0, 3)):
+                i = rng.randrange(len(v))
+                op = rng.choice("sid")
+                c = rng.choice(alphabet)
+                v = v[:i] + c + v[i + 1:] if op == "s" else (
+                    v[:i] + c + v[i:] if op == "i" else v[:i] + v[i + 1:])
+            surfaces.add(v)
+    empty_norm = ["", "---", "!!!", " . "]
+    names = sorted(surfaces)
+    known = [(names[0], names[1])]
+    return sorted(surfaces | set(empty_norm)), empty_norm, known
+
+
+def _mapping_rows(spark, monkeypatch, regime, surfaces, known):
+    mentions = spark.createDataFrame([(s,) for s in surfaces], "surface string")
+    known_map = canon.CanonicalMapping(
+        util.local_frame(spark, known, "surface string, rep string"), known)
+    names = {*surfaces, *(x for pair in known for x in pair)}
+    nbytes = sum(2 * len(s.encode()) + 8 for s in names)
+    with monkeypatch.context() as m:
+        # the driver regime at exactly its cap, and one byte over it
+        m.setattr(canon, "DEDUP_DRIVER_MAX_BYTES", nbytes - (regime == "over_cap"))
+        if regime == "over_pairs":
+            # the names fit the budget's rows, the bands' pairs do not
+            m.setattr(util, "DRIVER_MAX_ROWS", len(names))
+        elif regime == "distributed":
+            m.setattr(util, "DRIVER_MAX_ROWS", 0)
+            m.setattr(util, "DRIVER_MAX_BYTES", 0)
+            known_map = known_map.df  # a known held only as a frame
+        got = canon.canonical_mapping(mentions, known=known_map)
+        assert (got.rows is None) == (regime != "driver")
+        return sorted(tuple(r) for r in got.df.collect())
+
+
+@pytest.mark.parametrize("seed", [3, 11])
+def test_canonical_mapping_regimes_agree_on_noisy_variants(spark, monkeypatch, seed):
+    """The driver regime at its cap gives the same (surface, rep) rows as
+    the distributed form it falls back to: for a node set one byte over
+    canon.DEDUP_DRIVER_MAX_BYTES, for band pairs over the driver budget's
+    rows (the names within it), both with the known pairs on the driver,
+    and over the whole driver budget (known held as a frame). Every
+    surface maps, the empty-norm ones to themselves (the distributed form
+    once dropped them: they got no mapping row and no snapshot row), and
+    the known pair's rep stays the rep of its component."""
+    surfaces, empty_norm, known = _noisy_dictionary(seed)
+    regimes = ("driver", "over_cap", "over_pairs", "distributed")
+    rows = {r: _mapping_rows(spark, monkeypatch, r, surfaces, known) for r in regimes}
+    assert all(rows[r] == rows["driver"] for r in regimes)
+    got = dict(rows["driver"])
+    assert set(got) == set(surfaces) | {x for pair in known for x in pair}
+    assert all(got[s] == s for s in empty_norm)
+    (surface, rep), = known
+    assert got[surface] == got[rep] == rep
 
 
 @pytest.mark.parametrize("impl", [canon.connected_components, canon._distributed_cc])

@@ -134,6 +134,27 @@ def test_q07_revenue_matches_oracle_on_half_cent_sums(spark, tmp_path, seed):
     assert got == sorted(con.execute(R.Q07_SQL).fetchall())
 
 
+@pytest.mark.parametrize("seed", [106])
+def test_t17_buckets_match_oracle_on_interpolated_tie(spark, tmp_path, seed):
+    """perfbench/gen.write_tables sf0.01 seed 106 puts three kept docs' NLL
+    (3.403) exactly on the p67 cut, which DuckDB interpolates as
+    3.4029999999999996 and Spark as 3.403: unrounded, the docs came out
+    'middle' in Spark and 'tail' in the oracle. With both cut points
+    rounded to the NLL's 4 decimals the rows are equal."""
+    import duckdb
+
+    from kgx.ops import textops
+    from perfbench.gen import write_tables
+
+    write_tables(str(tmp_path), 0.01, seed)
+    got = sorted(tuple(r) for r in
+                 textops.t17_curated_corpus(spark, str(tmp_path)).collect())
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                f"read_parquet('{tmp_path}/documents.parquet')")
+    assert got == sorted(con.execute(textops.T17_SQL).fetchall())
+
+
 def test_ivf_training_assignment_plan_is_map_only(spark):
     """Round-3 rewrite: the Lloyd assignment must be ArrowEvalPython over the
     corpus with NO corpus x K join and NO per-candidate window — only the

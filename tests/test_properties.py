@@ -128,44 +128,6 @@ def test_crediting_period_uses_first_two_valid_dates(dates):
         }
 
 
-@given(
-    j=st.floats(min_value=0.3, max_value=0.98),
-    miss=st.floats(min_value=1e-6, max_value=0.1),
-    budget=st.sampled_from([64, 128, 256]),
-)
-@settings(max_examples=200, deadline=None)
-def test_banding_for_meets_closed_form_recall(j, miss, budget):
-    """banding_for must (a) respect the hash budget, (b) achieve the requested
-    miss rate under the closed-form recall, (c) return the maximal
-    rows-per-band that still fits — the precision-first choice."""
-    import math
-
-    from kgx.canon import banding_for, banding_recall
-
-    b, r = banding_for(j, miss, max_hashes=budget)
-    assert b >= 1 and r >= 1 and b * r <= budget
-    # (b) closed-form miss bound holds (tiny float slack)
-    assert (1.0 - j**r) ** b <= miss * (1 + 1e-9)
-    assert banding_recall(j, b, r) >= 1.0 - miss * (1 + 1e-9)
-    # (c) r is maximal: r+1 rows/band cannot meet the miss rate within budget
-    p = j ** (r + 1)
-    b_next = math.ceil(math.log(miss) / math.log1p(-p)) if p > 0 else budget + 1
-    assert b_next * (r + 1) > budget
-
-
-def test_banding_for_matches_measured_presets():
-    """The two operating points validated at 1M docs (BENCH/BASELINE.md) are
-    reproduced by the tuner's math."""
-    from kgx.canon import banding_for, banding_recall
-
-    # web preset: J>=0.8 with 64 hashes -> r=8, b=8 was the measured sweet
-    # spot; the tuner returns the max-precision feasible setting for ~1e-3
-    b, r = banding_for(0.8, 1.2e-3, max_hashes=64)
-    assert b * r <= 64 and banding_recall(0.8, b, r) >= 1 - 1.2e-3
-    # the injected-dup analysis: at J=0.932, r=8/b=8 -> miss ~1.2e-3
-    assert abs((1 - (1 - 0.932**8) ** 8) - 0.9988) < 1e-3
-
-
 def test_aho_corasick_self_overlapping_term_counts_like_regex():
     """Regression (round-3 ADVICE): 'a b a' occurs twice overlapping in
     'a b a b a'; re.finditer counts 1 — the automaton must agree."""

@@ -511,8 +511,8 @@ def test_empty_entity_snapshot_readable(spark, tmp_path):
 def test_shared_mapping_collected_once_across_units(
     spark, small_pages, tmp_path, monkeypatch
 ):
-    """An LSH-built mapping within the driver budget (the all-pairs driver
-    regime zeroed through DRIVER_CANON_MAX_SURFACES) is pinned, sized and
+    """An LSH-built mapping within the driver budget (the mapping's driver
+    regime zeroed through DEDUP_DRIVER_MAX_BYTES) is pinned, sized and
     collected ONCE, in phase B: every staged unit's phase-C rewrite then
     broadcasts its rows without a Spark job of its own, where each unit
     used to probe and collect it again. The store — triples and entity
@@ -543,7 +543,7 @@ def test_shared_mapping_collected_once_across_units(
         return _triple_set(store.read(spark)), entities
 
     with monkeypatch.context() as m:
-        m.setattr(canon, "DRIVER_CANON_MAX_SURFACES", 0)
+        m.setattr(canon, "DEDUP_DRIVER_MAX_BYTES", 0)
         m.setattr(pipeline, "canonicalize_proponents", counted_rewrite)
         m.setattr(pipeline, "_pinned", watched_pin)
         lsh = run("lsh")

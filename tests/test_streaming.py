@@ -863,13 +863,15 @@ def test_dedup_only_epochs_still_rebase(spark, tmp_path, monkeypatch):
 @pytest.fixture
 def distributed_dictionary(monkeypatch):
     """Force the entity dictionary's distributed regime (the fallback over
-    the driver budget): with the dictionary's driver cap zeroed the store
-    reads its snapshots with Spark, the mapping runs LSH+CC, and the epoch
-    stages, adopts and persists it. The batch's mention rows are still
-    collected, so a skip epoch runs the broadcast probe."""
-    from kgx import canon
+    the driver budget): with the driver budget zeroed the store reads its
+    snapshots with Spark, the mapping runs LSH+CC, and the epoch stages,
+    adopts and persists it. No mention rows are collected either, so every
+    epoch canonicalizes (test_forced_fallback_matches_driver_regime covers
+    the broadcast skip probe)."""
+    from kgx import util
 
-    monkeypatch.setattr(canon, "DRIVER_CANON_MAX_SURFACES", 0)
+    monkeypatch.setattr(util, "DRIVER_MAX_ROWS", 0)
+    monkeypatch.setattr(util, "DRIVER_MAX_BYTES", 0)
 
 
 def test_entity_snapshot_adopted_from_staged_mapping(
@@ -1158,26 +1160,29 @@ def _stream_files(pages_dir, pages):
 def test_forced_fallback_matches_driver_regime(spark, tmp_path, monkeypatch):
     """A multi-epoch stream commits the same store, entity dictionary and
     content index in the driver regime and in both forced fallbacks: the
-    dictionary's cap zeroed (distributed dictionary and LSH+CC mapping,
+    mapping's driver cap zeroed (LSH+CC mapping, staged dictionary,
     broadcast skip probe) and the whole driver budget zeroed (no mention
-    collect either, so every epoch canonicalizes; Spark-written sidecars)."""
+    collect either, so every epoch canonicalizes; Spark-written
+    sidecars)."""
     from kgx import canon, util
 
     pages_dir = str(tmp_path / "inbox_fb")
     _stream_files(pages_dir, fixtures.gen_pages(8))
 
     def run(name):
-        calls = {"n": 0}
+        calls = {"n": 0, "driver_rows": []}
         orig = canon.canonical_mapping
 
         def spy(*a, **k):
             calls["n"] += 1
-            return orig(*a, **k)
+            out = orig(*a, **k)
+            calls["driver_rows"].append(out.rows is not None)
+            return out
 
         with monkeypatch.context() as m:
             m.setattr(streaming.canon, "canonical_mapping", spy)
-            if name == "dictionary_cap":
-                m.setattr(canon, "DRIVER_CANON_MAX_SURFACES", 0)
+            if name == "mapping_cap":
+                m.setattr(canon, "DEDUP_DRIVER_MAX_BYTES", 0)
             elif name == "driver_budget":
                 m.setattr(util, "DRIVER_MAX_ROWS", 0)
                 m.setattr(util, "DRIVER_MAX_BYTES", 0)
@@ -1190,11 +1195,12 @@ def test_forced_fallback_matches_driver_regime(spark, tmp_path, monkeypatch):
                    .select("subj", "pred", "obj", "src_url", "content_sha").collect()}
         entities = {tuple(r) for r in store.known_entities(spark).df.collect()}
         content = {r.content_sha for r in store.known_content(spark).collect()}
+        assert calls["driver_rows"] == [name == "driver"] * calls["n"]
         return (triples, entities, content), calls["n"]
 
     driver, n_driver = run("driver")
     assert n_driver == 2, "the recrawl epoch did not skip canonicalization"
-    cap, n_cap = run("dictionary_cap")
+    cap, n_cap = run("mapping_cap")
     assert n_cap == 2, "the broadcast skip probe did not skip the recrawl"
     budget, n_budget = run("driver_budget")
     assert n_budget == 3
@@ -1204,17 +1210,17 @@ def test_forced_fallback_matches_driver_regime(spark, tmp_path, monkeypatch):
 
 @pytest.mark.parametrize("cap", ["rows", "bytes"])
 def test_over_budget_dictionary_is_never_collected(spark, tmp_path, monkeypatch, cap):
-    """A store whose snapshot footers exceed the dictionary's driver cap
-    (rows) or the driver byte budget comes back as a lazy Spark read: no
-    snapshot row is read on the driver, and the mapping over it runs
-    distributed without collecting the known pairs."""
+    """A store whose snapshot footers exceed the driver row or byte budget
+    comes back as a lazy Spark read: no snapshot row is read on the
+    driver, and the mapping over it runs distributed without collecting
+    the known pairs."""
     from kgx import canon, util
 
     store = TripleStore(str(tmp_path / "store_big"), n_buckets=2)
     entries = [(f"Org {i}", "Org 0") for i in range(5)]
     store.save_entities(spark.createDataFrame(entries, "surface string, rep string"))
     if cap == "rows":
-        monkeypatch.setattr(canon, "DRIVER_CANON_MAX_SURFACES", 4)
+        monkeypatch.setattr(util, "DRIVER_MAX_ROWS", 4)
     else:
         monkeypatch.setattr(util, "DRIVER_MAX_BYTES", 8)
 
